@@ -118,6 +118,28 @@ object Sources {
     StructField("dir", DoubleType),
     StructField("event", StringType)))
 
+  /** The setting that locates the reference's committed metric outputs. */
+  val ReferenceDirSetting = "SPARK_GRAFT_REFERENCE_DIR"
+
+  /** Directory of the reference's committed metric outputs
+    * (`tackler_*_FINAL.csv`, the full BDB-2024 season) read by the EP3
+    * reports, their DuckDB twins, ReportGoldenSpec and `tools.GoldenDiff`:
+    * the [[ReferenceDirSetting]] environment variable, by default
+    * `reference/Data` under the user's home directory. */
+  val referenceDir: String =
+    sys.env.getOrElse(ReferenceDirSetting, s"${sys.props("user.home")}/reference/Data")
+
+  /** Path of one file in [[referenceDir]]. A missing directory fails
+    * here with one message naming the setting, not later with a bare
+    * PATH_NOT_FOUND from the reader. */
+  def referenceFile(name: String): String = {
+    if (!new java.io.File(referenceDir).isDirectory)
+      throw new java.io.FileNotFoundException(
+        s"reference data directory '$referenceDir' does not exist: set $ReferenceDirSetting " +
+          "to the directory holding the reference's tackler_*_FINAL.csv files")
+    s"$referenceDir/$name"
+  }
+
   /** Schemas of the reference's metric output tables
     * (Data/tackler_YAP_FINAL.csv etc.) — EP3's inputs. */
   val yapMetricSchema: StructType = StructType(Seq(

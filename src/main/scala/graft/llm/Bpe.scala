@@ -114,13 +114,11 @@ object Bpe {
     // per-round wall-clock ledger (VERDICT r13 next §3): each round ends
     // in eager localCheckpoints, so the loop body's time IS the round's
     for (i <- 1 to rounds) graft.RoundClock.time(label, i) {
-      // Adjacent pairs derived ARRAY-LOCALLY (r19; guide §2.4): the r18
-      // shape posexploded every symbol and ran a lead() window — a
-      // word-keyed exchange + sort per round just to pair neighbors
-      // that already sit adjacent in the word's own array. zip_with
-      // over the split array pairs them inside the scan; the ONLY
-      // exchange left in pair counting is the (lsym, rsym) aggregation
-      // itself (map-side combined).
+      // Adjacent pairs: posexplode every symbol of the word's sequence
+      // and pair it with the next one by a lead() window over the word,
+      // which costs a word-keyed exchange + sort per round on top of the
+      // (lsym, rsym) aggregation (map-side combined). An array-local
+      // zip_with pairing was tried in r19 and reverted.
       val withPairs = seqs.select(col("word"), col("n"),
         posexplode(split(trim(col("seq")), " ")).as(Seq("pos", "sym")))
         .withColumn("nxt", lead(col("sym"), 1).over(

@@ -195,12 +195,17 @@ object Dedup {
     * the emitted set coincides exactly with the prefix theorem's ≥ τ
     * truth set; rounding touches only the displayed column.
     *
-    * Shuffle discipline: the match stream is verified BEFORE it is
+    * Shuffle discipline: the candidate self-join reads the
+    * tok-partitioned checkpoint with no exchange (a sort-merge join over
+    * the declared layout), and the match stream crosses exactly ONE
+    * shuffle before the threshold: the REPARTITION_BY_NUM rebalance of
+    * its 16-byte id pairs (below). It is verified BEFORE it is
     * deduplicated — t is table-size (broadcast side of both verify
-    * joins), so matches flow map-side through intersect + threshold,
-    * and the only wide shuffle left is the dedup of the 1.27×-duplicated
-    * SURVIVORS (≈1.2M rows at sf0.1) instead of the full 4.2M-row
-    * candidate stream. Verifying a duplicate costs one array walk;
+    * joins), so the rebalanced matches flow through intersect +
+    * threshold with no further exchange, and the dedup shuffles only the
+    * 1.27×-duplicated SURVIVORS (≈1.2M rows at sf0.1) instead of the full
+    * 4.2M-row candidate stream. PpjoinSpec pins this plan shape.
+    * Verifying a duplicate costs one array walk;
     * shuffling it costs serialization both ways — the walk is cheaper
     * (measured warm-cache pipeline: 3.1 s with the early dedup → 0.8 s
     * deferred; bench min-of-passes steady state 1.6–2.7 s at sf0.1). */

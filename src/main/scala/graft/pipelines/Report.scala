@@ -226,16 +226,16 @@ object Report {
     * read_csv (plus the independently-computed goldens in
     * ReportGoldenSpec). */
   private val ep3PlayerReport: Q = (s, _) => {
-    val data = "/root/reference/Data"
+    import graft.io.Sources.{csv, maxParamsMetricSchema, referenceFile, yapMetricSchema}
     playerReport(
-      graft.io.Sources.csv(s, s"$data/tackler_YAP_FINAL.csv", graft.io.Sources.yapMetricSchema),
-      graft.io.Sources.csv(s, s"$data/tackler_max_params_FINAL.csv", graft.io.Sources.maxParamsMetricSchema),
-      graft.io.Sources.csv(s, s"$data/tackler_max_params_opt_FINAL.csv", graft.io.Sources.maxParamsMetricSchema))
+      csv(s, referenceFile("tackler_YAP_FINAL.csv"), yapMetricSchema),
+      csv(s, referenceFile("tackler_max_params_FINAL.csv"), maxParamsMetricSchema),
+      csv(s, referenceFile("tackler_max_params_opt_FINAL.csv"), maxParamsMetricSchema))
   }
 
   private val ep3MaxParamsReport: Q = (s, _) =>
     maxParamsReport(graft.io.Sources.csv(s,
-      "/root/reference/Data/tackler_max_params_FINAL.csv",
+      graft.io.Sources.referenceFile("tackler_max_params_FINAL.csv"),
       graft.io.Sources.maxParamsMetricSchema))
 
   /** A13 pivot — per-user mean value spread across event types as
@@ -496,20 +496,20 @@ object Report {
         |FROM lineitem GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus))
         |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin,
     "ep3_player_report" ->
-      """WITH yap AS (
+      s"""WITH yap AS (
         |  SELECT game_ID, play_ID, NFL_ID, name, position,
         |   CASE WHEN isnan(YAP) THEN NULL ELSE YAP END AS YAP
-        |  FROM read_csv('/root/reference/Data/tackler_YAP_FINAL.csv', header=true)),
+        |  FROM read_csv('${graft.io.Sources.referenceDir}/tackler_YAP_FINAL.csv', header=true)),
         | mp AS (
         |  SELECT game_ID, play_ID, NFL_ID, name, position,
         |   CASE WHEN isnan(max_vel) THEN NULL ELSE max_vel END AS max_vel,
         |   CASE WHEN isnan(max_accel) THEN NULL ELSE max_accel END AS max_accel
-        |  FROM read_csv('/root/reference/Data/tackler_max_params_FINAL.csv', header=true)),
+        |  FROM read_csv('${graft.io.Sources.referenceDir}/tackler_max_params_FINAL.csv', header=true)),
         | mpo AS (
         |  SELECT game_ID, play_ID, NFL_ID, name, position,
         |   CASE WHEN isnan(max_vel) THEN NULL ELSE max_vel END AS max_vel_opt,
         |   CASE WHEN isnan(max_accel) THEN NULL ELSE max_accel END AS max_accel_opt
-        |  FROM read_csv('/root/reference/Data/tackler_max_params_opt_FINAL.csv', header=true)),
+        |  FROM read_csv('${graft.io.Sources.referenceDir}/tackler_max_params_opt_FINAL.csv', header=true)),
         | params AS (
         |  SELECT DISTINCT mp.game_ID, mp.play_ID, mp.NFL_ID, mp.name, mp.position,
         |   mp.max_vel, mp.max_accel, mpo.max_vel_opt, mpo.max_accel_opt
@@ -534,9 +534,9 @@ object Report {
         |FROM recoded GROUP BY NFL_ID HAVING count(YAP) >= 50
         |ORDER BY mean_yap DESC, NFL_ID ASC""".stripMargin,
     "ep3_max_params_report" ->
-      """WITH mp AS (
+      s"""WITH mp AS (
         |  SELECT position, max_vel, max_accel
-        |  FROM read_csv('/root/reference/Data/tackler_max_params_FINAL.csv', header=true)
+        |  FROM read_csv('${graft.io.Sources.referenceDir}/tackler_max_params_FINAL.csv', header=true)
         |  WHERE max_vel IS NOT NULL AND NOT isnan(max_vel)
         |   AND max_accel IS NOT NULL AND NOT isnan(max_accel)),
         | recoded AS (

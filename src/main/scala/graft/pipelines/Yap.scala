@@ -1,6 +1,6 @@
 package graft.pipelines
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.kernel.OptimalPursuit
 
@@ -12,12 +12,14 @@ import graft.kernel.OptimalPursuit
   *
   * Spark shape (SURVEY §3): the reference's per-play loop — which
   * re-reads all five CSVs per play — inverts into set-at-a-time
-  * dataflow: dims broadcast-joined once, then ONE shuffle keyed on
-  * (gameId, playId) brings each play's carrier + tackler frames to a
-  * single `flatMapGroups` call. Groups are tiny (≤ ~20 rows/frame ×
-  * ~100 frames), so the growing-horizon LQR search (W5) runs as a local
-  * Scala loop inside the group — the only non-relational operator in
-  * the engine.
+  * dataflow: ONE scan of tracking joined to a small role table
+  * ([[roleFrames]]), the players dim broadcast-joined after it, then ONE
+  * shuffle keyed on (gameId, playId) and a partition-local sort bring
+  * each play's carrier + tackler frames together as one run of rows,
+  * which a streaming `mapPartitions` hands to the kernel ([[perPlay]]).
+  * Plays are tiny (≤ ~20 rows/frame × ~100 frames), so the
+  * growing-horizon LQR search (W5) runs as a local Scala loop per play —
+  * the only non-relational operator in the engine.
   *
   * Emissions are a tagged union (`kind`): one `yap` summary row and one
   * `max_params_opt` row per tackler, `path` rows for the spliced
@@ -71,46 +73,79 @@ object Yap {
     "ILB" -> (5.0, 10.7, 3.9, 9.4),
     "DT" -> (3.2, 8.8, 2.4, 7.1), "NT" -> (3.2, 8.8, 2.4, 7.1))
 
-  /** Assemble the per-play frame relation: carrier rows from
-    * plays.ballCarrierId, tackler rows from the tackles fact, both
-    * enriched from the (broadcast) players dim. One shuffle downstream. */
+  /** Every tracking row of each play's carrier and tacklers, tagged
+    * `isCarrier`, from ONE scan of `tracking`: a small role table
+    * (plays.ballCarrierId as carrier, the tackles fact as tackler) joined
+    * to tracking once. A player who is both carrier and tackler gets one
+    * row per role. Duplicate tackles rows are not dropped (that would be
+    * one more shuffle and job per query): each duplicates the tackler's
+    * frames, which both consumers ignore — the kernel keys a tackler's
+    * frames by frameId, and MaxParams takes only min/max over them.
+    *
+    * The role table grows with the input (one row per play and tackle),
+    * so it carries no broadcast hint: AQE decides from measured size
+    * (VERDICT r2 §wrong 5). The join is keyed on the play alone, with
+    * nflId checked as a residual condition (written as a difference so
+    * Catalyst does not lift it into a third key): if it is ever planned
+    * as a shuffle join, its exchange is the (gameId, playId) one every
+    * per-play step needs. */
+  private[pipelines] def roleFrames(tracking: DataFrame, plays: DataFrame,
+      tackles: DataFrame): DataFrame = {
+    def tagged(df: DataFrame, id: String, carrier: Boolean) = df.select(
+      col("gameId").as("rGame"), col("playId").as("rPlay"), col(id).as("roleId"),
+      lit(carrier).as("isCarrier"))
+    val roles = tagged(plays, "ballCarrierId", carrier = true)
+      .unionByName(tagged(tackles, "nflId", carrier = false))
+    tracking.join(roles, col("gameId") === col("rGame") && col("playId") === col("rPlay") &&
+        (col("nflId") - col("roleId")) === 0)
+      .drop("rGame", "rPlay", "roleId")
+  }
+
+  /** Assemble the per-play frame relation from [[roleFrames]], enriched
+    * from the fixed-size (broadcast) players dim after the role join;
+    * carrier rows carry no name or position. */
   def playFrames(spark: SparkSession, tracking: DataFrame, plays: DataFrame,
       players: DataFrame, tackles: DataFrame): Dataset[PlayFrame] = {
     import spark.implicits._
-    val t = tracking.select(
-      col("gameId"), col("playId"), col("nflId"), col("frameId"),
-      col("time").cast("double").as("timeSec"),
-      col("x"), col("y"), col("s"), col("a"), col("dir"),
-      col("event"), col("playDirection"))
-    // `plays` grows with the input (one row per play): no broadcast
-    // hint — AQE decides from measured size (VERDICT r2 §wrong 5). The
-    // fixed-size `players` dim below keeps its hint.
-    val carrier = t
-      .join(plays.select(col("gameId"), col("playId"), col("ballCarrierId")),
-        Seq("gameId", "playId"))
-      .filter(col("nflId") === col("ballCarrierId"))
-      .withColumn("role", lit("carrier"))
-      .withColumn("displayName", lit(null).cast("string"))
-      .withColumn("position", lit(null).cast("string"))
-    val tackler = t
-      .join(tackles.select("gameId", "playId", "nflId").dropDuplicates(),
-        Seq("gameId", "playId", "nflId"))
+    def tacklerOnly(c: String) = when(!col("isCarrier"), col(c)).as(c)
+    roleFrames(tracking, plays, tackles)
       .join(broadcast(players.select("nflId", "displayName", "position")), Seq("nflId"), "left")
-      .withColumn("role", lit("tackler"))
-    carrier.select(tackler.columns.filter(_ != "ballCarrierId").map(c => col(c)): _*)
-      .unionByName(tackler)
+      .select(col("gameId"), col("playId"), col("nflId"), col("frameId"),
+        when(col("isCarrier"), "carrier").otherwise("tackler").as("role"),
+        col("time").cast("double").as("timeSec"),
+        col("x"), col("y"), col("s"), col("a"), col("dir"),
+        col("event"), col("playDirection"), tacklerOnly("displayName"), tacklerOnly("position"))
       .as[PlayFrame]
   }
 
-  /** The full pipeline: frames → groupByKey(play) → per-group kernel. */
+  /** The full pipeline: frames → one exchange on the play key → a
+    * partition-local sort → the per-play kernel ([[perPlay]]). */
   def run(spark: SparkSession, tracking: DataFrame, plays: DataFrame,
-      players: DataFrame, tackles: DataFrame, rT: Double = 1.0): Dataset[Emit] = {
-    import spark.implicits._
-    playFrames(spark, tracking, plays, players, tackles)
-      .groupByKey(f => (f.gameId, f.playId))
-      .flatMapGroups((key: (Long, Long), it: Iterator[PlayFrame]) =>
-        processPlay(key._1, key._2, it.toSeq, rT))
-  }
+      players: DataFrame, tackles: DataFrame, rT: Double = 1.0): Dataset[Emit] =
+    perPlay(playFrames(spark, tracking, plays, players, tackles)
+      .repartition(col("gameId"), col("playId")), rT)
+
+  /** Runs the kernel over frames whose plays are each already within one
+    * partition: a partition-local sort clusters each play's rows into a
+    * run, and a streaming run-grouping `mapPartitions` feeds the kernel
+    * one play at a time (memory = one play's frames, never a whole
+    * partition). Keying on the frames' own columns, not on a lambda as
+    * `groupByKey` does, lets Catalyst see the play layout, so no row is
+    * deserialized before the exchange. */
+  private def perPlay(frames: Dataset[PlayFrame], rT: Double): Dataset[Emit] =
+    frames.sortWithinPartitions("gameId", "playId").mapPartitions { it =>
+      val b = it.buffered
+      new Iterator[Iterator[Emit]] {
+        def hasNext: Boolean = b.hasNext
+        def next(): Iterator[Emit] = {
+          val g = b.head.gameId
+          val p = b.head.playId
+          val rows = scala.collection.mutable.ArrayBuffer.empty[PlayFrame]
+          while (b.hasNext && b.head.gameId == g && b.head.playId == p) rows += b.next()
+          processPlay(g, p, rows.toSeq, rT)
+        }
+      }.flatten
+    }(Encoders.product[Emit])
 
   /** Materialize the assembled per-play frame relation as a managed
     * table bucketed AND sorted by the play key — the pay-once layout for
@@ -125,17 +160,9 @@ object Yap {
 
   /** Exchange-free kernel over a [[materializeBucketed]] table: the
     * bucketed scan reassembles each bucket into one partition, so every
-    * play's frames are already co-located — a partition-local sort (no
-    * exchange) clusters each play's rows into a run, and a streaming
-    * run-grouping `mapPartitions` feeds the kernel one play at a time
-    * (memory = one play's frames, never a whole partition).
-    *
-    * `mapPartitions` here is the deliberate (d)-tier choice from the
-    * brief: `groupByKey.flatMapGroups` keys on lambda-generated columns
-    * Catalyst cannot match to the storage partitioning, so it would
-    * re-Exchange data the bucket layout already placed. YapBucketedSpec
-    * pins both properties: result identity with [[run]], and a physical
-    * plan with no Exchange node. */
+    * play's frames are already co-located and [[perPlay]] runs with no
+    * exchange at all. YapBucketedSpec pins both properties: result
+    * identity with [[run]], and a physical plan with no Exchange node. */
   def runBucketed(spark: SparkSession, table: String, rT: Double = 1.0): Dataset[Emit] = {
     // autoBucketedScan would silently DROP the bucketed layout (and
     // split buckets by size) when no downstream operator declares a
@@ -152,21 +179,7 @@ object Yap {
     val scoped = spark.newSession()
     scoped.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
     import scoped.implicits._
-    scoped.table(table).as[PlayFrame]
-      .sortWithinPartitions("gameId", "playId")
-      .mapPartitions { it =>
-        val b = it.buffered
-        new Iterator[Iterator[Emit]] {
-          def hasNext: Boolean = b.hasNext
-          def next(): Iterator[Emit] = {
-            val g = b.head.gameId
-            val p = b.head.playId
-            val rows = scala.collection.mutable.ArrayBuffer.empty[PlayFrame]
-            while (b.hasNext && b.head.gameId == g && b.head.playId == p) rows += b.next()
-            processPlay(g, p, rows.toSeq, rT)
-          }
-        }.flatten
-      }
+    perPlay(scoped.table(table).as[PlayFrame], rT)
   }
 
   /** Split `run` output into the three sinks of the reference: results

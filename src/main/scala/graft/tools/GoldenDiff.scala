@@ -13,7 +13,10 @@ import org.apache.spark.sql.functions._
   *
   *   runMain graft.tools.RunSeason  <kaggleDir> <outDir>
   *   runMain graft.tools.GoldenDiff <outDir>/tackler_YAP \
-  *     /root/reference/Data/tackler_YAP_FINAL.csv [tolerance]
+  *     $SPARK_GRAFT_REFERENCE_DIR/tackler_YAP_FINAL.csv [tolerance]
+  *
+  * (`graft.io.Sources.referenceDir` resolves that setting and its
+  * default.)
   *
   * Tolerance bands: the reference rounds YAP to 2 decimals
   * (optimal_pursuit.py:560), so ±0.011 is the rounding-exact band;

@@ -10,7 +10,7 @@ import graft.pipelines.Yap
   * 10 Hz, a ball carrier random-walking downfield and two tacklers
   * converging, positions drawn across the bounds ladder. Writes it as
   * parquet (so the pipelines pay real scan cost), then times
-  * `Yap.run` (LQR kernel, groupByKey) and `MaxParams.run` (relational).
+  * `Yap.run` (LQR kernel, per-play `mapPartitions`) and `MaxParams.run` (relational).
   *
   * The reference processes the same workload one play at a time,
   * re-reading all five CSVs per play (optimal_pursuit.py:132-149 inside

@@ -47,18 +47,26 @@ object PlanBridge {
       df: org.apache.spark.sql.DataFrame, key: String,
       numParts: Int): org.apache.spark.sql.DataFrame = {
     val cls = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val rep = df.repartition(numParts, df(key))
+    // The declared layout must name the very attribute the rows were
+    // hashed by: with two output columns matching `key`, a by-name pick
+    // could declare the other one, and a consumer would skip an exchange
+    // it needs — a wrong answer with no error.
+    val resolver = cls.sessionState.conf.resolver
+    val matches = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+      .queryExecution.analyzed.output.filter(a => resolver(a.name, key))
+    if (matches.size != 1) throw new IllegalArgumentException(
+      s"partitionedCheckpoint: key column '$key' matches ${matches.size} output " +
+        "attributes; it must match exactly one")
+    val keyAttr = matches.head
+    val rep = df.repartition(numParts, ColumnBridge.column(keyAttr))
     val qe = rep.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].queryExecution
     val rdd = qe.toRdd.map(_.copy())
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     rdd.count() // eager materialization; also truncates lineage reuse
-    val attrs = qe.analyzed.output
-    val keyAttr = attrs.find(_.name == key).getOrElse(
-      throw new IllegalArgumentException(s"partitionedCheckpoint: no column $key"))
     val part = org.apache.spark.sql.catalyst.plans.physical.HashPartitioning(
       Seq(keyAttr), numParts)
     org.apache.spark.sql.classic.Dataset.ofRows(cls,
       org.apache.spark.sql.execution.LogicalRDD(
-        attrs, rdd, part, Nil, false, None)(cls, None, None))
+        qe.analyzed.output, rdd, part, Nil, false, None)(cls, None, None))
   }
 }

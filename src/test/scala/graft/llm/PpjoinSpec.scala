@@ -1,7 +1,13 @@
 package graft.llm
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.expressions.{Attribute, GreaterThanOrEqual, Literal}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.exchange.{Exchange, REPARTITION_BY_NUM,
+  ShuffleExchangeLike}
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
 import org.scalatest.funsuite.AnyFunSuite
+import graft.PlanNodes.nodes
 import graft.TestSpark
 
 /** dd_ppjoin (prefix-filtered exact set-similarity join): the prefix +
@@ -50,26 +56,53 @@ class PpjoinSpec extends AnyFunSuite {
       s"candidate set smaller than the emitted set: $cands < $emitted")
   }
 
-  test("plan shape: no cartesian; verify joins broadcast the table side; " +
-    "no wide dedup before the threshold") {
+  test("plan shape: no cartesian; exchange-free candidate self-join; only the " +
+    "pair-id rebalance before the threshold") {
     // the scale claims the operator doc makes, pinned against the real
     // plan (the SubstrPlanSpec discipline). On a match-SATURATED corpus
     // the OUTPUT is Ω(n²) — a runnable 100× replication probe would
     // measure the output, not the operator — so the probe duty falls on
     // the plan shape: candidates only ever meet through the prefix-token
-    // join, and the match stream is never exchanged before the exact
-    // threshold cuts it.
+    // join, that join reads the tok-partitioned checkpoint without
+    // re-exchanging it, and the match stream crosses exactly one shuffle
+    // (the REPARTITION_BY_NUM rebalance of 16-byte id pairs) before the
+    // exact threshold cuts it.
     val df = Dedup.queries("dd_ppjoin")(spark, sf)
     df.collect()
     val p = df.queryExecution.executedPlan.toString
+    val all = nodes(df.queryExecution.executedPlan)
     assert(!p.contains("CartesianProduct"), s"dd_ppjoin plans a cartesian:\n$p")
     assert(!p.contains("BroadcastNestedLoopJoin"),
       s"dd_ppjoin plans a nested-loop join:\n$p")
-    // both verify joins and the candidate self-join build broadcast maps
-    // (prefix relation and token-set table are the small sides); the
-    // match stream itself must reach the intersect map-side
-    assert(p.contains("BroadcastHashJoin"), s"expected broadcast joins:\n$p")
-    assert(!p.contains("SortMergeJoin"),
-      s"match stream exchanged before the threshold:\n$p")
+    // both verify joins build broadcast maps of the table side; the match
+    // stream itself reaches the intersect map-side
+    assert(all.count(_.isInstanceOf[BroadcastHashJoinExec]) == 2,
+      s"expected the two verify joins to broadcast the table side:\n$p")
+    // the candidate self-join: the one sort-merge join, keyed on tok,
+    // with no Exchange of any kind under either side
+    val smjs = all.collect { case j: SortMergeJoinExec => j }
+    assert(smjs.size == 1, s"expected exactly one sort-merge join (the self-join):\n$p")
+    val self = smjs.head
+    assert(self.leftKeys.collect { case a: Attribute => a.name } == Seq("tok") &&
+      self.rightKeys.collect { case a: Attribute => a.name } == Seq("tok"),
+      s"the sort-merge join is not the tok self-join:\n$p")
+    Seq(self.left, self.right).foreach { side =>
+      assert(!nodes(side).exists(_.isInstanceOf[Exchange]),
+        s"the self-join re-exchanges its tok-partitioned input:\n$p")
+    }
+    // the threshold (jac >= 0.9, pushed into whichever operator applies
+    // it) and every shuffle between it and the self-join
+    def isThreshold(n: SparkPlan) = n.expressions.exists(_.find {
+      case GreaterThanOrEqual(_, Literal(v: Double, _)) => v == 0.9
+      case _ => false
+    }.isDefined)
+    val thresholds = all.filter(n => isThreshold(n) && nodes(n).contains(self))
+    assert(thresholds.nonEmpty, s"no threshold operator above the self-join:\n$p")
+    val before = thresholds.flatMap(t => nodes(t).collect {
+      case e: ShuffleExchangeLike if nodes(e).contains(self) => e
+    }).distinctBy(_.id)
+    assert(before.size == 1 && before.head.shuffleOrigin == REPARTITION_BY_NUM,
+      s"the only exchange before the threshold must be the pair-id " +
+        s"REPARTITION_BY_NUM, got ${before.map(_.shuffleOrigin)}:\n$p")
   }
 }

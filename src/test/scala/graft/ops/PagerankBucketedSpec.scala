@@ -2,10 +2,9 @@ package graft.ops
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.execution.FileSourceScanExec
+import graft.PlanNodes.nodes
 import graft.TestSpark
 
 /** pr_pagerank_bucketed plan gate (VERDICT r10 next §3): the rank⋈edges
@@ -17,22 +16,6 @@ import graft.TestSpark
 class PagerankBucketedSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val sf = "/root/testdata/sf0.001"
-
-  /** All nodes of the final adaptive plan — AQE wraps materialized
-    * subtrees in leaf QueryStageExec nodes and reuses exchanges, so a
-    * plain children-walk stops at stage boundaries; descend through
-    * all of them. */
-  private def nodes(p: SparkPlan): Seq[SparkPlan] = {
-    import org.apache.spark.sql.execution.adaptive.QueryStageExec
-    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
-    val deeper = p match {
-      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
-      case q: QueryStageExec => nodes(q.plan)
-      case r: ReusedExchangeExec => nodes(r.child)
-      case _ => p.children.flatMap(nodes)
-    }
-    p +: deeper
-  }
 
   test("bucketed edge scans plan with no Exchange above them; results bit-match the plain variant") {
     Graph.ensurePrEdgesBucketed(spark, sf)

@@ -56,6 +56,15 @@ class PipelinesSpec extends AnyFunSuite {
     assert(!emits.exists(e => e.kind == "yap" && e.NFL_ID == 203L))
   }
 
+  test("EP1 YAP: a duplicated tackles row changes no emit") {
+    // the role table keeps duplicate tackles rows (dropping them costs a
+    // shuffle); the kernel keys a tackler's frames by frameId
+    val (tr, pl, py, tk) = fixtureDfs
+    val once = Yap.run(spark, tr, pl, py, tk).collect().toSeq.sortBy(_.toString)
+    val twice = Yap.run(spark, tr, pl, py, tk.unionByName(tk)).collect().toSeq.sortBy(_.toString)
+    assert(once.nonEmpty && twice == once)
+  }
+
   test("sinks split the tagged union into four relations") {
     val (tr, pl, py, tk) = fixtureDfs
     val (yap, mpOpt, path, errs) = Yap.sinks(Yap.run(spark, tr, pl, py, tk))

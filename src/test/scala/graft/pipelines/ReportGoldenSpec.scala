@@ -12,16 +12,18 @@ import graft.io.Sources
   * recode, support filter ≥ 50). */
 class ReportGoldenSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-  private val data = "/root/reference/Data"
+  // the reference directory is one setting (Sources.ReferenceDirSetting);
+  // when it is missing every test fails with the message naming it
+  private def data(file: String) = Sources.referenceFile(file)
 
   private lazy val report = Report.playerReport(
-    Sources.csv(spark, s"$data/tackler_YAP_FINAL.csv", Sources.yapMetricSchema),
-    Sources.csv(spark, s"$data/tackler_max_params_FINAL.csv", Sources.maxParamsMetricSchema),
-    Sources.csv(spark, s"$data/tackler_max_params_opt_FINAL.csv", Sources.maxParamsMetricSchema))
+    Sources.csv(spark, data("tackler_YAP_FINAL.csv"), Sources.yapMetricSchema),
+    Sources.csv(spark, data("tackler_max_params_FINAL.csv"), Sources.maxParamsMetricSchema),
+    Sources.csv(spark, data("tackler_max_params_opt_FINAL.csv"), Sources.maxParamsMetricSchema))
     .collect()
 
   test("golden ingestion: 17,420 metric rows, 16,246 with a YAP value") {
-    val yap = Sources.csv(spark, s"$data/tackler_YAP_FINAL.csv", Sources.yapMetricSchema)
+    val yap = Sources.csv(spark, data("tackler_YAP_FINAL.csv"), Sources.yapMetricSchema)
     assert(yap.count() == 17420)
     // pandas writes NaN as an empty field; the reader lands it as null
     // (the engine's missing-value convention, SURVEY §7.4-2) — count of
@@ -46,7 +48,7 @@ class ReportGoldenSpec extends AnyFunSuite {
 
   test("per-position max-params describe + correlation match golden values") {
     val rows = Report.maxParamsReport(
-      Sources.csv(spark, s"$data/tackler_max_params_FINAL.csv", Sources.maxParamsMetricSchema))
+      Sources.csv(spark, data("tackler_max_params_FINAL.csv"), Sources.maxParamsMetricSchema))
       .collect().map(r => r.getString(0) ->
         (r.getLong(1), r.getDouble(2), r.getDouble(3), r.getDouble(4), r.getDouble(5), r.getDouble(6)))
       .toMap

@@ -1,0 +1,76 @@
+package graft.pipelines
+
+import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.{AppendColumnsExec, FileSourceScanExec, MapGroupsExec, SparkPlan}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import graft.PlanNodes.nodes
+import graft.TestSpark
+
+/** The season ops read tracking ONCE: carrier and tackler frames come
+  * from one role-tagged join, not from one tracking subtree per role or
+  * per self-join. `Yap.run` then exchanges those frames once, on the
+  * play key, with no lambda-keyed grouping; `MaxParams.run` runs its
+  * windows and range max behind that same single exchange. Asserted on
+  * the executed (AQE-final) plan over parquet inputs, so every read of
+  * tracking is a file scan that can be counted. */
+class SeasonPlanSpec extends AnyFunSuite {
+  private lazy val spark = TestSpark.spark
+  private val n = 30
+
+  private lazy val dir = {
+    val d = java.nio.file.Files.createTempDirectory("season_plan").toString
+    SyntheticSeason.tracking(spark, n).write.parquet(s"$d/tracking")
+    SyntheticSeason.plays(spark, n).write.parquet(s"$d/plays")
+    SyntheticSeason.players(spark).write.parquet(s"$d/players")
+    SyntheticSeason.tackles(spark, n).write.parquet(s"$d/tackles")
+    d
+  }
+  private def read(t: String) = spark.read.parquet(s"$dir/$t")
+
+  private def isTrackingScan(p: SparkPlan): Boolean = p match {
+    case s: FileSourceScanExec => s.relation.location.rootPaths.exists(_.getName == "tracking")
+    case _ => false
+  }
+
+  /** (final plan nodes, tracking scans, shuffle exchanges above a
+    * tracking scan) of one executed op. */
+  private def shape(df: DataFrame) = {
+    df.collect()
+    val all = nodes(df.queryExecution.executedPlan)
+    val shuffles = all.collect {
+      case e: ShuffleExchangeLike if nodes(e).exists(isTrackingScan) => e
+    }.distinctBy(_.id)
+    (all, all.count(isTrackingScan), shuffles)
+  }
+
+  private def playKeyed(e: ShuffleExchangeLike): Boolean = e.outputPartitioning match {
+    case h: HashPartitioning =>
+      h.expressions.collect { case a: Attribute => a.name } == Seq("gameId", "playId")
+    case _ => false
+  }
+
+  test("Yap.run scans tracking once and exchanges it once, on (gameId, playId)") {
+    val ds = Yap.run(spark, read("tracking"), read("plays"), read("players"), read("tackles"))
+    val (all, scans, shuffles) = shape(ds.toDF())
+    val plan = ds.queryExecution.executedPlan
+    assert(scans == 1, s"expected one tracking scan, got $scans:\n$plan")
+    assert(!all.exists(p => p.isInstanceOf[AppendColumnsExec] || p.isInstanceOf[MapGroupsExec]),
+      s"lambda-keyed grouping (AppendColumns/MapGroups) is back in the plan:\n$plan")
+    assert(shuffles.size == 1 && playKeyed(shuffles.head),
+      s"expected exactly one Exchange on (gameId, playId) above the tracking scan, " +
+        s"got ${shuffles.map(_.outputPartitioning)}:\n$plan")
+  }
+
+  test("MaxParams.run scans tracking once, behind one (gameId, playId) exchange") {
+    val df = MaxParams.run(spark, read("tracking"), read("plays"), read("players"), read("tackles"))
+    val (_, scans, shuffles) = shape(df)
+    val plan = df.queryExecution.executedPlan
+    assert(scans == 1, s"expected one tracking scan, got $scans:\n$plan")
+    assert(shuffles.size == 1 && playKeyed(shuffles.head),
+      s"expected exactly one Exchange on (gameId, playId) above the tracking scan, " +
+        s"got ${shuffles.map(_.outputPartitioning)}:\n$plan")
+  }
+}

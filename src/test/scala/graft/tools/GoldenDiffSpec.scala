@@ -9,8 +9,8 @@ import graft.TestSpark
   * output is diffed against an identical copy (everything must match)
   * and against a deliberately corrupted copy (exactly the planted
   * findings must surface). When the tracking CSVs are ever mounted,
-  * GoldenDiff.main runs the same code against
-  * /root/reference/Data/tackler_YAP_FINAL.csv. */
+  * GoldenDiff.main runs the same code against tackler_YAP_FINAL.csv in
+  * the reference data directory (`graft.io.Sources.referenceDir`). */
 class GoldenDiffSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
