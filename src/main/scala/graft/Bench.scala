@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Benchmark main: runs every SparkEntry query against
@@ -14,40 +13,7 @@ import java.nio.file.{Files, Paths}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // shuffle dirs on tmpfs: the virtual disk's page-cache variance
-      // made shuffle-heavy queries swing 3-10x run to run
-      .config("spark.local.dir", sys.env.getOrElse("SPARK_LOCAL_DIRS", "/dev/shm/graft-spark"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // the generated-class cache defaults to 100 entries; a 255-query
-      // suite generates far more codegen units than that between a
-      // query's pass-1 and pass-2 executions, so BOTH timed runs can
-      // re-pay janino compilation (the dd_lines_hashed r14 artifact
-      // outlier: 16.95 s vs a 1.41-1.66 s band — cold-vs-steady
-      // measured 7.67 vs 1.49 s, i.e. a ~6 s compile tail per evicted
-      // execution). Size the cache to hold the whole suite.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // let AQE apply its data-size-adaptive partition coalescing UNDER
-      // cached plans too (Spark defaults this off): the dedup-LSH
-      // family persists signature/band relations, and with the flag off
-      // every stage over the cached data is pinned to the full shuffle
-      // partition count regardless of size — measured at sf0.1/32
-      // cores: dd_minhash 3.09→1.65 s, dd_oph 1.61→1.00, dd_ppjoin
-      // _capped 2.45→1.73, dd_cluster_lsh 3.48→2.68, dd_embcos
-      // 1.64→1.24, dq_tcloseness 0.89→0.70, and the 8-vs-32-core
-      // inversion those queries showed disappears (LshContentionProbe,
-      // OPTIMIZATION_r19.md). Scale-adaptive by construction — AQE
-      // sizes partitions from bytes, not from the local core count.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     // SPARK_GRAFT_ONLY=a,b,c: bench only the named queries (builder-side
     // isolation aid for steady-state micro-benches; the driver sets

@@ -59,7 +59,7 @@ object Dedup {
     // Second blocking key: distinct-token-count band — near-equal sets
     // have near-equal cardinalities, so width-4 bands keep ≥0.9-jaccard
     // pairs together while cutting within-bucket pair growth ~4×.
-    // Structural limit (measured by tools/ScaleProbe at 10×): on a
+    // Structural limit (measured at 10×, BASELINE.md): on a
     // corpus whose near-dup density is a constant FRACTION of all
     // pairs, exact all-near-pairs output is Ω(n²) — no candidate
     // generator fixes that. dd_minhash (LSH, output-sensitive) is the
@@ -282,9 +282,8 @@ object Dedup {
         .otherwise(col("text")).as("text"))
 
   /** The capped join's set relation: (doc_id, tk sorted distinct
-    * shingle-FNV array, sz) over the planted corpus — shared with the
-    * PpjoinCapProbe funnel. */
-  private[graft] def ppjoinShingleT(docs: DataFrame): DataFrame =
+    * shingle-FNV array, sz) over the planted corpus. */
+  private def ppjoinShingleT(docs: DataFrame): DataFrame =
     shingleRows(docs)
       .select(col("doc_id"), TextHashes.rollHash(col("sh")).as("h"))
       .distinct()
@@ -292,15 +291,6 @@ object Dedup {
       .agg(sort_array(collect_list(col("h"))).as("tk"))
       .withColumn("sz", size(col("tk")))
       .select(col("doc_id"), col("tk"), col("sz"))
-
-  /** Probe seams (tools/PpjoinCapProbe): the planted corpus, the prefix
-    * relation, and the collision join over an arbitrary prefix subset. */
-  private[graft] def ppjoinCapCorpus(s: SparkSession, d: String): DataFrame =
-    viralDocs(s, d)
-  private[graft] def ppjoinCapPrefixes(t: DataFrame): DataFrame =
-    ppjoinPrefixes(t)
-  private[graft] def ppjoinCapCollisions(pr: DataFrame): DataFrame =
-    ppjoinCollisions(pr)
 
   private val ddPpjoinCapped: Q = (s, d) => {
     // NOTE (ADVICE r15): the DuckDB twin interpolates
@@ -882,7 +872,7 @@ object Dedup {
     * 16-byte content-hash relation (the exact layer's build side) and
     * the banded token-hash signatures (the near layer's). This is the
     * standing index a continuous-crawl pipeline maintains: (re)built
-    * per corpus version by a separate job (tools/DedupIndexBuild —
+    * per corpus version by a separate job (`tools.BuildIndex dedup` —
     * one full-corpus scan, completely different resource shape from
     * the per-batch probe), consulted by every arriving batch; the
     * query below never touches corpus TEXT again. */
@@ -1083,10 +1073,8 @@ object Dedup {
     * the (persisted) k-gram relation prices the dup set, and past this
     * row budget the membership join becomes a shuffled hash join on the
     * 8-byte key — the shape that scales to a crawl-sized dup set.
-    * Overridable via SPARK_GRAFT_SPAN_BCAST_MAX so ShuffleBytesProbe
-    * can price the shuffle regime on the same corpus. */
-  private[graft] val spanDupBroadcastMaxRows: Long =
-    sys.env.get("SPARK_GRAFT_SPAN_BCAST_MAX").map(_.toLong).getOrElse(4L << 20)
+    * PlanShapeSpec drives both regimes through `spanFramesAt`. */
+  private[graft] val spanDupBroadcastMaxRows: Long = 4L << 20
 
   /** The (docs, spans) pair both span queries derive from: docs =
     * (doc_id, tk) with ≥ k tokens; spans = the maximal merged
@@ -1289,12 +1277,11 @@ object Dedup {
   private val ddWinnow: Q = (s, d) =>
     winnowPairsImpl(table(s, d, "documents").select("doc_id", "text"))
 
-  /** Docs-level seam shared with tools/DetectorMutationProbe (which
-    * measures, on a planted mutation corpus, which edit classes this
-    * detector catches vs dd_minhash vs dd_substr — see the guidance
-    * note above [[queries]] and the BASELINE.md complementarity
-    * table). */
-  private[graft] def winnowPairsImpl(docs: DataFrame): DataFrame = {
+  /** dd_winnow over an explicit docs relation. Which edit classes this
+    * detector catches vs dd_minhash vs dd_substr was measured on a
+    * planted mutation corpus — see the guidance note above [[queries]]
+    * and the BASELINE.md complementarity table. */
+  private def winnowPairsImpl(docs: DataFrame): DataFrame = {
     val fps = docs.select(col("doc_id"),
       explode(ArrayFns.winnowSel(col("text"), withPositions = false)).as("fp"))
       .persist()
@@ -1820,8 +1807,8 @@ object Dedup {
   }
 
   // -------------------------------------------------------------------
-  // WHICH NEAR-DUP DETECTOR WHEN (measured, not argued —
-  // tools/DetectorMutationProbe, table in BASELINE.md round 12):
+  // WHICH NEAR-DUP DETECTOR WHEN (measured, not argued — table in
+  // BASELINE.md round 12):
   // on planted insert/delete/substitute/reorder/prefix mutations,
   // dd_winnow holds 1.0 planted-pair recall at every tested edit rate
   // (content-anchored fingerprints: unedited runs between edits keep
@@ -1893,8 +1880,11 @@ object Dedup {
     * one-shot); the orphan audit's independent recompute is then the
     * PRIOR trigger's pair compute rather than this trigger's — still
     * never a read-back of the written chunks relation (ADVICE r17).
-    * Returned pairs are persisted iff `keepPairs`; the caller owns the
-    * unpersist when it replaces them. */
+    * Returned pairs are checkpointed iff `keepPairs` — a lazy local
+    * checkpoint the chunk write materializes, so a chain of calls keeps
+    * a constant-size plan instead of nesting one anti-join per call;
+    * the caller releases them (`PlanBridge.releaseCheckpoint`) when it
+    * replaces them. */
   private[graft] def rtbfScrubIncr(s: SparkSession, d: String, idx: String,
       root: String, delIds: DataFrame, pairsIn: Option[DataFrame],
       keepPairs: Boolean = false): (DataFrame, DataFrame) = {
@@ -1950,7 +1940,7 @@ object Dedup {
             .select(col("doc_id"), col("c.ch").as("ch"))
           if (keepPairs) fresh.distinct() else fresh
       }
-      val retainedPairs = if (keepPairs) pairsBase.persist() else pairsBase
+      val retainedPairs = if (keepPairs) pairsBase.localCheckpoint(false) else pairsBase
       // persisted, not a def: the independent retained-chunk recompute
       // feeds BOTH the write and the orphan check — unpersisted it ran
       // twice (r18 opt round); persistence keeps the orphan side an

@@ -308,7 +308,7 @@ object Similarity {
     * inside every query, so the bench measured index BUILD, not probe).
     * Keyed by the corpus path (basename + path hash): the driver's
     * testdata is immutable per sf, so an existing index is valid;
-    * `ivfBuild` force-rebuilds for anything else (tools/IvfBuild). */
+    * `ivfBuild` force-rebuilds for anything else (`tools.BuildIndex ivf`). */
   private[llm] def ivfIndexPath(d: String): String = {
     val root = sys.env.getOrElse("SPARK_GRAFT_IVF_DIR", "/tmp/graft_ivf")
     s"$root/${new java.io.File(d).getName}-${math.abs(d.hashCode.toLong)}"
@@ -366,7 +366,7 @@ object Similarity {
     * the corpus), keeps its nProbe nearest cells, and computes exact
     * cosine only against index rows in those cells. The k-means fit
     * happens once in [[ivfBuild]] (lazily here on first touch, or via
-    * tools/IvfBuild); the benched query is probe-only, matching how an
+    * `tools.BuildIndex ivf`); the benched query is probe-only, matching how an
     * ANN index serves. The probed candidate set depends on the fit, but
     * — like [[annLsh]] — given that set (fixture) the scoring and
     * ranking are oracle-recomputable, so the check is hash-gated;
@@ -959,7 +959,7 @@ object Similarity {
   /** Build and PERSIST the per-shard NSW graphs (VERDICT r14 next §3 —
     * ann_nsw's gate owns the whole index lifecycle, so its 100× probe
     * was build-dominated; the production shape is the same build/serve
-    * split ann_ivf got via tools/IvfBuild). One row per node: (shard,
+    * split ann_ivf got via `tools.BuildIndex ivf`). One row per node: (shard,
     * pos, vec_id, ven, adj) — shard is the build partition id, pos the
     * insertion position within the shard, ven the unit-normalized
     * vector (the vectors live IN the index, the IVF-flat precedent),
@@ -1412,7 +1412,7 @@ object Similarity {
 
   /** Graph-ANN top-k over the PERSISTED index (VERDICT r14 next §3):
     * the serve half of the build/serve split — beam search reads the
-    * graph tools/NswBuild (or lazy first touch) wrote, then the family's
+    * graph `tools.BuildIndex nsw` (or lazy first touch) wrote, then the family's
     * exact-cosine re-rank. The build partitioner, insertion order, and
     * kernel are shared with [[annNsw]], so the served graph is
     * byte-identical to the in-query one and the two gates' results must

@@ -288,7 +288,7 @@ object TextOps {
     val stats = docs.agg(count(lit(1)).as("n_docs"),
       sum(size(split(col("text"), " ")).cast("long")).as("total_len"))
     // The planted query set is BOUNDED (doc_id < 1e5 keeps it fixed as
-    // the corpus replicates — Doc100Probe offsets copies by 1e6): a
+    // the corpus replicates — tools.Replicate offsets copies by 1e6): a
     // serving workload's query volume does not scale with corpus size,
     // and an unbounded plant made the 100× probe go |queries|·df
     // quadratic (OOM at 500k docs; bounded + slice-persisted it runs —

@@ -128,10 +128,8 @@ object Unigram {
     withCosts(chars.unionByName(multi)).localCheckpoint()
   }
 
-  /** Probe seam: the full init + EM loop over an explicit (word, n)
-    * relation — tools/UnigramScaleProbe drives it on the md5 rich
-    * corpus. */
-  private[graft] def trainOn(words: DataFrame, rounds: Int = R): DataFrame = {
+  /** The full init + EM loop over an explicit (word, n) relation. */
+  private def trainOn(words: DataFrame, rounds: Int = R): DataFrame = {
     var v = initVocab(words).localCheckpoint()
     for (_ <- 1 to rounds) v = emRound(words, v)
     v

@@ -43,15 +43,13 @@ object Graph {
   private val rankUnit = 1000000000L // 1.0 of rank mass, in nano-units
 
   /** The fixed-round PageRank core over explicit (doc_id, n_nodes)
-    * nodes and (src, dst) edges — the probe seam (VERDICT r9 next §3:
-    * tools/HubSkewProbe drives it on a planted power-law hub graph).
-    * Per round: one shuffle-join of ranks against edges on src, one
+    * nodes and (src, dst) edges. Per round: one shuffle-join of ranks against edges on src, one
     * partially-aggregated shuffle of (dst, contrib) rows — the hub's
     * n/10-wide contribution list is combined MAP-SIDE by the partial
     * HashAggregate before it ever shuffles, which is what absorbs
-    * in-degree skew (HubSkewProbe, measured flat at 500k nodes —
-    * BASELINE.md round-11 hub-skew table). */
-  private[graft] def pagerankLoop(nodes: DataFrame, edges: DataFrame,
+    * in-degree skew (measured flat at 500k nodes on a planted
+    * power-law hub graph — BASELINE.md round-11 hub-skew table). */
+  private def pagerankLoop(nodes: DataFrame, edges: DataFrame,
       iters: Int): DataFrame = {
     val tele = expr(s"(15 * ($rankUnit div n_nodes)) div 100")
     var ranks = nodes.select(col("doc_id"),
@@ -111,8 +109,9 @@ object Graph {
   // -------------------------------------------------------------------
   private val prEdgeBuckets = 32
 
-  /** Per-corpus-dir table name (the Doc100Probe corpus and each sf dir
-    * get distinct tables; the fingerprint is the full-path hash). */
+  /** Per-corpus-dir table name (each corpus dir, replicated copies
+    * included, gets a distinct table; the fingerprint is the full-path
+    * hash). */
   private[graft] def prEdgesTable(d: String): String =
     s"graft_pr_edges_${math.abs(d.hashCode.toLong)}"
 
@@ -535,8 +534,8 @@ object Graph {
   // costs peel rounds (the regime where pair-doubling shines and
   // giant SCCs explode) — on crawl graphs, whose SCC chains are
   // shallow and whose giant SCC is the danger, the label shape is the
-  // right trade; see tools/SccScaleProbe for the measured
-  // giant-SCC-at-10× row. The oracle is a genuinely INDEPENDENT
+  // right trade; see BASELINE.md for the measured giant-SCC-at-10×
+  // row. The oracle is a genuinely INDEPENDENT
   // algorithm: DuckDB's semi-naive recursive closure (unbounded),
   // then mutual-min — algorithm-independent answer, unchanged across
   // the doubling→coloring swap.
@@ -544,10 +543,9 @@ object Graph {
   private val sccOuterCap = 64
   private val sccInnerCap = 512
 
-  /** ColorSCC core over an explicit (nodes, edges) graph — the seam
-    * the giant-SCC scale probe drives directly. Returns
+  /** ColorSCC core over an explicit (nodes, edges) graph. Returns
     * (doc_id, scc_id). Edges must live on the node set. */
-  private[graft] def colorScc(nodesIn: DataFrame, edgesIn: DataFrame): DataFrame = {
+  private def colorScc(nodesIn: DataFrame, edgesIn: DataFrame): DataFrame = {
     // LAZY checkpoints throughout (r18 opt round): every checkpointed
     // relation below is materialized by the scalar action that
     // immediately follows it (count / sum fixpoint probes), so each
@@ -756,12 +754,11 @@ object Graph {
   // -------------------------------------------------------------------
   private val bfsCap = 64
 
-  /** The frontier loop over explicit seeds/edges — the probe seam
-    * (tools/HubSkewProbe). Hub shape: a hub's in-edges make it a
+  /** The frontier loop over explicit seeds/edges. Hub shape: a hub's in-edges make it a
     * massively-duplicated `dst` in the frontier-expansion join; the
     * `distinct()` is a partial-aggregated shuffle, so the duplicates
     * collapse map-side before moving. */
-  private[graft] def bfsLevels(docs: DataFrame, seeds: DataFrame,
+  private def bfsLevels(docs: DataFrame, seeds: DataFrame,
       edges: DataFrame): DataFrame = {
     var levels = seeds.select(col("doc_id"), lit(0L).as("lvl")).localCheckpoint()
     var frontier = levels

@@ -24,8 +24,8 @@ import graft.io.Sources.table
   * driver query writes the clustered copy, reads it back through a
   * two-dimension selective predicate, and must reproduce DuckDB's
   * answer on the RAW table byte-for-byte. The pruning itself is
-  * measured by `tools/ZorderProbe` (parquet footer min/max overlap
-  * counts per layout × predicate) and pinned by `LayoutSpec`'s
+  * measured by parquet footer min/max overlap counts per layout ×
+  * predicate (BASELINE.md) and pinned by `LayoutSpec`'s
   * per-file span assertions.
   */
 object Layout {
@@ -137,7 +137,7 @@ object Layout {
     * three dims) — then answer a three-way slice from the clustered
     * copy. Layout-invariant like
     * [[zoEvents]]: the oracle runs the same predicate on the raw
-    * table; the 3-dim pruning evidence is ZorderProbe's. */
+    * table; the 3-dim pruning evidence is in BASELINE.md. */
   private val zoEvents3: Q = (s, d) => {
     val key = d.replaceAll("[^A-Za-z0-9._-]", "_")
     val out = s"/tmp/graft_zorder/$key/events3.parquet"

@@ -967,7 +967,7 @@ object StreamQueries {
           val (ledger, newPairs) = graft.llm.Dedup.rtbfScrubIncr(s, d, idx,
             root, acc.toSeq.sorted.toDF("doc_id"), pairs, keepPairs = true)
           last = ledger.collect()
-          pairs.foreach(_.unpersist(false))
+          pairs.foreach(org.apache.spark.sql.graft.PlanBridge.releaseCheckpoint)
           pairs = Some(newPairs)
         }
       }
@@ -981,7 +981,7 @@ object StreamQueries {
     } finally {
       q.stop()
       dropCkpt(name)
-      pairs.foreach(_.unpersist(false))
+      pairs.foreach(org.apache.spark.sql.graft.PlanBridge.releaseCheckpoint)
     }
     require(acc == delAll.toSet,
       s"deletion stream lost requests: ${delAll.toSet -- acc}")

@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import graft.SparkEntry
 
 /** Writes EXPLAIN.md: the formatted physical plans of the flagship
@@ -31,7 +30,7 @@ object ExplainDump {
     "dq_profile" -> "column profile: every metric for every column in ONE scan + one agg row, unpivoted by a pure array expr",
     "j7_asof_native" -> "whole-operator as-of: custom AsofJoinExec over co-partitioned time-sorted children — no union, no window, no post-filter",
     "dd_spans" -> "substring-span dedup: 8-byte k-gram detection shuffle → broadcast membership → ONE doc_id shuffle reused by the window walk and both span rollups",
-    "zo_events" -> "z-order layout read side: both user_id and ts predicates reach the clustered copy's scan as PushedFilters — the footer stats they prune against are what ZorderProbe measures",
+    "zo_events" -> "z-order layout read side: both user_id and ts predicates reach the clustered copy's scan as PushedFilters — the footer stats they prune against are measured in BASELINE.md",
     "ts_perplexity" -> "LM perplexity: scan-local bigrams probe the pruned LM through a BroadcastHashJoin — the only exchange is the final integer agg on doc_id",
     "w12_scd2" -> "SCD2 build: CDC-collapse lag + version windows share ONE user_id exchange and sort",
     "pr_pagerank" -> "integer PageRank: rank ⋈ edges then partial-aggregated dst shuffle, all five rounds nested — the per-iteration dataflow pr_pagerank_bucketed makes exchange-free on the edge side",
@@ -60,7 +59,7 @@ object ExplainDump {
     "dq_dp_hist" -> "DP histogram release: one bounds scan + one 10-key count; the seeded Laplace noise is computed on the 10-row release relation, never per document",
     "dq_dp_geo" -> "discrete geometric DP release: same one-aggregate shape as dq_dp_hist with integer-only noise algebra (binary-length inverse CDF) on the release relation",
     "tok_fertility" -> "per-language fertility: vocabulary-sized encode stats broadcast to word instances, |langs|-key rollup — corpus text never self-joins (SubstrPlanSpec pins the broadcast)",
-    "dd_linkage" -> "blocked fuzzy linkage: ONE blocking-key shuffle, exact levenshtein verify inside blocks — candidates are sum-of-block-squares, never corpus-squared (LinkageScaleProbe validates the arithmetic at 5M keys)",
+    "dd_linkage" -> "blocked fuzzy linkage: ONE blocking-key shuffle, exact levenshtein verify inside blocks — candidates are sum-of-block-squares, never corpus-squared (the arithmetic is validated at 5M keys in BASELINE.md)",
     "dd_cdc" -> "content-defined chunking: the gear-hash boundary roll + slicing are scan-local integer algebra; the only exchange is the 16-byte chunk-hash frequency aggregate",
     "dd_cdc_incr" -> "incremental chunk dedup: the batch's chunk hashes probe the persisted corpus chunk index — the join carries 16-byte hashes only, text never shuffles, index side is O(distinct corpus chunks)",
     "gr_trustrank" -> "TrustRank: pr_pagerank's exact shuffle shape (ranks⋈edges + partially-aggregated contribs per round); the seed census rides as a broadcast one-row relation — only the teleport vector differs",
@@ -91,19 +90,14 @@ object ExplainDump {
     "dq_rtbf" -> "erasure compliance sweep: the deletion list broadcasts into anti-joins over the doc-keyed index relations, censuses are constant-width aggregates, the one scan is the no-refcount chunk recompute over retained docs")
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // 4 cores: the plans match the ones the specs pin (TestSpark)
+    val spark = graft.GraftSession(4)
     val sf = "/root/testdata/sf0.001"
     graft.ops.Graph.ensurePrEdgesBucketed(spark, sf)
     val sb = new StringBuilder
     sb.append("# EXPLAIN — formatted physical plans of flagship queries\n\n")
-    sb.append("Generated by `graft.tools.ExplainDump` at sf0.001; plan shapes are\n")
+    sb.append("Generated by `graft.tools.ExplainDump` at sf0.001 on the engine config\n")
+    sb.append("(`GraftSession`, 4 cores — the specs' session); plan shapes are\n")
     sb.append("scale-independent (AQE re-plans sizes at runtime). The properties\n")
     sb.append("asserted here are also pinned by `PlanShapeSpec`.\n")
     showcase.foreach { case (name, why) =>

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Flag-gated EP1 golden-replication harness (VERDICT r7 next §6,
@@ -93,12 +93,7 @@ object GoldenDiff {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: GoldenDiff <engineYapCsvDir> <goldenCsv> [tolerance]")
     val tol = if (args.length >= 3) args(2).toDouble else 0.011
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
     val engine = spark.read.option("header", "true").csv(args(0))
     val golden = spark.read.option("header", "true").csv(args(1))
     println(render(diff(engine, golden, tol)))

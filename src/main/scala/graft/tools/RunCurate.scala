@@ -81,14 +81,7 @@ object RunCurate {
 
   def main(args: Array[String]): Unit = {
     val Array(in, out) = args.take(2)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[*]"))
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
     run(spark, in, out).toSeq.sortBy(_._1)
       .foreach { case (k, n) => println(f"$k%-14s $n%8d rows") }
     spark.stop()

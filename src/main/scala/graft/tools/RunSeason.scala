@@ -73,12 +73,7 @@ object RunSeason {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: RunSeason <inputDir> <outDir> [rT]")
     val rT = if (args.length >= 3) args(2).toDouble else 1.0
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
     val t0 = System.nanoTime()
     val counts = run(spark, args(0), args(1), rT)
     counts.toSeq.sortBy(_._1).foreach { case (k, n) => println(f"[run-season] $k%-16s $n%d rows") }

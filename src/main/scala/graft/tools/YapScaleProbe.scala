@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{SparkSession, SaveMode}
+import org.apache.spark.sql.SaveMode
 import graft.pipelines.Yap
 
 /** End-to-end throughput of the EP1/EP2 pipelines at season scale.
@@ -20,14 +20,10 @@ import graft.pipelines.Yap
 object YapScaleProbe {
   def main(args: Array[String]): Unit = {
     val nPlays = if (args.nonEmpty) args(0).toInt else 11400
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "512")
-      .config("spark.local.dir", "/dev/shm/graft-spark")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    import spark.implicits._
+    val spark = graft.GraftSession()
+    // fine-grained shuffle partitions spread the heavy-tailed per-play
+    // kernel cost (KernelProfile) over more tasks than cores
+    spark.conf.set("spark.sql.shuffle.partitions", "512")
 
     val dir = "/tmp/yap_scale"
     val t0Gen = System.nanoTime()

@@ -41,8 +41,7 @@ object PlanBridge {
     * `HashPartitioning(key, numParts)` over the same attribute the
     * declaration references. Rows are copied out of the unsafe-row
     * reuse buffer and persisted eagerly (the localCheckpoint
-    * discipline); the per-query unpersist hygiene of the bench/Verify
-    * harnesses reclaims the RDD. */
+    * discipline); [[releaseCheckpoint]] frees them. */
   def partitionedCheckpoint(spark: org.apache.spark.sql.SparkSession,
       df: org.apache.spark.sql.DataFrame, key: String,
       numParts: Int): org.apache.spark.sql.DataFrame = {
@@ -69,4 +68,17 @@ object PlanBridge {
       org.apache.spark.sql.execution.LogicalRDD(
         qe.analyzed.output, rdd, part, Nil, false, None)(cls, None, None))
   }
+
+  /** Frees the rows a checkpointed frame stores (`localCheckpoint`,
+    * [[partitionedCheckpoint]]): unpersists the RDD under each
+    * LogicalRDD of its plan. `Dataset.unpersist` does not — a
+    * checkpoint is not a CacheManager entry. The frame, and any frame
+    * derived from it that has not been checkpointed itself, must not
+    * be evaluated afterwards. */
+  def releaseCheckpoint(df: org.apache.spark.sql.DataFrame): Unit =
+    df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].queryExecution.logical
+      .foreach {
+        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
+        case _ =>
+      }
 }

@@ -52,4 +52,35 @@ class RtbfSpec extends AnyFunSuite {
     assert(again.map(_.toString).sorted.sameElements(
       ledger.map(_.toString).sorted))
   }
+
+  test("incremental scrubs keep a constant-size pairs plan across calls") {
+    // three calls with a growing deletion set, each fed the pairs the
+    // previous one returned (the st_rtbf trigger chain): the returned
+    // pairs must not nest one more anti-join per call, and the third
+    // call's pairs must equal a from-scratch scrub's over the full set
+    import org.apache.spark.sql.graft.PlanBridge.releaseCheckpoint
+    import spark.implicits._
+    val ids = Dedup.incrCorpus(spark, sf).filter(col("doc_id") % 20 === 5)
+      .select("doc_id").as[Long].collect().sorted
+    val root = java.nio.file.Files.createTempDirectory("rtbf-chain").toString
+    def nodes(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.analyzed.collect { case n => n }.size
+    var pairs: Option[org.apache.spark.sql.DataFrame] = None
+    val sizes = (1 to 3).map { i =>
+      val del = ids.take(ids.length * i / 3).toSeq.toDF("doc_id")
+      val (_, next) = Dedup.rtbfScrubIncr(spark, sf, idx, root, del, pairs,
+        keepPairs = true)
+      pairs.foreach(releaseCheckpoint)
+      pairs = Some(next)
+      nodes(next)
+    }
+    assert(sizes(1) == sizes(2), s"pairs plan grows per call: node counts $sizes")
+    val (_, fresh) = Dedup.rtbfScrubIncr(spark, sf, idx, s"$root-fresh",
+      ids.toSeq.toDF("doc_id"), None, keepPairs = true)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("doc_id", "ch").collect().map(_.toString).sorted.toSeq
+    assert(rows(pairs.get) == rows(fresh), "chained pairs != from-scratch pairs")
+    pairs.foreach(releaseCheckpoint)
+    releaseCheckpoint(fresh)
+  }
 }
