@@ -1,5 +1,8 @@
 package graft.kernel
 
+import java.lang.Double.{doubleToRawLongBits => bits}
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.{AtomicInteger, LongAdder}
 import Linalg._
 
 /** The optimal-pursuit LQR kernel (K1–K3): finite-horizon tracking of a
@@ -142,25 +145,64 @@ object OptimalPursuit {
     out(7) = -alphaV * y(3) - y(5)
   }
 
+  /** The exact bits of the inputs the backward sweep depends on. */
+  private[kernel] final case class SweepKey(vMax: Long, aMax: Long, rT: Long, tF: Long)
+
+  /** Insert-only memo of the sweep's S₀ holding at most `bound` entries;
+    * once full, misses compute through without storing. Keys are exact
+    * bits — no rounding, no tolerance — so a hit returns the very array
+    * a fresh sweep would, and results are bit-identical with or without
+    * it. Stored arrays are shared across threads and never written. */
+  private[graft] final class SweepMemo(val bound: Int) {
+    private val map = new ConcurrentHashMap[SweepKey, Array[Double]]()
+    private val reserved = new AtomicInteger() // claimed slots: keeps size <= bound
+    val hits = new LongAdder()
+    val misses = new LongAdder()
+
+    def apply(k: SweepKey)(sweep: => Array[Double]): Array[Double] = {
+      val got = map.get(k)
+      if (got != null) { hits.increment(); got }
+      else {
+        misses.increment()
+        val s0 = sweep
+        if (reserved.incrementAndGet() > bound || map.putIfAbsent(k, s0) != null)
+          reserved.decrementAndGet()
+        s0
+      }
+    }
+
+    def size: Int = map.size
+
+    /** Empties the memo and zeroes its counters (tests and profiles). */
+    def clear(): Unit = { map.clear(); reserved.set(0); hits.reset(); misses.reset() }
+  }
+
+  /** One memo per JVM, shared by every task's kernel. A season has a few
+    * hundred distinct (bounds, horizon) keys (about 390 on a 2,000-play season). */
+  private[graft] val sweepMemo = new SweepMemo(4096)
+
   /** K3: solve the optimal pursuit path from relative initial state
     * (x0, y0) with initial velocity (u0, v0), over time grid `t`
     * (seconds, ascending, t(0) = 0), with limits vMax/aMax and target
     * radius rT. Returns the path sampled at `t`. */
   def solveOptimalPath(x0: Double, y0: Double, u0: Double, v0: Double,
       t: Array[Double], vMax: Double, aMax: Double, rT: Double): Path = {
-    val cR = 2.0 / (rT * rT)
     val betaA = 2.0 / (aMax * aMax)
     val alphaV = 2.0 / (vMax * vMax)
     val bInvD = 1.0 / betaA
-    val sF = diag(cR, cR, 0.0, 0.0)
     val tF = t.last
 
-    // backward Riccati sweep (no t_eval — only the endpoint matters)
-    val symBuf = new Array[Double](16) // scratch reused across RHS calls
-    val (_, s0Flat) = RK45.integrate(
-      (_, s, out) => sweepSDotInto(s, alphaV, bInvD, symBuf, out),
-      0.0, tF, flatten(sF), Array.empty)
-    val s0 = reshape(s0Flat, 4, 4)
+    // backward Riccati sweep (no t_eval — only the endpoint matters); a
+    // function of the bounds and the horizon alone, so memoised on them
+    val s0Flat = sweepMemo(SweepKey(bits(vMax), bits(aMax), bits(rT), bits(tF))) {
+      val cR = 2.0 / (rT * rT)
+      val sF = diag(cR, cR, 0.0, 0.0)
+      val symBuf = new Array[Double](16) // scratch reused across RHS calls
+      RK45.integrate(
+        (_, s, out) => sweepSDotInto(s, alphaV, bInvD, symBuf, out),
+        0.0, tF, flatten(sF), Array.empty)._2
+    }
+    val s0 = reshape(s0Flat, 4, 4) // a copy: the memoised array is never written
 
     val xVec = Array(x0, y0, u0, v0)
     val l0 = matvec(s0, xVec)

@@ -49,13 +49,6 @@ object RK45 {
   /** In-place right-hand side: write dy/dt of (t, y) into `out`. */
   type Rhs = (Double, Array[Double], Array[Double]) => Unit
 
-  private def rmsNorm(v: Array[Double]): Double = {
-    var s = 0.0
-    var i = 0
-    while (i < v.length) { s += v(i) * v(i); i += 1 }
-    math.sqrt(s / v.length)
-  }
-
   /** Hairer/Wanner initial step heuristic (the one scipy uses). */
   private def initialStep(f: Rhs, t0: Double, y0: Array[Double], f0: Array[Double],
       rtol: Double, atol: Double, tBound: Double): Double = {

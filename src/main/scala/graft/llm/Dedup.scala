@@ -34,10 +34,6 @@ object Dedup {
       .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_copies"))
       .orderBy("content_hash")
 
-  // sorted+distinct: sortedIntersectCount requires sorted inputs, and
-  // sorting changes neither set sizes nor intersection counts
-  private val toks: Column = array_sort(array_distinct(split(col("text"), " ")))
-
   // hashed-token fast path for the pairwise verify: distinct tokens →
   // xxhash64 → sorted longs. Intersection counts are identical to the
   // string form (distinct-then-hash preserves set sizes; a cross-doc

@@ -1786,16 +1786,6 @@ object Similarity {
   // -------------------------------------------------------------------
   private val tuneNProbes = Seq(1, 2, 4, 8)
 
-  /** Serve the IVF top-k at an explicit probe-ring width — [[ivfSims]]
-    * ranked and cut to kNeighbors. ann_tune sweeps this; annIvf runs
-    * the same plan at the tuned default [[ivfNProbe]]. */
-  private def ivfServeAt(s: SparkSession, d: String, np: Int): DataFrame =
-    ivfSims(s, d, np)
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("qid").orderBy(desc("sim"), asc("cid"))))
-      .filter(col("rk") <= kNeighbors)
-      .select("qid", "cid")
-
   private val annTune: Q = (s, d) => {
     val exact = knnCosine(s, d).select("qid", "cid").persist()
     // Eager constant-width readback (scalar counts — the sanctioned

@@ -1,7 +1,6 @@
 package graft.pipelines
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** EP2 — max pursuit parameters (K5/K6, optimal_pursuit.py:193-259;
@@ -9,64 +8,86 @@ import org.apache.spark.sql.functions._
   * observed speed and acceleration between the frame the ball carrier
   * gets the ball and the frame the tackler is first within R_t of him.
   *
-  * Fully relational (SURVEY §2.9 K5) over ONE scan of tracking: the
-  * role-tagged carrier + tackler frames ([[Yap.roleFrames]]), plus one
-  * frameless row per listed tackle, go through one exchange on
-  * (gameId, playId). Per-play windows follow — the start boundary (W1,
-  * partition by play), the carrier's position at each frame (partition
-  * by play and frame), the first crossing (W3, partition by play and
-  * tackler) — and the range max (A7) is a groupBy that the same
-  * exchange already satisfies, whose groups are exactly the listed
-  * tackles. No UDF, no per-group kernel, no self-join, no join back to
-  * tackles. The DuckDB twin (`k5_max_params`) is the authority on the
-  * semantics.
+  * The same shape as EP1 over ONE scan of tracking: the role-tagged
+  * carrier + tackler frames ([[Yap.roleFrames]]), plus one frameless row
+  * per listed tackle, go through one exchange on (gameId, playId) and a
+  * partition-local sort, and a per-play Scala pass ([[ofPlay]], run by
+  * [[Yap.playRuns]]) computes the start boundary (W1), the first
+  * crossing (W3) and the range max (A7) from one play's rows. The
+  * frameless rows make the pass's output exactly one row per listed
+  * tackle, so nothing joins back to tackles; only the broadcast players
+  * dim is joined after it. The DuckDB twin (`k5_max_params`) is the
+  * authority on the semantics.
   */
 object MaxParams {
 
-  private val startSet = Seq("handoff", "pass_outcome_caught", "run", "snap_direct")
+  private val startSet = Set("handoff", "pass_outcome_caught", "run", "snap_direct")
+
+  /** The columns the pass reads of one role-tagged frame; `isCarrier` is
+    * empty on a listed tackle's frameless row. Every field is an Option,
+    * ids included: a CSV token `Sources.csv`'s `try_cast` nulled stays
+    * null, as it does in SQL. */
+  final case class Frame(gameId: Option[Long], playId: Option[Long], nflId: Option[Long],
+      frameId: Option[Int], isCarrier: Option[Boolean], x: Option[Double], y: Option[Double],
+      s: Option[Double], a: Option[Double], event: Option[String])
+
+  final case class Out(game_ID: Option[Long], play_ID: Option[Long], NFL_ID: Option[Long],
+      max_vel: Option[Double], max_accel: Option[Double])
 
   /** @return (game_ID, play_ID, NFL_ID, name, position, max_vel,
     *         max_accel) with nulls where the tackler never enters the
     *         vicinity (the reference's NaN rows). */
   def run(spark: SparkSession, tracking: DataFrame, plays: DataFrame,
       players: DataFrame, tackles: DataFrame, rT: Double = 1.0): DataFrame = {
-    val play = Seq(col("gameId"), col("playId"))
-    val carrier = col("isCarrier")
-    val tackler = !col("isCarrier")
-    def firstCarrierFrame(at: Column) = min(when(carrier && at, col("frameId"))).over(
-      Window.partitionBy(play: _*))
-
+    import spark.implicits._
     val frames = Yap.roleFrames(tracking, plays, tackles)
-      // one row per listed tackle with every frame column (and isCarrier)
-      // null: inert in the windows below, it gives each listed tackler its
-      // output group, metrics null when no frame is in range
       .unionByName(tackles.select("gameId", "playId", "nflId"), allowMissingColumns = true)
-      // W1: start boundary per play, with ball_snap fallback; the first
-      // window, so its (gameId, playId) exchange is the only one
-      .withColumn("startFrame", coalesce(
-        firstCarrierFrame(col("event").isin(startSet: _*)),
-        firstCarrierFrame(col("event") === "ball_snap")))
-      // every carrier position at this frame (a duplicated carrier frame
-      // keeps all its rows, as the twin's frame-aligned join does)
-      .withColumn("carrierXY", collect_list(when(carrier, struct(col("x"), col("y"))))
-        .over(Window.partitionBy(play :+ col("frameId"): _*)))
-      // W3: first crossing strictly after start. sqrt(dx²+dy²) rather
-      // than hypot: bit-identical in Spark and the DuckDB oracle (hypot's
-      // overflow-guarded algorithm can differ by 1 ulp)
-      .withColumn("vicFrame", min(when(tackler && col("frameId") > col("startFrame") &&
-        exists(col("carrierXY"), c => sqrt((c("x") - col("x")) * (c("x") - col("x")) +
-          (c("y") - col("y")) * (c("y") - col("y"))) < rT), col("frameId")))
-        .over(Window.partitionBy(play :+ col("nflId"): _*)))
+      .select("gameId", "playId", "nflId", "frameId", "isCarrier", "x", "y", "s", "a", "event")
+      .as[Frame]
+      .repartition(col("gameId"), col("playId"))
+    Yap.playRuns(frames)((p, q) => p.gameId == q.gameId && p.playId == q.playId)(ofPlay(_, rT))
+      .join(broadcast(players.select(col("nflId").as("NFL_ID"), col("displayName").as("name"),
+        col("position"))), Seq("NFL_ID"), "left")
+      .select("game_ID", "play_ID", "NFL_ID", "name", "position", "max_vel", "max_accel")
+  }
 
-    // A7: range max over [startFrame, vicFrame), one row per listed tackle
-    frames
-      .filter(carrier.isNull ||
-        (tackler && col("frameId") >= col("startFrame") && col("frameId") < col("vicFrame")))
-      .groupBy("gameId", "playId", "nflId")
-      .agg(max(col("s")).as("max_vel"), max(col("a")).as("max_accel"))
-      .join(broadcast(players.select("nflId", "displayName", "position")), Seq("nflId"), "left")
-      .select(col("gameId").as("game_ID"), col("playId").as("play_ID"),
-        col("nflId").as("NFL_ID"), col("displayName").as("name"),
-        col("position"), col("max_vel"), col("max_accel"))
+  /** EP2 over one play's rows: one [[Out]] per distinct listed nflId.
+    * SQL's null semantics throughout: a null key matches nothing (a
+    * listed null nflId gets null metrics), a row with a null frameId or
+    * coordinate never crosses, and the max skips null speeds and
+    * accelerations (null when no frame is in range). */
+  private[pipelines] def ofPlay(rows: Seq[Frame], rT: Double): Iterator[Out] = {
+    val (carrier, tackler) = rows.filter(_.isCarrier.isDefined).partition(_.isCarrier.get)
+    def firstCarrierFrame(at: String => Boolean) =
+      carrier.filter(_.event.exists(at)).flatMap(_.frameId).minOption
+    // W1: start boundary, with the ball_snap fallback
+    val start = firstCarrierFrame(startSet).orElse(firstCarrierFrame(_ == "ball_snap"))
+    // every carrier position at each frame: a duplicated carrier frame
+    // keeps all its rows, as the twin's frame-aligned join does
+    val carrierAt: Map[Int, Seq[(Double, Double)]] =
+      carrier.flatMap(r => for (f <- r.frameId; x <- r.x; y <- r.y) yield f -> (x, y))
+        .groupMap(_._1)(_._2)
+    val byTackler = tackler.groupBy(_.nflId)
+    val head = rows.head
+    rows.filter(_.isCarrier.isEmpty).map(_.nflId).distinct.iterator.map { id =>
+      val own = byTackler.getOrElse(id, Nil)
+      // W3: first crossing strictly after start. sqrt(dx²+dy²) rather
+      // than hypot: bit-identical to the DuckDB twin (hypot's
+      // overflow-guarded algorithm can differ by 1 ulp)
+      val vic = start.flatMap(s0 => own.flatMap { r =>
+        for {
+          f <- r.frameId if f > s0
+          x <- r.x; y <- r.y
+          cs <- carrierAt.get(f) if cs.exists { case (xc, yc) =>
+            math.sqrt((xc - x) * (xc - x) + (yc - y) * (yc - y)) < rT }
+        } yield f
+      }.minOption)
+      // A7: range max over [start, crossing); NaN ranks highest, as in SQL
+      val inRange = vic.fold(Seq.empty[Frame])(v =>
+        own.filter(_.frameId.exists(f => f >= start.get && f < v)))
+      Out(head.gameId, head.playId, id,
+        inRange.flatMap(_.s).maxOption(Ordering.Double.TotalOrdering),
+        inRange.flatMap(_.a).maxOption(Ordering.Double.TotalOrdering))
+    }
   }
 }

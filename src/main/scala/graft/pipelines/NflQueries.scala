@@ -58,7 +58,7 @@ object NflQueries {
   private def yapSel(em: DataFrame): DataFrame = em.filter(col("kind") === "yap")
     .select("game_ID", "play_ID", "NFL_ID", "name", "position", "YAP")
 
-  /** K5/EP2 — max pursuit params, pure relational. */
+  /** K5/EP2 — max pursuit params: one exchange, then a per-play pass. */
   private val k5MaxParams: Q = (s, _) => {
     val (tr, pl, py, tk) = dfs(s)
     MaxParams.run(s, tr, pl, py, tk).orderBy("game_ID", "play_ID", "NFL_ID")

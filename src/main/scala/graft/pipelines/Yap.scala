@@ -1,6 +1,6 @@
 package graft.pipelines
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.kernel.OptimalPursuit
 
@@ -16,10 +16,10 @@ import graft.kernel.OptimalPursuit
   * ([[roleFrames]]), the players dim broadcast-joined after it, then ONE
   * shuffle keyed on (gameId, playId) and a partition-local sort bring
   * each play's carrier + tackler frames together as one run of rows,
-  * which a streaming `mapPartitions` hands to the kernel ([[perPlay]]).
+  * which a streaming `mapPartitions` hands to the kernel ([[playRuns]]).
   * Plays are tiny (≤ ~20 rows/frame × ~100 frames), so the
-  * growing-horizon LQR search (W5) runs as a local Scala loop per play —
-  * the only non-relational operator in the engine.
+  * growing-horizon LQR search (W5) runs as a local Scala loop per play.
+  * EP2 ([[MaxParams]]) shares the same exchange-sort-pass shape.
   *
   * Emissions are a tagged union (`kind`): one `yap` summary row and one
   * `max_params_opt` row per tackler, `path` rows for the spliced
@@ -126,26 +126,32 @@ object Yap {
       .repartition(col("gameId"), col("playId")), rT)
 
   /** Runs the kernel over frames whose plays are each already within one
-    * partition: a partition-local sort clusters each play's rows into a
-    * run, and a streaming run-grouping `mapPartitions` feeds the kernel
-    * one play at a time (memory = one play's frames, never a whole
-    * partition). Keying on the frames' own columns, not on a lambda as
-    * `groupByKey` does, lets Catalyst see the play layout, so no row is
-    * deserialized before the exchange. */
+    * partition ([[playRuns]]). */
   private def perPlay(frames: Dataset[PlayFrame], rT: Double): Dataset[Emit] =
+    playRuns(frames)((p, q) => p.gameId == q.gameId && p.playId == q.playId)(
+      rows => processPlay(rows.head.gameId, rows.head.playId, rows, rT))(Encoders.product[Emit])
+
+  /** Hands `f` each play of `frames`, whose plays are each already within
+    * one partition, as one run of rows: a partition-local sort on
+    * (gameId, playId) clusters each play's rows, and a streaming
+    * `mapPartitions` cuts a run where `samePlay` turns false (memory =
+    * one play's rows, never a whole partition). Keying on the frames' own
+    * columns, not on a lambda as `groupByKey` does, lets Catalyst see the
+    * play layout, so no row is deserialized before the exchange. The
+    * per-play pass of [[run]], [[runBucketed]] and [[MaxParams.run]]. */
+  private[pipelines] def playRuns[T, U: Encoder](frames: Dataset[T])(samePlay: (T, T) => Boolean)(
+      f: Seq[T] => Iterator[U]): Dataset[U] =
     frames.sortWithinPartitions("gameId", "playId").mapPartitions { it =>
       val b = it.buffered
-      new Iterator[Iterator[Emit]] {
+      new Iterator[Iterator[U]] {
         def hasNext: Boolean = b.hasNext
-        def next(): Iterator[Emit] = {
-          val g = b.head.gameId
-          val p = b.head.playId
-          val rows = scala.collection.mutable.ArrayBuffer.empty[PlayFrame]
-          while (b.hasNext && b.head.gameId == g && b.head.playId == p) rows += b.next()
-          processPlay(g, p, rows.toSeq, rT)
+        def next(): Iterator[U] = {
+          val rows = scala.collection.mutable.ArrayBuffer(b.next())
+          while (b.hasNext && samePlay(rows.head, b.head)) rows += b.next()
+          f(rows.toSeq)
         }
       }.flatten
-    }(Encoders.product[Emit])
+    }
 
   /** Materialize the assembled per-play frame relation as a managed
     * table bucketed AND sorted by the play key — the pay-once layout for

@@ -4,7 +4,8 @@ import graft.pipelines.Yap
 import java.sql.Timestamp
 
 /** Serial per-play kernel cost distribution (no Spark) — finds the
-  * heavy tail that makes cluster scheduling of the YAP kernel noisy. */
+  * heavy tail that makes cluster scheduling of the YAP kernel noisy.
+  * Ends with the Riccati-sweep memo's hit and miss counts for the pass. */
 object KernelProfile {
   def main(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toInt else 300
@@ -17,6 +18,9 @@ object KernelProfile {
     val sorted = times.map(_._2).sorted
     println(f"plays=$n mean=${sorted.sum / n}%.1f ms p50=${sorted(n / 2)}%.1f p90=${sorted(n * 9 / 10)}%.1f p99=${sorted(n * 99 / 100)}%.1f max=${sorted.last}%.1f")
     times.sortBy(t => -t._2).take(5).foreach { t => println(f"  play ${t._1}%5d: ${t._2}%8.1f ms") }
+    val memo = graft.kernel.OptimalPursuit.sweepMemo
+    println(s"riccati sweep memo: hits=${memo.hits.sum} misses=${memo.misses.sum} " +
+      s"stored=${memo.size}/${memo.bound}")
   }
 
   def playFrames(p: Int): Seq[Yap.PlayFrame] = {

@@ -34,12 +34,16 @@ object RunSeason {
     val players = Sources.csv(spark, s"$in/players.csv", Sources.playersSchema)
     val tackles = Sources.csv(spark, s"$in/tackles.csv", Sources.tacklesSchema)
 
-    val (yap, mpOpt, paths, errs) =
-      Yap.sinks(Yap.run(spark, tracking, plays, players, tackles, rT))
-    Sinks.writeCsv(yap, s"$out/tackler_YAP")
-    Sinks.writeCsv(mpOpt, s"$out/max_params_opt")
-    Sinks.writeCsv(paths, s"$out/optimal_paths")
-    Sinks.writeDeadLetters(errs, s"$out/run_errors")
+    // the kernel runs once: its emits are cached by the first write and
+    // feed the other three, and are released before this returns
+    val emits = Yap.run(spark, tracking, plays, players, tackles, rT).persist()
+    try {
+      val (yap, mpOpt, paths, errs) = Yap.sinks(emits)
+      Sinks.writeCsv(yap, s"$out/tackler_YAP")
+      Sinks.writeCsv(mpOpt, s"$out/max_params_opt")
+      Sinks.writeCsv(paths, s"$out/optimal_paths")
+      Sinks.writeDeadLetters(errs, s"$out/run_errors")
+    } finally emits.unpersist()
 
     val mp = MaxParams.run(spark, tracking, plays, players, tackles, rT)
     Sinks.writeCsv(mp, s"$out/max_params")

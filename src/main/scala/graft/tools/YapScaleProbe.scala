@@ -10,7 +10,8 @@ import graft.pipelines.Yap
   * 10 Hz, a ball carrier random-walking downfield and two tacklers
   * converging, positions drawn across the bounds ladder. Writes it as
   * parquet (so the pipelines pay real scan cost), then times
-  * `Yap.run` (LQR kernel, per-play `mapPartitions`) and `MaxParams.run` (relational).
+  * `MaxParams.run` and `Yap.run` (the LQR kernel); both are one exchange
+  * on the play key and a per-play `mapPartitions` pass.
   *
   * The reference processes the same workload one play at a time,
   * re-reading all five CSVs per play (optimal_pursuit.py:132-149 inside
@@ -35,7 +36,7 @@ object YapScaleProbe {
     println(f"generated $nPlays plays in ${(System.nanoTime() - t0Gen) / 1e9}%.1f s")
 
     val tracking = spark.read.parquet(s"$dir/tracking.parquet")
-    // EP2 relational
+    // EP2 per-play pass
     var t0 = System.nanoTime()
     val mpCount = graft.pipelines.MaxParams.run(spark, tracking, plays, players, tackles).count()
     val mpSec = (System.nanoTime() - t0) / 1e9

@@ -3,13 +3,15 @@ package graft.pipelines
 import java.nio.file.{Files, Path}
 import scala.sys.process._
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.functions.{col, lit, when}
 import graft.TestSpark
 
 object MaxParamsEdgeSpec {
   final case class Tr(gameId: Long, playId: Long, nflId: Option[Long], frameId: Int,
       x: Double, y: Double, s: Double, a: Double, event: Option[String])
 
-  type Out = (Long, Long, Long, Option[String], Option[String], Option[Double], Option[Double])
+  type Out = (Long, Long, Option[Long], Option[String], Option[String], Option[Double],
+    Option[Double])
 }
 
 /** `MaxParams.run` against its DuckDB twin (`k5_max_params` in
@@ -26,7 +28,11 @@ object MaxParamsEdgeSpec {
   *    frame 30. The carrier 100 is also listed as a tackler. A bystander
   *    and the football (no nflId) ride along;
   *  - play (9,2): only a `ball_snap` start, at frame 3; DT 203 closes on
-  *    the carrier; 205 is listed but has no tracking rows;
+  *    the carrier, but its frame 27, the first within R_t, has null `x`,
+  *    `s` and `a` (as `Sources.csv`'s `try_cast` leaves unparsable
+  *    tokens), so it crosses at 28 and its max skips the nulls; 205 is
+  *    listed but has no tracking rows; a tackles row with a null nflId
+  *    is listed too;
   *  - play (9,3): no start event at all; 206 stands next to the carrier.
   *
   * The twin runs in DuckDB (python3 with the duckdb module) over the
@@ -64,15 +70,18 @@ class MaxParamsEdgeSpec extends AnyFunSuite {
   private def write(): Path = {
     import spark.implicits._
     val d = Files.createTempDirectory("maxparams_edge")
-    fixture.toDF().write.parquet(s"$d/tracking")
+    val nulled = col("playId") === 2 && col("nflId") === 203 && col("frameId") === 27
+    Seq("x", "s", "a").foldLeft(fixture.toDF())((df, c) =>
+      df.withColumn(c, when(nulled, lit(null)).otherwise(col(c))))
+      .write.parquet(s"$d/tracking")
     Seq((9L, 1L, 100L), (9L, 2L, 101L), (9L, 3L, 102L))
       .toDF("gameId", "playId", "ballCarrierId").write.parquet(s"$d/plays")
     Seq((100L, "Carrier A", "RB"), (101L, "Carrier B", "RB"), (102L, "Carrier C", "RB"),
       (201L, "Dup Listed", "CB"), (202L, "Gap Runner", "FS"), (203L, "Snap Closer", "DT"),
       (205L, "No Frames", "MLB"), (206L, "No Start", "DE"))
       .toDF("nflId", "displayName", "position").write.parquet(s"$d/players")
-    Seq((9L, 1L, 201L), (9L, 1L, 201L), (9L, 1L, 202L), (9L, 1L, 100L),
-      (9L, 2L, 203L), (9L, 2L, 205L), (9L, 3L, 206L))
+    Seq((9L, 1L, Some(201L)), (9L, 1L, Some(201L)), (9L, 1L, Some(202L)), (9L, 1L, Some(100L)),
+      (9L, 2L, Some(203L)), (9L, 2L, Some(205L)), (9L, 2L, None), (9L, 3L, Some(206L)))
       .toDF("gameId", "playId", "nflId").write.parquet(s"$d/tackles")
     d
   }
@@ -92,7 +101,7 @@ class MaxParamsEdgeSpec extends AnyFunSuite {
     val out = Seq("python3", "-c", py, sqlFile.toString).!!
     def opt(s: String) = if (s.isEmpty) None else Some(s)
     out.linesIterator.filter(_.nonEmpty).map(_.split("\t", -1)).map { c =>
-      (c(0).toLong, c(1).toLong, c(2).toLong, opt(c(3)), opt(c(4)),
+      (c(0).toLong, c(1).toLong, opt(c(2)).map(_.toLong), opt(c(3)), opt(c(4)),
         opt(c(5)).map(_.toDouble), opt(c(6)).map(_.toDouble))
     }.toSeq.sortBy(key)
   }
@@ -103,18 +112,20 @@ class MaxParamsEdgeSpec extends AnyFunSuite {
     val got: Seq[Out] = MaxParams.run(spark, read("tracking"), read("plays"), read("players"),
         read("tackles")).collect().map { r =>
       def dbl(i: Int) = if (r.isNullAt(i)) None else Some(r.getDouble(i))
-      (r.getLong(0), r.getLong(1), r.getLong(2), Option(r.getString(3)),
-        Option(r.getString(4)), dbl(5), dbl(6))
+      (r.getLong(0), r.getLong(1), Option(r.get(2)).map(_.asInstanceOf[Long]),
+        Option(r.getString(3)), Option(r.getString(4)), dbl(5), dbl(6))
     }.toSeq.sortBy(key)
     val want = twin(d)
     assert(got == want, s"\nspark: ${got.mkString("\n  ")}\ntwin:  ${want.mkString("\n  ")}")
     // the fixture really exercises each case (so agreement is not vacuous)
-    val byId = got.map(r => r._3 -> r).toMap
-    assert(got.size == 6, "one row per distinct (play, tackler)")
+    val byId = got.collect { case r @ (_, _, Some(id), _, _, _, _) => id -> r }.toMap
+    assert(got.size == 7, "one row per distinct (play, tackler)")
     assert(byId(201L)._6.isDefined, "201 crosses only the duplicated carrier frame")
     assert(byId(202L)._6.contains(9.9), "202's range spans the carrier's missing frames")
     assert(byId(100L)._6.isDefined, "the carrier listed as a tackler crosses at distance 0")
     assert(byId(203L)._6.isDefined, "the ball_snap start fallback")
+    assert(byId(203L)._6.contains(2.0 + 0.05 * 26), "203's null frame 27 neither crosses nor counts")
+    assert(got.exists(r => r._3.isEmpty && r._4.isEmpty && r._6.isEmpty), "a null listed nflId")
     assert(byId(205L)._6.isEmpty && byId(205L)._4.contains("No Frames"), "no tracking rows")
     assert(byId(206L)._6.isEmpty, "no start event")
   }

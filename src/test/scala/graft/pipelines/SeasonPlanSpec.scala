@@ -4,18 +4,21 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.execution.{AppendColumnsExec, FileSourceScanExec, MapGroupsExec, SparkPlan}
+import org.apache.spark.sql.execution.{AppendColumnsExec, FileSourceScanExec, MapGroupsExec,
+  SortExec, SparkPlan}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.execution.window.WindowExec
 import graft.PlanNodes.nodes
 import graft.TestSpark
 
 /** The season ops read tracking ONCE: carrier and tackler frames come
   * from one role-tagged join, not from one tracking subtree per role or
-  * per self-join. `Yap.run` then exchanges those frames once, on the
-  * play key, with no lambda-keyed grouping; `MaxParams.run` runs its
-  * windows and range max behind that same single exchange. Asserted on
-  * the executed (AQE-final) plan over parquet inputs, so every read of
-  * tracking is a file scan that can be counted. */
+  * per self-join. Both ops then exchange those frames once, on the play
+  * key, with no lambda-keyed grouping, and run one per-play pass behind
+  * one partition-local sort (`Yap.playRuns`): `MaxParams.run` has no
+  * window. Asserted on the executed (AQE-final) plan over parquet
+  * inputs, so every read of tracking is a file scan that can be
+  * counted. */
 class SeasonPlanSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val n = 30
@@ -66,11 +69,15 @@ class SeasonPlanSpec extends AnyFunSuite {
 
   test("MaxParams.run scans tracking once, behind one (gameId, playId) exchange") {
     val df = MaxParams.run(spark, read("tracking"), read("plays"), read("players"), read("tackles"))
-    val (_, scans, shuffles) = shape(df)
+    val (all, scans, shuffles) = shape(df)
     val plan = df.queryExecution.executedPlan
     assert(scans == 1, s"expected one tracking scan, got $scans:\n$plan")
     assert(shuffles.size == 1 && playKeyed(shuffles.head),
       s"expected exactly one Exchange on (gameId, playId) above the tracking scan, " +
         s"got ${shuffles.map(_.outputPartitioning)}:\n$plan")
+    assert(!all.exists(_.isInstanceOf[WindowExec]), s"a Window is back in the plan:\n$plan")
+    val sorts = all.collect { case s: SortExec => s }
+    assert(sorts.size == 1 && nodes(sorts.head).exists(_.isInstanceOf[ShuffleExchangeLike]),
+      s"expected exactly one Sort, above the exchange, got ${sorts.size}:\n$plan")
   }
 }

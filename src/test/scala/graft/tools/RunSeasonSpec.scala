@@ -12,10 +12,12 @@ import graft.pipelines.DemoPlays
 class RunSeasonSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  test("RunSeason reproduces demo outputs from Kaggle-layout CSVs") {
-    val root = java.nio.file.Files.createTempDirectory("runseason").toFile.getAbsolutePath
+  private lazy val root =
+    java.nio.file.Files.createTempDirectory("runseason").toFile.getAbsolutePath
+
+  /** Writes the Kaggle-layout input CSVs once and returns their directory. */
+  private lazy val in: String = {
     val in = s"$root/input"
-    val out = s"$root/out"
 
     // Kaggle tracking order: displayName/jerseyNumber interposed
     DemoPlays.tracking(spark).selectExpr(
@@ -51,8 +53,14 @@ class RunSeasonSpec extends AnyFunSuite {
         "jerseyNumber", "club", "playDirection", "x", "y", "s", "a", "dis",
         "o", "dir", "event")
       .coalesce(1).write.option("header", "true").csv(s"$in/tracking_week_2.csv")
+    in
+  }
 
-    val counts = RunSeason.run(spark, in, out, 1.0)
+  private lazy val firstRun = RunSeason.run(spark, in, s"$root/out", 1.0)
+
+  test("RunSeason reproduces demo outputs from Kaggle-layout CSVs") {
+    val out = s"$root/out"
+    val counts = firstRun
     assert(counts("tackler_YAP") == 2, counts)      // 201, 202 (203 dead-letters)
     assert(counts("max_params_opt") == 2, counts)
     assert(counts("max_params") == 3, counts)       // EP2 keeps all tacklers
@@ -68,5 +76,14 @@ class RunSeasonSpec extends AnyFunSuite {
     val yap = spark.read.option("header", "true").csv(s"$out/tackler_YAP")
       .where("NFL_ID = 201").collect()
     assert(yap.length == 1 && yap(0).getAs[String]("YAP").toDouble == 0.0)
+  }
+
+  test("RunSeason releases the kernel emits it caches, with unchanged counts") {
+    firstRun
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val counts = RunSeason.run(spark, in, s"$root/out_again", 1.0)
+    val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(left.isEmpty, s"RunSeason.run left persisted RDDs $left")
+    assert(counts == firstRun)
   }
 }
