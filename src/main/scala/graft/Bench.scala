@@ -52,8 +52,7 @@ object Bench {
               Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
             System.err.println(s"[bench] prestage $idx failed: ${prestageFailed(idx)}")
         }
-        spark.sharedState.cacheManager.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+        org.apache.spark.sql.graft.PlanBridge.releaseAll(spark)
       }
     stage("season_bucketed")(_.contains("season_bucketed"))(
       pipelines.NflQueries.ensureSeasonBucketed(spark))
@@ -101,8 +100,7 @@ object Bench {
       selected.toSeq.sortBy(_._1).foreach { case (_, fn) =>
         try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         catch { case _: Throwable => }
-        spark.sharedState.cacheManager.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+        org.apache.spark.sql.graft.PlanBridge.releaseAll(spark)
       }
     }
 
@@ -127,8 +125,7 @@ object Bench {
           (System.nanoTime() - t0) / 1e9
         }
       }.sum
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      org.apache.spark.sql.graft.PlanBridge.releaseAll(spark)
       t
     }
     // skipped in SPARK_GRAFT_ONLY isolation runs: a micro-bench of one
@@ -193,8 +190,7 @@ object Bench {
         // work — with a large heap, GC (which drives Spark's context
         // cleaner) may not run for a long time, and accumulated state
         // made late heavy queries ~20x slower than isolated runs.
-        spark.sharedState.cacheManager.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+        org.apache.spark.sql.graft.PlanBridge.releaseAll(spark)
       }
     }
 
@@ -275,8 +271,7 @@ object Bench {
               roundDetails(name) = rs
             record(name, sec)
           } catch { case _: Throwable => }
-          spark.sharedState.cacheManager.clearCache()
-          spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+          org.apache.spark.sql.graft.PlanBridge.releaseAll(spark)
         }
       }
     }

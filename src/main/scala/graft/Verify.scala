@@ -67,8 +67,7 @@ object Verify {
       // caller to release them; without this the dump accumulates
       // cached partitions across all 120+ queries and leans on LRU
       // eviction under heap pressure
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      org.apache.spark.sql.graft.PlanBridge.releaseAll(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -107,13 +107,11 @@ object Bpe {
     * anti-join are byte-identical across both modes. */
   private def train(words: DataFrame, rounds: Int, k: Int,
       likelihood: Boolean = false, label: String = "bpe_train"): (DataFrame, DataFrame) = {
-    var seqs = words
+    val seqs0 = words
       .select(col("word"), col("n"), charify(col("word")).as("seq"))
       .localCheckpoint()
-    var merges: DataFrame = null
-    // per-round wall-clock ledger (VERDICT r13 next §3): each round ends
-    // in eager localCheckpoints, so the loop body's time IS the round's
-    for (i <- 1 to rounds) graft.RoundClock.time(label, i) {
+    val (seqs, merges) = graft.Fixpoint.run(label, (seqs0, null: DataFrame), rounds) {
+        case (i, (seqs, merges)) =>
       // Adjacent pairs: posexplode every symbol of the word's sequence
       // and pair it with the next one by a lead() window over the word,
       // which costs a word-keyed exchange + sort per round on top of the
@@ -155,12 +153,13 @@ object Bpe {
       val batch = scored
         .orderBy(ordCols: _*)
         .limit(k)
+        // one partition, bounded by construction: at most k survivors
         .withColumn("rank", row_number().over(Window.orderBy(ordCols: _*)))
         .select(lit(i).cast("long").as("merge_round"),
           col("rank").cast("long").as("rank"), col("lsym"), col("rsym"),
           col("cnt"), col("score_q"))
         .localCheckpoint()
-      merges = if (merges == null) batch else merges.unionByName(batch)
+      val mergesNext = if (merges == null) batch else merges.unionByName(batch)
       // One left-to-right scan applying the ACCUMULATED merge table —
       // as a MAP-ONLY codegen'd kernel per word (r19; guide §2.4). The
       // r8→r18 relational form (broadcast match join + a 4-window
@@ -174,14 +173,14 @@ object Bpe {
       // merge table rides as ONE newline-joined broadcast string
       // (vocab-bounded by construction), parsed once per task via a
       // content-keyed memo.
-      val msetRow = merges.agg(array_join(
+      val msetRow = mergesNext.agg(array_join(
         sort_array(collect_list(concat(col("lsym"), lit(" "), col("rsym")))),
         "\n").as("mset"))
-      seqs = seqs.crossJoin(broadcast(msetRow))
+      ((seqs.crossJoin(broadcast(msetRow))
         .select(col("word"), col("n"),
           graft.functions.ArrayFns.bpeRewrite(col("seq"), col("mset")).as("seq"))
-        .localCheckpoint()
-    }
+        .localCheckpoint(), mergesNext), false)
+    }.state
     (merges, seqs)
   }
 

@@ -618,6 +618,8 @@ object Dedup {
     clusterRollup(s, d, pairs)
   }
 
+  private val ccMaxRounds = 25
+
   /** Connected components over an undirected pair list, by alternating
     * large-star / small-star rounds (Kiveris et al., "Connected
     * Components in MapReduce and Beyond", SoCC '14). Each round is one
@@ -632,9 +634,9 @@ object Dedup {
     * Convergence is detected by an exact count plus an order-independent
     * sum of per-edge 64-bit hashes (the edge set is deduplicated, so
     * equal (count, sum) across rounds means identical sets up to a ~2⁻⁶⁴
-    * collision); the loop additionally hard-fails past `maxIter` rounds
-    * rather than silently emitting a non-converged labelling. */
-  private[graft] def connectedComponents(pairs: DataFrame, maxIter: Int = 25): DataFrame = {
+    * collision); the loop additionally hard-fails past [[ccMaxRounds]]
+    * rounds rather than silently emitting a non-converged labelling. */
+  private[graft] def connectedComponents(pairs: DataFrame): DataFrame = {
     // canonical form: u > v, no self loops, set semantics
     def canon(e: DataFrame): DataFrame = e
       .select(greatest(col("u"), col("v")).as("u"), least(col("u"), col("v")).as("v"))
@@ -673,19 +675,16 @@ object Dedup {
     // scalars, so each round is ONE job instead of two — on the
     // near-dup pair sets the edge relation is tiny and the round cost
     // is job latency, not bytes.
-    var edges = canon(pairs).localCheckpoint(false)
-    var sig = checksum(edges)
-    var it = 0
-    var converged = sig._1 == 0L
-    while (!converged && it < maxIter) {
-      val next = smallStar(largeStar(edges)).localCheckpoint(false)
-      val nextSig = checksum(next)
-      converged = nextSig == sig
-      edges = next
-      sig = nextSig
-      it += 1
-    }
-    require(converged, s"connectedComponents did not converge in $maxIter rounds")
+    val edges0 = canon(pairs).localCheckpoint(false)
+    val sig0 = checksum(edges0)
+    // an empty pair set is already a fixed point: it runs no round
+    val edges = if (sig0._1 == 0L) edges0 else
+      graft.Fixpoint.converge("connected_components", (edges0, sig0), ccMaxRounds) {
+          case (_, (e, sig)) =>
+        val next = smallStar(largeStar(e)).localCheckpoint(false)
+        val nextSig = checksum(next)
+        ((next, nextSig), nextSig == sig)
+      }._1
     // converged edges form stars (member, root): label every endpoint by
     // the minimum over its closed neighborhood
     // (the checkpointed blocks back `labels` — do NOT unpersist here)

@@ -83,9 +83,11 @@ object Unigram {
         col("j").cast("long").as("len"), col("n"))
     val freq = sub.groupBy("piece", "len").agg(sum(col("n")).as("cnt"))
     val chars = freq.filter(col("len") === 1)
+    // top-M by a parallel per-partition top-k (TakeOrderedAndProject),
+    // never one task ranking every candidate; (piece, len) is unique,
+    // so (cnt desc, piece asc) is a total order and the kept set exact
     val multi = freq.filter(col("len") > 1)
-      .withColumn("rk", row_number().over(Window.orderBy(desc("cnt"), asc("piece"))))
-      .filter(col("rk") <= M).drop("rk")
+      .orderBy(desc("cnt"), asc("piece")).limit(M.toInt)
     withCosts(chars.unionByName(multi))
   }
 
@@ -120,6 +122,7 @@ object Unigram {
     val joined = vocab.select("piece", "len").join(cnts, Seq("piece"), "left")
     val chars = joined.filter(col("len") === 1)
       .select(col("piece"), col("len"), (coalesce(col("cnt"), lit(0L)) + 1L).as("cnt"))
+    // one partition, bounded by construction: at most M multi-char pieces
     val multi = joined.filter(col("len") > 1 && col("cnt").isNotNull && col("cnt") > 0)
       .withColumn("rk", row_number().over(Window.orderBy(asc("cnt"), asc("piece"))))
       .withColumn("nm", count(lit(1)).over(Window.partitionBy()))
@@ -129,11 +132,10 @@ object Unigram {
   }
 
   /** The full init + EM loop over an explicit (word, n) relation. */
-  private def trainOn(words: DataFrame, rounds: Int = R): DataFrame = {
-    var v = initVocab(words).localCheckpoint()
-    for (_ <- 1 to rounds) v = emRound(words, v)
-    v
-  }
+  private def trainOn(words: DataFrame): DataFrame =
+    graft.Fixpoint.run("tok_unigram_train", initVocab(words).localCheckpoint(), R) {
+      (_, v) => (emRound(words, v), false)
+    }.state
 
   private def trainVocab(s: SparkSession, d: String): DataFrame =
     trainOn(wordCounts(table(s, d, "documents").select("text")).localCheckpoint())

@@ -42,6 +42,31 @@ object Graph {
   private val iterations = 5
   private val rankUnit = 1000000000L // 1.0 of rank mass, in nano-units
 
+  /** (doc_id, n_nodes): the node census with the broadcast-joined
+    * count — never a collected scalar. */
+  private def nodeCensus(docs: DataFrame): DataFrame =
+    docs.crossJoin(broadcast(docs.agg(count(lit(1)).as("n_nodes"))))
+
+  /** The affine plant's destination, (31·src + 17·j + 7) mod n_nodes,
+    * over (src, j, n_nodes) rows. */
+  private def affineDst: org.apache.spark.sql.Column =
+    pmod(col("src") * 31 + col("j") * 17 + 7, col("n_nodes")).as("dst")
+
+  /** The affine 3-out plant over census nodes: (src, dst) for j ∈ {1,2,3}. */
+  private def plantedEdges(nodes: DataFrame): DataFrame =
+    nodes
+      .select(col("doc_id").as("src"),
+        explode(array(lit(1L), lit(2L), lit(3L))).as("j"), col("n_nodes"))
+      .select(col("src"), affineDst)
+
+  /** The undirected closure of directed (src, dst) edges: (a < b) pairs. */
+  private def undirected(edges: DataFrame): DataFrame =
+    edges
+      .select(least(col("src"), col("dst")).as("a"),
+        greatest(col("src"), col("dst")).as("b"))
+      .filter(col("a") =!= col("b"))
+      .distinct()
+
   /** The fixed-round PageRank core over explicit (doc_id, n_nodes)
     * nodes and (src, dst) edges. Per round: one shuffle-join of ranks against edges on src, one
     * partially-aggregated shuffle of (dst, contrib) rows — the hub's
@@ -68,17 +93,8 @@ object Graph {
   }
 
   private val prPagerank: Q = (s, d) => {
-    val docs = table(s, d, "documents").select(col("doc_id"))
-    val n = docs.agg(count(lit(1)).as("n_nodes"))
-    // (doc_id, n_nodes): the node census with the broadcast-joined
-    // count — never a collected driver-side scalar
-    val nodes = docs.crossJoin(broadcast(n))
-    val edges = nodes
-      .select(col("doc_id").as("src"),
-        explode(array(lit(1L), lit(2L), lit(3L))).as("j"), col("n_nodes"))
-      .select(col("src"),
-        pmod(col("src") * 31 + col("j") * 17 + 7, col("n_nodes")).as("dst"))
-      .persist()
+    val nodes = nodeCensus(table(s, d, "documents").select(col("doc_id")))
+    val edges = plantedEdges(nodes).persist()
     // edges stay persisted through execution (the caller's post-query
     // cache hygiene reclaims them — unpersisting here would fire before
     // the lazy plan ever ran and recompute the edge build per round)
@@ -138,13 +154,7 @@ object Graph {
       if (s.catalog.tableExists(prEdgesTable(d)))
         s.sql(s"DROP TABLE IF EXISTS ${prEdgesTable(d)}")
       if (loc.exists) org.apache.commons.io.FileUtils.deleteDirectory(loc)
-      val docs = table(s, d, "documents").select(col("doc_id"))
-      val n = docs.agg(count(lit(1)).as("n_nodes"))
-      val edges = docs.crossJoin(broadcast(n))
-        .select(col("doc_id").as("src"),
-          explode(array(lit(1L), lit(2L), lit(3L))).as("j"), col("n_nodes"))
-        .select(col("src"),
-          pmod(col("src") * 31 + col("j") * 17 + 7, col("n_nodes")).as("dst"))
+      val edges = plantedEdges(nodeCensus(table(s, d, "documents").select(col("doc_id"))))
         // repartition by the bucket key first: Spark's bucket id is the
         // same murmur3-pmod as HashPartitioning, so 32 write tasks emit
         // exactly ONE file per bucket — the single-file-per-bucket
@@ -162,9 +172,7 @@ object Graph {
     require(s.catalog.tableExists(prEdgesTable(d)),
       s"bucketed edge table '${prEdgesTable(d)}' missing — Bench/Verify call " +
         "Graph.ensurePrEdgesBucketed(spark, sfDir) at setup before this query")
-    val docs = table(s, d, "documents").select(col("doc_id"))
-    val n = docs.agg(count(lit(1)).as("n_nodes"))
-    val nodes = docs.crossJoin(broadcast(n))
+    val nodes = nodeCensus(table(s, d, "documents").select(col("doc_id")))
     pagerankLoop(nodes, s.table(prEdgesTable(d)), iterations).orderBy("doc_id")
   }
 
@@ -197,9 +205,7 @@ object Graph {
   private val convMaxRounds = 40
 
   private val prPagerankConv: Q = (s, d) => {
-    val docs = table(s, d, "documents").select(col("doc_id"))
-    val n = docs.agg(count(lit(1)).as("n_nodes"))
-    val nodes = docs.crossJoin(broadcast(n))
+    val nodes = nodeCensus(table(s, d, "documents").select(col("doc_id")))
     val edges = nodes
       .select(col("doc_id").as("src"),
         explode(array(lit(1L), lit(2L), lit(3L))).as("j"), col("n_nodes"))
@@ -217,13 +223,10 @@ object Graph {
     // was 2× WORSE — each round's frame feeds two consumers and Spark
     // duplicates the unmaterialized subtree per use (~2^B work), see
     // OPTIMIZATION_r18.md "what didn't work".
-    var ranks = nodes
+    val ranks0 = nodes
       .select(col("doc_id"), col("n_nodes"), expr(s"$rankUnit div n_nodes").as("r"))
       .localCheckpoint()
-    var rounds = convMaxRounds.toLong
-    var converged = false
-    var i = 1
-    while (i <= convMaxRounds && !converged) graft.RoundClock.time("pr_pagerank_conv", i) {
+    val conv = graft.Fixpoint.run("pr_pagerank_conv", ranks0, convMaxRounds) { (_, ranks) =>
       val contribs = ranks
         .join(edges, ranks("doc_id") === edges("src"))
         .select(col("dst").as("doc_id"), expr("r div 3").as("c"))
@@ -237,12 +240,10 @@ object Graph {
       val dmax = next
         .agg(max(abs(col("r") - col("pr"))).as("dmax"))
         .head.getLong(0)
-      ranks = next.select(col("doc_id"), col("n_nodes"), col("r"))
-      if (dmax < convEps) { rounds = i.toLong; converged = true }
-      i += 1
+      (next.select(col("doc_id"), col("n_nodes"), col("r")), dmax < convEps)
     }
-    ranks.select(col("doc_id"), col("r").as("rank_q"),
-        lit(rounds).as("rounds"))
+    conv.state.select(col("doc_id"), col("r").as("rank_q"),
+        lit(conv.rounds.toLong).as("rounds"))
       .orderBy("doc_id")
   }
 
@@ -273,12 +274,7 @@ object Graph {
     val ns = docs.filter(isSeed).agg(count(lit(1)).as("n_seeds"))
     val nodes = docs.crossJoin(broadcast(ns))
       .select(col("doc_id"), col("n_seeds"), isSeed.as("is_seed"))
-    val n = docs.agg(count(lit(1)).as("n_nodes"))
-    val edges = docs.crossJoin(broadcast(n))
-      .select(col("doc_id").as("src"),
-        explode(array(lit(1L), lit(2L), lit(3L))).as("j"), col("n_nodes"))
-      .select(col("src"),
-        pmod(col("src") * 31 + col("j") * 17 + 7, col("n_nodes")).as("dst"))
+    val edges = plantedEdges(nodeCensus(docs))
       .persist() // caller-owned hygiene (COVERAGE.md convention)
     val seedTele = expr(s"(15 * ($rankUnit div n_seeds)) div 100")
     var trust = nodes.select(col("doc_id"), col("n_seeds"), col("is_seed"),
@@ -372,35 +368,19 @@ object Graph {
 
   private val grLpaConv: Q = (s, d) => {
     val docs = table(s, d, "documents").select(col("doc_id"))
-    val n = docs.agg(count(lit(1)).as("n_nodes"))
-    val nodes = docs.crossJoin(broadcast(n))
-    val u = nodes
-      .select(col("doc_id").as("src"),
-        explode(array(lit(1L), lit(2L), lit(3L))).as("j"), col("n_nodes"))
-      .select(col("src"),
-        pmod(col("src") * 31 + col("j") * 17 + 7, col("n_nodes")).as("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
+    val u = undirected(plantedEdges(nodeCensus(docs)))
     // persisted hash-partitioned by node or nbr per the measured node
     // count (r19; VERDICT r18 next §3) — see lpaBroadcastLabels
     val bcast = lpaBroadcastLabels(s, docs.count())
     val adj = lpaAdj(u, bcast)
-    var labels = docs.select(col("doc_id"), col("doc_id").as("lbl"))
+    val labels0 = docs.select(col("doc_id"), col("doc_id").as("lbl"))
       .localCheckpoint()
-    var rounds = lpaMaxRounds.toLong
-    var converged = false
-    // per-round ledger (VERDICT r13 next §3): each round materializes
-    // through the lazily-checkpointed frame + the convergence-scalar
-    // count, so the body's wall-clock is the round's true cost.
     // Measured and kept: batching convBatch rounds into one lazy plan
     // was 2× WORSE (19.7 s vs 10.0 s at sf0.1) — each round's frame
     // feeds two consumers (the mode aggregate and the join-back), and
     // Spark duplicates the unmaterialized subtree per use, ~2^B work —
     // see OPTIMIZATION_r18.md "what didn't work".
-    var i = 1
-    while (i <= lpaMaxRounds && !converged) graft.RoundClock.time("gr_lpa_conv", i) {
+    val conv = graft.Fixpoint.run("gr_lpa_conv", labels0, lpaMaxRounds) { (_, labels) =>
       val best = lpaRoundBest(adj, labels, bcast)
       // the new label AND the changed flag ride ONE lazily-checkpointed
       // frame: the convergence count materializes the checkpoint and
@@ -411,11 +391,9 @@ object Graph {
           (coalesce(col("nl"), col("doc_id")) =!= col("lbl")).as("changed"))
         .localCheckpoint(false)
       val changes = next.filter(col("changed")).count()
-      labels = next.select(col("doc_id"), col("lbl"))
-      if (changes == 0L) { rounds = i.toLong; converged = true }
-      i += 1
+      (next.select(col("doc_id"), col("lbl")), changes == 0L)
     }
-    labels.select(col("doc_id"), col("lbl"), lit(rounds).as("rounds"))
+    conv.state.select(col("doc_id"), col("lbl"), lit(conv.rounds.toLong).as("rounds"))
       .orderBy("doc_id")
   }
 
@@ -432,17 +410,7 @@ object Graph {
   // -------------------------------------------------------------------
   private val grTriangles: Q = (s, d) => {
     val docs = table(s, d, "documents").select(col("doc_id"))
-    val n = docs.agg(count(lit(1)).as("n_nodes"))
-    val nodes = docs.crossJoin(broadcast(n))
-    val u = nodes
-      .select(col("doc_id").as("src"),
-        explode(array(lit(1L), lit(2L), lit(3L))).as("j"), col("n_nodes"))
-      .select(col("src"),
-        pmod(col("src") * 31 + col("j") * 17 + 7, col("n_nodes")).as("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
+    val u = undirected(plantedEdges(nodeCensus(docs)))
       .persist()
     val tri = u.as("e1")
       .join(u.as("e2"), col("e2.a") === col("e1.b"))
@@ -472,17 +440,7 @@ object Graph {
   private val lpaRounds = 3
   private val grLpa: Q = (s, d) => {
     val docs = table(s, d, "documents").select(col("doc_id"))
-    val n = docs.agg(count(lit(1)).as("n_nodes"))
-    val nodes = docs.crossJoin(broadcast(n))
-    val u = nodes
-      .select(col("doc_id").as("src"),
-        explode(array(lit(1L), lit(2L), lit(3L))).as("j"), col("n_nodes"))
-      .select(col("src"),
-        pmod(col("src") * 31 + col("j") * 17 + 7, col("n_nodes")).as("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
+    val u = undirected(plantedEdges(nodeCensus(docs)))
     // layout + labels strategy from the measured node count — see
     // lpaBroadcastLabels
     val bcast = lpaBroadcastLabels(s, docs.count())
@@ -553,37 +511,31 @@ object Graph {
     // these label relations is job latency, not bytes. `parts` stays
     // EAGER: its consumers run only at the end, and lazy parts would
     // stack un-truncated lineage into the final union's planning.
-    var active = nodesIn.select(col("doc_id")).localCheckpoint(false)
+    val active0 = nodesIn.select(col("doc_id")).localCheckpoint(false)
     val edges = edgesIn.select(col("src"), col("dst")).persist()
     val parts = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    var nActive = active.count()
-    var outer = 0
-    while (nActive > 0L) {
-      outer += 1
-      require(outer <= sccOuterCap,
-        s"gr_scc: peel depth exceeded $sccOuterCap outer rounds ($nActive nodes left)")
+    // outer rounds peel the SCCs found in the still-unassigned subgraph
+    // until none is left
+    graft.Fixpoint.converge("gr_scc", active0, sccOuterCap) { (_, active) =>
       val edgesA = edges
         .join(active.select(col("doc_id").as("src")), Seq("src"), "left_semi")
         .join(active.select(col("doc_id").as("dst")), Seq("dst"), "left_semi")
         .localCheckpoint(false)
       // forward pass: color = max id reaching v, to fixpoint
-      var colors = active.select(col("doc_id"), col("doc_id").as("color"))
+      val colors0 = active.select(col("doc_id"), col("doc_id").as("color"))
         .localCheckpoint(false)
-      var prevSum = -1L
-      var curSum = colors.agg(sum(col("color"))).head.getLong(0)
-      var inner = 0
-      while (curSum != prevSum) {
-        inner += 1
-        require(inner <= sccInnerCap, s"gr_scc: forward pass exceeded $sccInnerCap rounds")
+      val sum0 = colors0.agg(sum(col("color"))).head.getLong(0)
+      val (colors, _) = graft.Fixpoint.converge("gr_scc_forward", (colors0, sum0),
+          sccInnerCap) { case (_, (colors, curSum)) =>
         val contrib = edgesA
           .join(colors.select(col("doc_id").as("src"), col("color").as("c")), Seq("src"))
           .groupBy(col("dst").as("doc_id")).agg(max(col("c")).as("mc"))
-        colors = colors.join(contrib, Seq("doc_id"), "left")
+        val next = colors.join(contrib, Seq("doc_id"), "left")
           .select(col("doc_id"),
             greatest(col("color"), coalesce(col("mc"), col("color"))).as("color"))
           .localCheckpoint(false)
-        prevSum = curSum
-        curSum = colors.agg(sum(col("color"))).head.getLong(0)
+        val nextSum = next.agg(sum(col("color"))).head.getLong(0)
+        ((next, nextSum), nextSum == curSum)
       }
       // backward pass within color classes: same-color edges only
       val edgesC = edgesA
@@ -591,28 +543,24 @@ object Graph {
         .join(colors.select(col("doc_id").as("dst"), col("color").as("cd")), Seq("dst"))
         .filter(col("cs") === col("cd"))
         .select("src", "dst").localCheckpoint(false)
-      var reached = colors.filter(col("doc_id") === col("color"))
+      val reached0 = colors.filter(col("doc_id") === col("color"))
         .select(col("doc_id")).localCheckpoint(false)
-      var prevN = -1L
-      var curN = reached.count()
-      inner = 0
-      while (curN != prevN) {
-        inner += 1
-        require(inner <= sccInnerCap, s"gr_scc: backward pass exceeded $sccInnerCap rounds")
+      val (reached, _) = graft.Fixpoint.converge("gr_scc_backward",
+          (reached0, reached0.count()), sccInnerCap) { case (_, (reached, curN)) =>
         val newFrom = edgesC
           .join(reached.select(col("doc_id").as("dst")), Seq("dst"), "left_semi")
           .select(col("src").as("doc_id"))
-        reached = reached.unionByName(newFrom).distinct().localCheckpoint(false)
-        prevN = curN
-        curN = reached.count()
+        val next = reached.unionByName(newFrom).distinct().localCheckpoint(false)
+        val nextN = next.count()
+        ((next, nextN), nextN == curN)
       }
       // extraction: fwd ∩ bwd per pivot; scc_id = min member id
       val members = colors.join(reached, Seq("doc_id"))
       val ids = members.groupBy(col("color")).agg(min(col("doc_id")).as("scc_id"))
       parts += members.join(ids, Seq("color"))
         .select(col("doc_id"), col("scc_id")).localCheckpoint()
-      active = active.join(reached, Seq("doc_id"), "left_anti").localCheckpoint(false)
-      nActive = active.count()
+      val next = active.join(reached, Seq("doc_id"), "left_anti").localCheckpoint(false)
+      (next, next.count() == 0L)
     }
     edges.unpersist()
     parts.reduce(_ unionByName _)
@@ -657,9 +605,7 @@ object Graph {
 
   private val grKcore: Q = (s, d) => {
     val docs = table(s, d, "documents").select(col("doc_id"))
-    val n = docs.agg(count(lit(1)).as("n_nodes"))
-    val nodes = docs.crossJoin(broadcast(n))
-    val dir = nodes
+    val dir = nodeCensus(docs)
       .select(col("doc_id").as("u"),
         explode(sequence(lit(1L), lit(1L) + pmod(col("doc_id"), lit(5L)))).as("j"),
         col("n_nodes"))
@@ -672,8 +618,6 @@ object Graph {
     val deg0 = und.select(col("a").as("doc_id"))
       .union(und.select(col("b").as("doc_id")))
       .groupBy("doc_id").agg(count(lit(1)).as("deg0"))
-    var active = docs
-    var peeled: DataFrame = null
     // r19 round shape (VERDICT r18 next §4): the r18 loop eagerly
     // checkpointed `active` but left each round's `low` as un-
     // checkpointed lineage — the final output re-executed every
@@ -689,9 +633,8 @@ object Graph {
     // and the explicit residual pass only runs when all kcoreRounds
     // rounds genuinely peeled. Output identical: zero-peel rounds
     // contribute no peeled rows and `active` is unchanged.
-    var fixedPoint = false
-    var r = 1
-    while (r <= kcoreRounds && !fixedPoint) {
+    val peel = graft.Fixpoint.run("gr_kcore", (docs, null: DataFrame), kcoreRounds) {
+        case (r, (active, peeled)) =>
       val e2 = und
         .join(active.select(col("doc_id").as("a")), "a")
         .join(active.select(col("doc_id").as("b")), "b")
@@ -704,18 +647,17 @@ object Graph {
       val nLow = degAll.filter(col("deg") < kcoreK).count()
       val low = degAll.filter(col("deg") < kcoreK)
         .select(col("doc_id"), lit(r.toLong).as("peel_round"))
-      peeled = if (peeled == null) low else peeled.union(low)
-      active = degAll.filter(col("deg") >= kcoreK).select(col("doc_id"))
-      if (nLow == 0L) fixedPoint = true
-      r += 1
+      ((degAll.filter(col("deg") >= kcoreK).select(col("doc_id")),
+        if (peeled == null) low else peeled.union(low)), nLow == 0L)
     }
+    val (active, peeled) = peel.state
     // convergence guard: the fixed round count is only correct if the
     // peel cascade has actually died out — a corpus needing a further
     // round would otherwise silently label non-core nodes in_core=true
     // on BOTH engines (the oracle replays the same bounded loop). A
     // zero-peel round above proved it already; otherwise one extra
     // degree pass asserts round kcoreRounds+1 would peel zero.
-    if (!fixedPoint) {
+    if (!peel.converged) {
       val eChk = und
         .join(active.select(col("doc_id").as("a")), "a")
         .join(active.select(col("doc_id").as("b")), "b")
@@ -760,25 +702,18 @@ object Graph {
     * collapse map-side before moving. */
   private def bfsLevels(docs: DataFrame, seeds: DataFrame,
       edges: DataFrame): DataFrame = {
-    var levels = seeds.select(col("doc_id"), lit(0L).as("lvl")).localCheckpoint()
-    var frontier = levels
-    var i = 1
-    var done = false
-    while (!done) {
-      require(i <= bfsCap, s"gr_bfs: frontier did not drain within $bfsCap rounds")
+    val levels0 = seeds.select(col("doc_id"), lit(0L).as("lvl")).localCheckpoint()
+    val (levels, _) = graft.Fixpoint.converge("gr_bfs", (levels0, levels0), bfsCap) {
+        case (i, (levels, frontier)) =>
       val nxt = frontier
         .join(edges, frontier("doc_id") === edges("src"))
         .select(col("dst").as("doc_id")).distinct()
         .join(levels, Seq("doc_id"), "left_anti")
         .select(col("doc_id"), lit(i.toLong).as("lvl"))
         .localCheckpoint(false)
-      if (nxt.count() == 0L) done = true
-      else {
-        // lazy: materialized by the next round's anti-join/count (r18)
-        levels = levels.unionByName(nxt).localCheckpoint(false)
-        frontier = nxt
-        i += 1
-      }
+      if (nxt.count() == 0L) ((levels, frontier), true)
+      // lazy: materialized by the next round's anti-join/count (r18)
+      else ((levels.unionByName(nxt).localCheckpoint(false), nxt), false)
     }
     docs.join(levels, Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("lvl"), lit(-1L)).as("lvl"),
@@ -787,13 +722,7 @@ object Graph {
 
   private val grBfs: Q = (s, d) => {
     val docs = table(s, d, "documents").select(col("doc_id"))
-    val n = docs.agg(count(lit(1)).as("n_nodes"))
-    val nodes = docs.crossJoin(broadcast(n))
-    val edges = nodes
-      .select(col("doc_id").as("src"),
-        explode(array(lit(1L), lit(2L), lit(3L))).as("j"), col("n_nodes"))
-      .select(col("src"),
-        pmod(col("src") * 31 + col("j") * 17 + 7, col("n_nodes")).as("dst"))
+    val edges = plantedEdges(nodeCensus(docs))
       .filter(pmod(col("dst"), lit(13L)) =!= 5L)
       .persist()
     val seeds = docs.filter(pmod(col("doc_id"), lit(101L)) === 0L)
@@ -847,14 +776,7 @@ object Graph {
   }
 
   private val grLinkpred: Q = (s, d) => {
-    val docs = table(s, d, "documents").select(col("doc_id"))
-    val n = docs.agg(count(lit(1)).as("n_nodes"))
-    val nodes = docs.crossJoin(broadcast(n))
-    val edges = nodes
-      .select(col("doc_id").as("src"),
-        explode(array(lit(1L), lit(2L), lit(3L))).as("j"), col("n_nodes"))
-      .select(col("src"),
-        pmod(col("src") * 31 + col("j") * 17 + 7, col("n_nodes")).as("dst"))
+    val edges = plantedEdges(nodeCensus(table(s, d, "documents").select(col("doc_id"))))
       .filter(col("src") =!= col("dst"))
     val adj = edges.select(col("src").as("node"), col("dst").as("nbr"))
       .union(edges.select(col("dst").as("node"), col("src").as("nbr")))
@@ -916,33 +838,30 @@ object Graph {
   private val hitsUnit = 1000000L
   private val grHits: Q = (s, d) => {
     val docs = table(s, d, "documents").select(col("doc_id"))
-    val n = docs.agg(count(lit(1)).as("n_nodes"))
-    val nodes = docs.crossJoin(broadcast(n))
-    val edges = nodes
+    val edges = nodeCensus(docs)
       .select(col("doc_id").as("src"),
         explode(array(lit(1L), lit(2L), lit(3L))).as("j"), col("n_nodes"))
       .filter(col("j") <= lit(1L) + pmod(col("src"), lit(3L)))
-      .select(col("src"),
-        pmod(col("src") * 31 + col("j") * 17 + 7, col("n_nodes")).as("dst"))
+      .select(col("src"), affineDst)
       .persist()
-    var a = docs.select(col("doc_id"), lit(hitsUnit).as("a"))
-    // only a's init participates (the twin defines only a0): h is
-    // assigned from hraw before first use in round 1
-    var h: DataFrame = null
-    for (_ <- 1 to hitsRounds) {
+    val a0 = docs.select(col("doc_id"), lit(hitsUnit).as("a"))
+    // only a's init participates (the twin defines only a0): each round
+    // derives h from the previous a before anything reads h
+    val (a, h) = graft.Fixpoint.run("gr_hits", (a0, null: DataFrame), hitsRounds) {
+        case (_, (a, _)) =>
       val hraw = edges.join(a.select(col("doc_id").as("dst"), col("a")), Seq("dst"))
         .groupBy("src").agg(sum(col("a")).as("raw"))
-      h = docs.join(hraw.select(col("src").as("doc_id"), col("raw")), Seq("doc_id"), "left")
+      val h = docs.join(hraw.select(col("src").as("doc_id"), col("raw")), Seq("doc_id"), "left")
         .crossJoin(broadcast(hraw.agg(sum(col("raw")).as("sh"))))
         .select(col("doc_id"), expr(s"coalesce(raw, 0L) * $hitsUnit DIV sh").as("h"))
         .localCheckpoint() // constant-size plan per round, the pr loop rule
       val araw = edges.join(h.select(col("doc_id").as("src"), col("h")), Seq("src"))
         .groupBy("dst").agg(sum(col("h")).as("raw"))
-      a = docs.join(araw.select(col("dst").as("doc_id"), col("raw")), Seq("doc_id"), "left")
+      ((docs.join(araw.select(col("dst").as("doc_id"), col("raw")), Seq("doc_id"), "left")
         .crossJoin(broadcast(araw.agg(sum(col("raw")).as("sa"))))
         .select(col("doc_id"), expr(s"coalesce(raw, 0L) * $hitsUnit DIV sa").as("a"))
-        .localCheckpoint()
-    }
+        .localCheckpoint(), h), false)
+    }.state
     h.join(a, Seq("doc_id"))
       .select(col("doc_id"), col("h").as("hub"), col("a").as("auth"))
       .orderBy("doc_id")

@@ -72,9 +72,7 @@ object RunCurate {
       // working relations (dd_spans' k-grams, dd_incremental's corpus);
       // release them so later artifacts don't run against a heap
       // pinned by earlier ones
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      org.apache.spark.sql.graft.PlanBridge.releaseAll(spark)
       name -> spark.read.parquet(s"$out/$name").count()
     }.toMap
   }

@@ -26,7 +26,16 @@ object YapScaleProbe {
     // kernel cost (KernelProfile) over more tasks than cores
     spark.conf.set("spark.sql.shuffle.partitions", "512")
 
-    val dir = "/tmp/yap_scale"
+    // a fresh directory per run, deleted at the end: the season is
+    // scratch input, and a fixed path would leave it behind
+    val dir = java.nio.file.Files.createTempDirectory("yap_scale").toString
+    try measure(spark, dir, nPlays)
+    finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    spark.stop()
+  }
+
+  private def measure(spark: org.apache.spark.sql.SparkSession, dir: String,
+      nPlays: Int): Unit = {
     val t0Gen = System.nanoTime()
     graft.pipelines.SyntheticSeason.tracking(spark, nPlays)
       .write.mode(SaveMode.Overwrite).parquet(s"$dir/tracking.parquet")
@@ -49,6 +58,5 @@ object YapScaleProbe {
     val withYap = yap.filter(!yap("YAP").isNull).count()
     println(f"EP1 YAP: $yapCount tackler rows ($withYap with YAP) in $yapSec%.1f s (${nPlays / yapSec}%.0f plays/s)")
     println(f"errors: ${errs.count()}")
-    spark.stop()
   }
 }

@@ -78,7 +78,26 @@ object PlanBridge {
   def releaseCheckpoint(df: org.apache.spark.sql.DataFrame): Unit =
     df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].queryExecution.logical
       .foreach {
-        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
+        case r: org.apache.spark.sql.execution.LogicalRDD => release(r.rdd)
         case _ =>
       }
+
+  /** The post-query release: drops every cached Dataset and every
+    * persisted RDD of the session, checkpoints included. Every frame
+    * built before the call must not be evaluated afterwards. */
+  def releaseAll(spark: org.apache.spark.sql.SparkSession): Unit = {
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(release)
+  }
+
+  /** Unpersist one RDD. A local checkpoint goes straight to the
+    * context: `RDD.unpersist` would log a WARN that its truncated
+    * lineage cannot be recomputed, once per checkpoint, which is the
+    * point of releasing it. A plain persisted RDD goes through
+    * `RDD.unpersist`, which also resets its storage level. */
+  private def release(rdd: org.apache.spark.rdd.RDD[_]): Unit =
+    if (rdd.checkpointData.exists(_.isInstanceOf[org.apache.spark.rdd.LocalRDDCheckpointData[_]]))
+      rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
+    else rdd.unpersist(blocking = false)
 }

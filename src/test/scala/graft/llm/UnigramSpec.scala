@@ -40,6 +40,13 @@ class UnigramSpec extends AnyFunSuite {
     assert(c2 == 16L && p2 == Seq("b", "a"))
   }
 
+  test("training clocks each of its 2 EM rounds under tok_unigram_train") {
+    graft.RoundClock.drain()
+    Unigram.queries("tok_unigram_train")(spark, sf)
+    val rs = graft.RoundClock.drain().map(r => (r.family, r.round))
+    assert(rs == Seq(("tok_unigram_train", 1), ("tok_unigram_train", 2)))
+  }
+
   test("trained vocab is structurally sound") {
     val v = Unigram.queries("tok_unigram_train")(spark, sf).collect()
     assert(v.nonEmpty)
