@@ -65,7 +65,7 @@ object Bench {
     // the queries that actually read the persisted IVF index (ADVICE
     // r17: startsWith("ann_") both missed st_ann_upsert/dd_semantic and
     // over-matched the non-IVF ann families in isolation runs) — the
-    // set is the ensureIvfIndex call-site inventory in Similarity.scala
+    // set is the ensureIvfIndexFor call-site inventory in Similarity.scala
     stage("ivf_index")(Set("ann_ivf", "ann_tune", "ann_ivf_pq",
       "ann_ivf_pq_recall", "ann_ivf_upsert", "ann_ivf_delete",
       "ann_filtered", "ann_filtered_recall", "ann_mrl", "ann_lifecycle",

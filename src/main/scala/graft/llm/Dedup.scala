@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.io.Artifacts
 import graft.io.Sources.table
 import graft.functions.Numeric.dround
 import graft.functions.{ArrayFns, TextHashes}
@@ -836,18 +837,6 @@ object Dedup {
       .orderBy("doc_id")
   }
 
-  /** On-disk incremental-dedup index location: the ivfIndexPath
-    * build-once/consult-many discipline, with the Layout injective-path
-    * fix (the sanitized dir string keys the output, not its hashCode —
-    * a collision would serve a different corpus's index). */
-  private def dedupIndexPath(d: String): String = {
-    val root = sys.env.getOrElse("SPARK_GRAFT_DEDUP_DIR", "/tmp/graft_dedup_index")
-    // v2 INTRODUCES the winnow relation (keyed by xxhash64 — 8-byte
-    // shuffle keys, never the fingerprint string); the version segment
-    // hides pre-winnow v1 artifacts instead of schema-mismatching them
-    s"$root/v2_${d.replaceAll("[^A-Za-z0-9._-]", "_")}"
-  }
-
   /** The corpus side of the incremental regime: everything not in
     * today's batch (doc_id ≡ 7 mod 10 models the arriving crawl). */
   private[graft] def incrCorpus(s: SparkSession, d: String): DataFrame =
@@ -871,8 +860,7 @@ object Dedup {
     * one full-corpus scan, completely different resource shape from
     * the per-batch probe), consulted by every arriving batch; the
     * query below never touches corpus TEXT again. */
-  private[graft] def dedupIndexBuild(s: SparkSession, d: String): String = {
-    val path = dedupIndexPath(d)
+  private[graft] def dedupIndexBuild(s: SparkSession, d: String, path: String): Unit = {
     val corpus = incrCorpus(s, d).persist()
     try {
       corpus.select(md5(col("text").cast("binary")).as("ch"), col("doc_id"))
@@ -905,57 +893,16 @@ object Dedup {
           graft.functions.TextHashes.cdcChunksCol(col("text"))).as("c"))
         .select(col("c.ch").as("ch")).distinct()
         .write.mode("overwrite").parquet(s"$path/chunks")
-      // Corpus fingerprint sidecar, written LAST (ADVICE r12): _SUCCESS
-      // alone would serve a stale index if the corpus at the same path
-      // were regenerated — the ensurePrEdgesBucketed staleness class.
-      // Last-write ordering means a crashed build leaves no sidecar and
-      // the next ensure rebuilds. Written through the Hadoop FS layer
-      // (ADVICE r13): the index parquet goes through Spark's FS, so a
-      // non-local SPARK_GRAFT_DEDUP_DIR scheme must land the sidecar on
-      // the SAME filesystem or every ensure would silently rebuild.
-      val out = hadoopFs(s, s"$path/_GRAFT_FINGERPRINT")
-      val os = out._1.create(out._2, true)
-      try os.write(VocabStore.fingerprint(d, "dedup_index")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally os.close()
     } finally corpus.unpersist(blocking = false)
-    path
   }
 
-  /** (FileSystem, Path) for a possibly-non-local path string, resolved
-    * against the session's Hadoop conf — the same resolution Spark's
-    * own parquet writes use, so sidecars land beside the data whatever
-    * the scheme. */
-  private def hadoopFs(s: SparkSession, p: String) = {
-    val hp = new org.apache.hadoop.fs.Path(p)
-    (hp.getFileSystem(s.sparkContext.hadoopConfiguration), hp)
-  }
-
-  /** Cross-package seam: the streaming indexed-dedup gate
-    * (st_dedup_indexed) probes the same persisted index. */
+  /** The index's location, built first unless trusted
+    * ([[graft.io.Artifacts]]: a corpus regenerated at the same path
+    * rebuilds rather than serve the previous corpus's relations to
+    * dd_substr_incr and st_substr). The streaming indexed-dedup gate
+    * (st_dedup_indexed) probes the same index. */
   private[graft] def ensureDedupIndexFor(s: SparkSession, d: String): String =
-    ensureDedupIndex(s, d)
-
-  private def ensureDedupIndex(s: SparkSession, d: String): String = {
-    val path = dedupIndexPath(d)
-    // trust = all three _SUCCESS markers AND the corpus manifest
-    // fingerprint recorded at build time still matching (ADVICE r12 —
-    // a corpus regenerated at the same path must rebuild, not serve
-    // the previous corpus's winnow/hashes/signatures to dd_substr_incr
-    // and st_substr); metadata-only check, never a data scan
-    val ok = Seq("hashes", "signatures", "winnow", "chunks").forall { p =>
-      val (fs, hp) = hadoopFs(s, s"$path/$p/_SUCCESS")
-      fs.exists(hp)
-    } && scala.util.Try {
-      val (fs, hp) = hadoopFs(s, s"$path/_GRAFT_FINGERPRINT")
-      val in = fs.open(hp)
-      try new String(org.apache.commons.io.IOUtils.toByteArray(in),
-        java.nio.charset.StandardCharsets.UTF_8).trim
-      finally in.close()
-    }.toOption.contains(VocabStore.fingerprint(d, "dedup_index"))
-    if (!ok) dedupIndexBuild(s, d)
-    path
-  }
+    Artifacts.ensure(s, Artifacts.DedupIndex, d)(dedupIndexBuild(s, d, _))
 
   /** Incremental dedup — the continuous-crawl production shape: a new
     * batch of documents (doc_id ≡ 7 mod 10) is deduplicated against
@@ -981,7 +928,7 @@ object Dedup {
     * verbatim and re-derives both layers independently; the near
     * layer's matches occur naturally (the corpus is near-dup-rich). */
   private val ddIncremental: Q = (s, d) => {
-    val idx = ensureDedupIndex(s, d)
+    val idx = ensureDedupIndexFor(s, d)
     val raw = table(s, d, "documents")
     val planted = col("doc_id") % 30 === 7
     // the PLANT is gate scaffolding, not algorithm: corpus text is read
@@ -1517,7 +1464,7 @@ object Dedup {
   // ingest independent of corpus re-chunking.
   // -------------------------------------------------------------------
   private val ddCdcIncr: Q = (s, d) => {
-    val idx = ensureDedupIndex(s, d)
+    val idx = ensureDedupIndexFor(s, d)
     val batch = table(s, d, "documents").filter(col("doc_id") % 10 === 7)
     val bc = batch.select(col("doc_id"),
         explode(graft.functions.TextHashes.cdcChunksCol(col("text"))).as("c"))
@@ -1661,7 +1608,7 @@ object Dedup {
   // hashes the batch side.
   // -------------------------------------------------------------------
   private val ddSubstrIncr: Q = (s, d) => {
-    val idx = ensureDedupIndex(s, d)
+    val idx = ensureDedupIndexFor(s, d)
     val raw = table(s, d, "documents")
     val planted = col("doc_id") % 30 === 7
     val donors = incrCorpus(s, d).select((col("doc_id") + 1).as("doc_id"),
@@ -1843,7 +1790,7 @@ object Dedup {
   // constant-width aggregates; the one scan is the chunk recompute.
   // -------------------------------------------------------------------
   private val dqRtbf: Q = (s, d) => {
-    val idx = ensureDedupIndex(s, d)
+    val idx = ensureDedupIndexFor(s, d)
     val delIds = incrCorpus(s, d).filter(col("doc_id") % 20 === 5)
       .select("doc_id")
     rtbfScrub(s, d, idx, s"$idx/rtbf", delIds)

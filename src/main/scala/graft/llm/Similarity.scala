@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.io.Artifacts
 import graft.io.Sources.table
 import graft.functions.Numeric.dround
 import graft.functions.ArrayFns
@@ -303,52 +304,33 @@ object Similarity {
     (assigned, centroids)
   }
 
-  /** On-disk IVF index location for a given corpus dir: FAISS-style
-    * build-once/probe-many (VERDICT r3 next-4 §3 — r3 refit the k-means
-    * inside every query, so the bench measured index BUILD, not probe).
-    * Keyed by the corpus path (basename + path hash): the driver's
-    * testdata is immutable per sf, so an existing index is valid;
-    * `ivfBuild` force-rebuilds for anything else (`tools.BuildIndex ivf`). */
-  private[llm] def ivfIndexPath(d: String): String = {
-    val root = sys.env.getOrElse("SPARK_GRAFT_IVF_DIR", "/tmp/graft_ivf")
-    s"$root/${new java.io.File(d).getName}-${math.abs(d.hashCode.toLong)}"
-  }
-
-  /** Build and persist the IVF index: assignments (vec_id, cl, ve — the
-    * vectors live IN the index, IVF-flat) and the k centroids. One
-    * ml.KMeans job + two parquet writes; at 100 TB this is the separate
-    * index-build job, co-partitioned with the corpus, run once. */
-  private[graft] def ivfBuild(s: SparkSession, d: String): String = {
-    val path = ivfIndexPath(d)
+  /** Build the IVF index into `path` (FAISS-style build-once/
+    * probe-many — VERDICT r3 next-4 §3: r3 refit the k-means inside
+    * every query, so the bench measured index BUILD, not probe):
+    * assignments (vec_id, cl, ve — the vectors live IN the index,
+    * IVF-flat) and the k centroids. One ml.KMeans job + two parquet
+    * writes; at 100 TB this is the separate index-build job,
+    * co-partitioned with the corpus, run once (`tools.BuildIndex ivf`). */
+  private[graft] def ivfBuild(s: SparkSession, d: String, path: String): Unit = {
     val emb = table(s, d, "embeddings").select(col("vec_id"), asDouble.as("ve"))
     val (assigned, centroids) = ivfIndex(s, emb)
     assigned.write.mode("overwrite").parquet(s"$path/assignments")
     centroids.write.mode("overwrite").parquet(s"$path/centroids")
-    path
   }
 
-  private def ensureIvfIndex(s: SparkSession, d: String): String = {
-    val path = ivfIndexPath(d)
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$path/centroids/_SUCCESS")))
-      ivfBuild(s, d)
-    path
-  }
-
-  /** Cross-package seams for the streaming index-maintenance gate
-    * (st_ann_upsert): the persisted index plus the constants its
-    * oracle must mirror. */
+  /** The persisted indexes' locations, each built first unless trusted
+    * ([[graft.io.Artifacts]]). Bench also calls them before the timed
+    * passes, so a fresh host's pass 1 never pays a build inside a
+    * query's timing; the streaming index-maintenance gate
+    * (st_ann_upsert) probes the same IVF index. */
   private[graft] def ensureIvfIndexFor(s: SparkSession, d: String): String =
-    ensureIvfIndex(s, d)
-  // prestage seams (VERDICT r16 next §3): Bench materializes every
-  // lazily-built persisted index BEFORE the timed passes and prices
-  // the builds on their own artifact line, so a fresh host's pass 1
-  // never pays a build inside a query's timing
+    Artifacts.ensure(s, Artifacts.Ivf, d)(ivfBuild(s, d, _))
   private[graft] def ensurePqIndexFor(s: SparkSession, d: String): String =
-    ensurePqIndex(s, d)
+    Artifacts.ensure(s, Artifacts.Pq, d)(pqBuild(s, d, _))
   private[graft] def ensureIvfPqIndexFor(s: SparkSession, d: String): String =
-    ensureIvfPqIndex(s, d)
+    Artifacts.ensure(s, Artifacts.IvfPq, d)(ivfPqBuild(s, d, _))
   private[graft] def ensureNswIndexFor(s: SparkSession, d: String): String =
-    ensureNswIndex(s, d)
+    Artifacts.ensure(s, Artifacts.Nsw, d)(nswBuild(s, d, _))
   private[graft] def upsertConsts: (Long, Long, Int, Int, Int) =
     (plantN.toLong, upsertOffset, nProbes, ivfNProbe, kNeighbors)
   /** NSW engine tuning (minShards, M, efBuild, efSearch) for specs
@@ -376,7 +358,7 @@ object Similarity {
     * (qid, cid, sim) exact cosines against index rows in each probe's
     * np nearest cells of the persisted index. */
   private def ivfSims(s: SparkSession, d: String, np: Int): DataFrame = {
-    val idx = ensureIvfIndex(s, d)
+    val idx = ensureIvfIndexFor(s, d)
     val assigned = s.read.parquet(s"$idx/assignments")
     val centroids = s.read.parquet(s"$idx/centroids")
     val probes = table(s, d, "embeddings").select(col("vec_id"), asDouble.as("ve"))
@@ -494,12 +476,6 @@ object Similarity {
     }.reduce(_ unionByName _)
   }
 
-  /** On-disk PQ codebook location — the ivfIndexPath discipline
-    * (VERDICT r3 next-4 §3: an in-query fit benches index BUILD, not
-    * the operator): training is the separate build-once job, the
-    * query encodes against the persisted 128-row codebook. */
-  private def pqIndexPath(d: String): String = ivfIndexPath(d) + "-pq"
-
   /** Per-vector PQ assignment against a codebook: one row per vector
     * with its 8 block codes (block order) and the 8 per-block squared
     * reconstruction errors (same order). The argmin is our codegen'd
@@ -532,9 +508,9 @@ object Similarity {
     * memory. Training is a sampled k-means job; encoding is one
     * map-side broadcast-join pass over everything (completely different
     * resource shapes at 100 TB — which is why this is a separate
-    * build tool, not query work). */
-  private[graft] def pqBuild(s: SparkSession, d: String): String = {
-    val path = pqIndexPath(d)
+    * build tool, not query work); the query encodes against the
+    * persisted 128-row codebook. */
+  private[graft] def pqBuild(s: SparkSession, d: String, path: String): Unit = {
     // persisted across the 8 per-block fits — each KMeans otherwise
     // re-scans and re-projects the embeddings table from parquet
     val emb = table(s, d, "embeddings")
@@ -553,15 +529,6 @@ object Similarity {
         .select("vec_id", "codes", "nrm")
         .write.mode("overwrite").parquet(s"$path/codes")
     } finally emb.unpersist(blocking = false)
-    path
-  }
-
-  private def ensurePqIndex(s: SparkSession, d: String): String = {
-    val path = pqIndexPath(d)
-    val ok = Seq("codebooks", "codes").forall(p =>
-      java.nio.file.Files.exists(java.nio.file.Paths.get(s"$path/$p/_SUCCESS")))
-    if (!ok) pqBuild(s, d)
-    path
   }
 
   /** PQ encode, gated: the query dumps the trained codebooks as a
@@ -575,7 +542,7 @@ object Similarity {
     val emb = table(s, d, "embeddings")
       .filter(size(col("embedding")) === pqBlocks * pqDim)
       .select(col("vec_id"), asDouble.as("ve"))
-    val codebook = s.read.parquet(s"${ensurePqIndex(s, d)}/codebooks").persist()
+    val codebook = s.read.parquet(s"${ensurePqIndexFor(s, d)}/codebooks").persist()
     graft.io.Sinks.dumpFixture(codebook, "pq_codebooks")
     // recon_err folds the per-block errors in BLOCK order: a plain
     // sum() merges doubles in partition-dependent order, and a
@@ -646,7 +613,7 @@ object Similarity {
   }
 
   private val annPq: Q = (s, d) => {
-    val idx = ensurePqIndex(s, d)
+    val idx = ensurePqIndexFor(s, d)
     val codebook = s.read.parquet(s"$idx/codebooks")
     val codes = s.read.parquet(s"$idx/codes")
     val emb = table(s, d, "embeddings").select(col("vec_id"), asDouble.as("ve"))
@@ -677,23 +644,12 @@ object Similarity {
     * layout. Each cell directory IS one inverted list of 4-bit codes;
     * at 100 TB the routing join below prunes to nProbe/nlist of the
     * FILES, not just the rows. Build-once like its two parents. */
-  private def ivfPqIndexPath(d: String): String = ivfIndexPath(d) + "-ivfpq"
-
-  private[graft] def ivfPqBuild(s: SparkSession, d: String): String = {
-    val path = ivfPqIndexPath(d)
-    val assigned = s.read.parquet(s"${ensureIvfIndex(s, d)}/assignments")
-    val codes = s.read.parquet(s"${ensurePqIndex(s, d)}/codes")
+  private[graft] def ivfPqBuild(s: SparkSession, d: String, path: String): Unit = {
+    val assigned = s.read.parquet(s"${ensureIvfIndexFor(s, d)}/assignments")
+    val codes = s.read.parquet(s"${ensurePqIndexFor(s, d)}/codes")
     codes.join(assigned.select("vec_id", "cl"), Seq("vec_id"))
       .select("cl", "vec_id", "codes", "nrm")
       .write.mode("overwrite").partitionBy("cl").parquet(s"$path/cells")
-    path
-  }
-
-  private def ensureIvfPqIndex(s: SparkSession, d: String): String = {
-    val path = ivfPqIndexPath(d)
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$path/cells/_SUCCESS")))
-      ivfPqBuild(s, d)
-    path
   }
 
   /** The composed IVF∘PQ serving path — cell routing AND table-lookup
@@ -710,9 +666,9 @@ object Similarity {
     * oracle-recomputable, so the compare is hash-gated; recall vs the
     * exact baseline is pinned by [[annIvfPqRecall]]. */
   private val annIvfPq: Q = (s, d) => {
-    val cells = s.read.parquet(s"${ensureIvfPqIndex(s, d)}/cells")
-    val centroids = s.read.parquet(s"${ensureIvfIndex(s, d)}/centroids")
-    val codebook = s.read.parquet(s"${ensurePqIndex(s, d)}/codebooks")
+    val cells = s.read.parquet(s"${ensureIvfPqIndexFor(s, d)}/cells")
+    val centroids = s.read.parquet(s"${ensureIvfIndexFor(s, d)}/centroids")
+    val codebook = s.read.parquet(s"${ensurePqIndexFor(s, d)}/codebooks")
     val emb = table(s, d, "embeddings").select(col("vec_id"), asDouble.as("ve"))
     val probes = emb.filter(col("vec_id") < nProbes)
       .select(col("vec_id").as("qid"), col("ve").as("qe"))
@@ -952,9 +908,7 @@ object Similarity {
       }.toDF("qid", "cid")
   }
 
-  /** On-disk NSW graph location — the ivfIndexPath discipline. */
-  private def nswIndexPath(d: String): String = ivfIndexPath(d) + "-nsw"
-  private[graft] def nswIndexPathFor(d: String): String = nswIndexPath(d)
+  private[graft] def nswIndexPathFor(d: String): String = Artifacts.path(Artifacts.Nsw, d)
 
   /** Build and PERSIST the per-shard NSW graphs (VERDICT r14 next §3 —
     * ann_nsw's gate owns the whole index lifecycle, so its 100× probe
@@ -968,9 +922,8 @@ object Similarity {
     * memory-resident graph, nothing shuffles but the one sharding
     * exchange, and the output is a plain columnar relation any serve
     * job can re-group. */
-  private[graft] def nswBuild(s: SparkSession, d: String): String = {
+  private[graft] def nswBuild(s: SparkSession, d: String, path: String): Unit = {
     import s.implicits._
-    val path = nswIndexPath(d)
     val emb = table(s, d, "embeddings").select(col("vec_id"), asDouble.as("ve"))
     val n = emb.count()
     val shards = nswShardsFor(n, s.sparkContext.defaultParallelism)
@@ -995,25 +948,6 @@ object Similarity {
     // size that chose it may have moved by then
     Seq((shards, n)).toDF("n_shards", "n_vectors")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-    path
-  }
-
-  private def ensureNswIndex(s: SparkSession, d: String): String = {
-    import s.implicits._
-    val path = nswIndexPath(d)
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$path/graph/_SUCCESS")))
-      nswBuild(s, d)
-    else if (!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$path/meta/_SUCCESS"))) {
-      // pre-policy index on disk: backfill the meta from the stored rows
-      // (max shard + 1 is exact there — the historical count was the
-      // fixed 8 and every gated corpus populates all 8) rather than
-      // paying a rebuild for a metadata gap
-      val g = s.read.parquet(s"$path/graph")
-        .agg(max(col("shard")), count(lit(1))).head
-      Seq((g.getInt(0) + 1, g.getLong(1))).toDF("n_shards", "n_vectors")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-    }
-    path
   }
 
   /** The persisted graph's routing shard count — index metadata, so an
@@ -1021,7 +955,7 @@ object Similarity {
   private def nswMetaShards(s: SparkSession, path: String): Int =
     s.read.parquet(s"$path/meta").select("n_shards").head.getInt(0)
   private[graft] def nswShardCountFor(s: SparkSession, d: String): Int =
-    nswMetaShards(s, ensureNswIndex(s, d))
+    nswMetaShards(s, ensureNswIndexFor(s, d))
 
   /** Serve-only NSW candidates over the PERSISTED graph: re-group the
     * index rows by shard (groupByKey — the stored shard id, NOT a fresh
@@ -1031,7 +965,7 @@ object Similarity {
     * probe-only discipline. */
   private def nswServeCandidates(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val idx = ensureNswIndex(s, d)
+    val idx = ensureNswIndexFor(s, d)
     val emb = table(s, d, "embeddings").select(col("vec_id"), asDouble.as("ve"))
     val bProbes = nswProbes(s, emb)
     s.read.parquet(s"$idx/graph")
@@ -1056,7 +990,7 @@ object Similarity {
     * when batch ids arrive in id order across triggers (asserted in
     * StNswUpsertSpec). */
   private[graft] def nswBaseGraph(s: SparkSession, d: String): DataFrame = {
-    val idx = ensureNswIndex(s, d)
+    val idx = ensureNswIndexFor(s, d)
     s.read.parquet(s"$idx/graph")
   }
 
@@ -1175,7 +1109,7 @@ object Similarity {
     * not just the ranking. */
   private val annNswFiltered: Q = (s, d) => {
     import s.implicits._
-    val idx = ensureNswIndex(s, d)
+    val idx = ensureNswIndexFor(s, d)
     val nShards = nswMetaShards(s, idx)
     val emb = table(s, d, "embeddings")
     val probes = emb.filter(col("vec_id") < nProbes)
@@ -1296,7 +1230,7 @@ object Similarity {
     * preserved node set, and the untouched live index. */
   private val annNswReshard: Q = (s, d) => {
     import s.implicits._
-    val idx = ensureNswIndex(s, d)
+    val idx = ensureNswIndexFor(s, d)
     val graph = s.read.parquet(s"$idx/graph")
     val target = nswMetaShards(s, idx) * 2
     nswReshard(s, graph, target)
@@ -1451,7 +1385,7 @@ object Similarity {
     * rerank joins candidates against corpus ∪ batch vectors. */
   private val annNswUpsert: Q = (s, d) => {
     import s.implicits._
-    val idx = ensureNswIndex(s, d)
+    val idx = ensureNswIndexFor(s, d)
     val emb = table(s, d, "embeddings").select(col("vec_id"), asDouble.as("ve"))
     val batch = emb.filter(col("vec_id") < plantN)
       .select((col("vec_id") + upsertOffset).as("vec_id"),
@@ -1511,7 +1445,7 @@ object Similarity {
     * soundness, membership change, and exact top-k equality with a
     * from-scratch rebuild over the live vectors. */
   private val annNswDelete: Q = (s, d) => {
-    val idx = ensureNswIndex(s, d)
+    val idx = ensureNswIndexFor(s, d)
     val emb = table(s, d, "embeddings").select(col("vec_id"), asDouble.as("ve"))
     val cands = nswServeLiveCandsOn(s, d, s.read.parquet(s"$idx/graph"),
       id => !tombstonedId(id)).persist()
@@ -1544,7 +1478,7 @@ object Similarity {
     * fixture. */
   private val annNswLifecycle: Q = (s, d) => {
     import s.implicits._
-    val idx = ensureNswIndex(s, d)
+    val idx = ensureNswIndexFor(s, d)
     val emb = table(s, d, "embeddings").select(col("vec_id"), asDouble.as("ve"))
     val batch = emb.filter(col("vec_id") < plantN)
       .select((col("vec_id") + upsertOffset).as("vec_id"),
@@ -1600,7 +1534,7 @@ object Similarity {
     * NswCompactSpec's: the identical mark-delete beam over pre and
     * post graphs returns the same candidates. */
   private val annNswCompact: Q = (s, d) => {
-    val idx = ensureNswIndex(s, d)
+    val idx = ensureNswIndexFor(s, d)
     val pre = s.read.parquet(s"$idx/graph")
     graft.io.Sinks.dumpFixture(
       pre.select(col("shard"), col("vec_id")), "annnswcompact_pre")
@@ -1665,9 +1599,9 @@ object Similarity {
         w.count(),
         w.join(broadcast(delIds), Seq("vec_id"), "left_semi").count())
     }
-    val ivf = ensureIvfIndex(s, d)
-    val pq = ensurePqIndex(s, d)
-    val nsw = ensureNswIndex(s, d)
+    val ivf = ensureIvfIndexFor(s, d)
+    val pq = ensurePqIndexFor(s, d)
+    val nsw = ensureNswIndexFor(s, d)
     val a = scrubFlat(s.read.parquet(s"$ivf/assignments"), s"$ivf/rtbf/assignments")
     val p = scrubFlat(s.read.parquet(s"$pq/codes"), s"$pq/rtbf/codes")
     val graph = s.read.parquet(s"$nsw/graph")
@@ -1801,7 +1735,7 @@ object Similarity {
     // per setting (4 scans, 16 jobs); it is now one scan, one window,
     // two census aggregations. Per-setting rows identical (AnnTuneSpec
     // + the oracle gate pin the table).
-    val idx = ensureIvfIndex(s, d)
+    val idx = ensureIvfIndexFor(s, d)
     val assigned = s.read.parquet(s"$idx/assignments")
     val centroids = s.read.parquet(s"$idx/centroids")
     val probes = table(s, d, "embeddings").select(col("vec_id"), asDouble.as("ve"))
@@ -1858,7 +1792,7 @@ object Similarity {
   // a recall row against the label-constrained exact baseline.
   // -------------------------------------------------------------------
   private val annFiltered: Q = (s, d) => {
-    val idx = ensureIvfIndex(s, d)
+    val idx = ensureIvfIndexFor(s, d)
     val assigned = s.read.parquet(s"$idx/assignments")
     val centroids = s.read.parquet(s"$idx/centroids")
     val lab = table(s, d, "embeddings").select(col("vec_id"), col("label"))
@@ -1931,7 +1865,7 @@ object Similarity {
   // -------------------------------------------------------------------
   private val upsertOffset = 2000000L
   private val annIvfUpsert: Q = (s, d) => {
-    val idx = ensureIvfIndex(s, d)
+    val idx = ensureIvfIndexFor(s, d)
     val assigned = s.read.parquet(s"$idx/assignments")
     val centroids = s.read.parquet(s"$idx/centroids")
     val emb = table(s, d, "embeddings").select(col("vec_id"), asDouble.as("ve"))
@@ -1998,7 +1932,7 @@ object Similarity {
   private[graft] def tombstonedIdFor(id: Long): Boolean = tombstonedId(id)
 
   private val annIvfDelete: Q = (s, d) => {
-    val idx = ensureIvfIndex(s, d)
+    val idx = ensureIvfIndexFor(s, d)
     val assigned = s.read.parquet(s"$idx/assignments")
     val centroids = s.read.parquet(s"$idx/centroids")
     val emb = table(s, d, "embeddings").select(col("vec_id"), asDouble.as("ve"))
@@ -2043,7 +1977,7 @@ object Similarity {
   private val mrlDims = 16
   private val mrlShortlist = 10
   private val annMrl: Q = (s, d) => {
-    val idx = ensureIvfIndex(s, d)
+    val idx = ensureIvfIndexFor(s, d)
     val assigned = s.read.parquet(s"$idx/assignments")
     val centroids = s.read.parquet(s"$idx/centroids")
     val emb = table(s, d, "embeddings").select(col("vec_id"), asDouble.as("ve"))
@@ -2100,7 +2034,7 @@ object Similarity {
   // baseline for the composed state.
   // -------------------------------------------------------------------
   private val annLifecycle: Q = (s, d) => {
-    val idx = ensureIvfIndex(s, d)
+    val idx = ensureIvfIndexFor(s, d)
     val assigned = s.read.parquet(s"$idx/assignments")
     val centroids = s.read.parquet(s"$idx/centroids")
     val embT = table(s, d, "embeddings")
@@ -2203,7 +2137,7 @@ object Similarity {
   // -------------------------------------------------------------------
   private val semThr = 0.3
   private val ddSemantic: Q = (s, d) => {
-    val idx = ensureIvfIndex(s, d)
+    val idx = ensureIvfIndexFor(s, d)
     val assigned = s.read.parquet(s"$idx/assignments").persist()
     graft.io.Sinks.dumpFixture(assigned.select("vec_id", "cl"), "ddsem_assign")
     val a = assigned.select(col("cl"), col("vec_id").as("aid"), col("ve").as("ae"))

@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanBridge
 import graft.functions.Numeric.dround
 import graft.io.Sources.table
 
@@ -131,14 +132,15 @@ object Unigram {
     withCosts(chars.unionByName(multi)).localCheckpoint()
   }
 
-  /** The full init + EM loop over an explicit (word, n) relation. */
+  /** The full init + EM loop over an explicit (word, n) relation. Each
+    * round's vocabulary is released once the next one is checkpointed. */
   private def trainOn(words: DataFrame): DataFrame =
     graft.Fixpoint.run("tok_unigram_train", initVocab(words).localCheckpoint(), R) {
-      (_, v) => (emRound(words, v), false)
+      (_, v) =>
+        val next = emRound(words, v)
+        PlanBridge.releaseCheckpoint(v)
+        (next, false)
     }.state
-
-  private def trainVocab(s: SparkSession, d: String): DataFrame =
-    trainOn(wordCounts(table(s, d, "documents").select("text")).localCheckpoint())
 
   /** Trained-vocab cache per corpus dir (the Bpe.trainedVocab rule:
     * plain rows, vocabulary-bounded, survive checkpoint hygiene),
@@ -172,7 +174,12 @@ object Unigram {
   /** Train, refresh both cache tiers, return the vocab relation. */
   private def retrain(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val r = collectVocab(trainVocab(s, d))
+    val words = wordCounts(table(s, d, "documents").select("text")).localCheckpoint()
+    val v = trainOn(words)
+    val r = try collectVocab(v) finally {
+      PlanBridge.releaseCheckpoint(words)
+      PlanBridge.releaseCheckpoint(v)
+    }
     trained.put(vocabKey(s, d), r)
     val df = r.toSeq.toDF("piece", "len", "cnt", "cost_q")
     VocabStore.write(d, "unigram", df, vocabMeta(s))

@@ -1,95 +1,49 @@
 package graft.llm
 
-import java.nio.file.{Files, Paths}
 import scala.util.Try
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.io.Artifacts
 
 /** On-disk trained-tokenizer artifact store (VERDICT r9 next §2): the
   * in-process vocab caches in [[Bpe]] and [[Unigram]] die with the
   * JVM, so a fresh process re-trained before its first encode — no
-  * production system retrains to tokenize. The FAISS-style
-  * build-once/probe-many rule from [[Similarity.ivfIndexPath]] applied
-  * to vocabularies: one parquet artifact per (family, corpus dir).
-  * At 100 TB this is the tokenizer-training job's output table that
-  * every downstream encode stage broadcasts.
+  * production system retrains to tokenize. One parquet artifact per
+  * (family, corpus dir), keyed, versioned and trusted by
+  * [[graft.io.Artifacts]]; `meta` carries trainer knobs that change
+  * the artifact's content without changing the corpus (the top-V
+  * vocab cap). At 100 TB this is the tokenizer-training job's output
+  * table that every downstream encode stage broadcasts.
   *
-  * Trust model (ADVICE r10, medium): an artifact is only as good as
-  * the corpus + trainer that produced it, so every write records a
-  * sidecar fingerprint — trainer version, family, canonical corpus
-  * path, and the (name, size, mtime) manifest of every corpus file —
-  * plus the artifact's own row count. A read re-derives the
-  * fingerprint and validates both before trusting the artifact;
-  * ANY mismatch (regenerated corpus, changed trainer, foreign or
-  * truncated artifact, basename/hash collision between corpora)
-  * returns None and the caller falls back to retraining. The manifest
-  * listing is metadata-only — no corpus bytes are read — so
-  * validation stays O(files), never O(data). */
+  * Beyond the artifact rule, the seal records the artifact's own row
+  * count and a read checks it, so a truncated artifact reads as absent
+  * and the caller retrains. */
 object VocabStore {
-  /** Bump whenever trainer semantics change: stale artifacts from an
-    * older trainer then fail fingerprint validation and retrain. */
-  private val trainerVersion = 2
+  def path(d: String, family: String): String = Artifacts.path(Artifacts.vocab(family), d)
 
-  private def root = sys.env.getOrElse("SPARK_GRAFT_VOCAB_DIR", "/tmp/graft_vocab")
-
-  def path(d: String, family: String): String =
-    s"$root/$family-${new java.io.File(d).getName}-${math.abs(d.hashCode.toLong)}"
-
-  /** Corpus fingerprint: md5 over trainer version, family, the FULL
-    * canonical corpus path (kills basename+hashCode collisions), and
-    * the sorted (relative path, length, mtime) manifest of every file
-    * under the corpus dir (two levels — parquet table dirs hold their
-    * part files one level down). Regenerating any corpus table changes
-    * sizes/mtimes and invalidates the artifact. */
-  private[graft] def fingerprint(d: String, family: String,
-      meta: String = ""): String = {
-    val dir = new java.io.File(d)
-    def list(f: java.io.File): Array[java.io.File] =
-      Option(f.listFiles()).getOrElse(Array.empty)
-    val files = list(dir).flatMap { f =>
-      if (f.isDirectory) list(f) else Array(f)
-    }.sortBy(_.getPath)
-      .map(f => s"${f.getName}|${f.length}|${f.lastModified}")
-    // meta carries trainer knobs that change artifact CONTENT without
-    // changing the corpus — e.g. the top-V vocab cap (VERDICT r14 next
-    // §5): an artifact truncated under one cap must not serve an
-    // encode session running another
-    val payload =
-      s"v$trainerVersion|$family|$meta|${Try(dir.getCanonicalPath).getOrElse(d)}|" +
-        files.mkString(";")
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(payload.getBytes("UTF-8")).map("%02x".format(_)).mkString
-  }
-
-  private def sidecar(p: String) = Paths.get(s"$p/_GRAFT_FINGERPRINT")
-
-  /** Persist a trained vocabulary (vocabulary-sized — one small file)
-    * with its corpus fingerprint + row count sidecar. The sidecar is
-    * written LAST, after the parquet commit, so a crash mid-write
-    * leaves an artifact without a valid sidecar — which reads as
-    * absent, never as trusted. */
+  /** Persist a trained vocabulary (vocabulary-sized — one small file),
+    * sealed with its corpus fingerprint and row count. */
   def write(d: String, family: String, vocab: DataFrame,
       meta: String = ""): Unit = {
+    val s = vocab.sparkSession
     val p = path(d, family)
-    vocab.coalesce(1).write.mode("overwrite").parquet(p)
-    val n = vocab.sparkSession.read.parquet(p).count()
-    Files.writeString(sidecar(p), s"${fingerprint(d, family, meta)}|$n")
+    Artifacts.rebuild(s, p, Artifacts.fingerprint(d, Artifacts.vocab(family).kind, meta)) {
+      vocab.coalesce(1).write.mode("overwrite").parquet(p)
+      s.read.parquet(p).count().toString
+    }
   }
 
-  /** Read back a persisted vocabulary IF its sidecar fingerprint
-    * matches the current corpus + trainer and its row count matches
-    * the recorded one; None (→ caller retrains) otherwise. Corrupt or
-    * unreadable artifacts also read as None via the Try. */
+  /** Read back a persisted vocabulary IF it is trusted and its row
+    * count matches the sealed one; None (→ caller retrains) otherwise.
+    * Corrupt or unreadable artifacts also read as None via the Try. */
   def read(s: SparkSession, d: String, family: String,
       meta: String = ""): Option[DataFrame] = {
+    val kind = Artifacts.vocab(family).kind
     val p = path(d, family)
-    if (!Files.exists(Paths.get(s"$p/_SUCCESS")) || !Files.exists(sidecar(p))) None
-    else Try {
-      val Array(fp, n) = Files.readString(sidecar(p)).trim.split('|')
-      if (fp != fingerprint(d, family, meta)) None
-      else {
+    Artifacts.sealedNote(s, p, kind.parts, Artifacts.fingerprint(d, kind, meta)).flatMap { n =>
+      Try {
         val df = s.read.parquet(p)
         if (df.count() == n.toLong) Some(df) else None
-      }
-    }.toOption.flatten
+      }.toOption.flatten
+    }
   }
 }

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.io.Artifacts
 import graft.io.Sources.table
 
 /** Z-order (Morton-curve) data layout — the multi-dimension scan-
@@ -175,15 +176,9 @@ object Layout {
   // -------------------------------------------------------------------
   private val compactTargetBytes = 512L * 1024
   private val fsCompact: Q = (s, d) => {
-    // Working-dir key: sanitized basename PLUS a hash of the raw path
-    // (the ivfIndexPath precedent) so distinct datasets like 'a/b' and
-    // 'a_b' cannot collide after sanitization, and the root is
-    // pid-scoped (the StreamQueries checkpoint discipline) so two
-    // concurrent JVMs compacting the same dataset never read each
-    // other's half-overwritten fragment/compacted copies.
-    val key = d.replaceAll("[^A-Za-z0-9._-]", "_") +
-      f"_${d.hashCode & 0x7fffffff}%08x"
-    val root = s"/tmp/graft_compact/pid_${ProcessHandle.current().pid()}/$key"
+    // per-process working dir, so two concurrent JVMs compacting the
+    // same dataset never read each other's half-overwritten copies
+    val root = s"${Artifacts.scratch("/tmp/graft_compact")}/${Artifacts.key(d)}"
     val frag = s"$root/events_fragmented.parquet"
     val out = s"$root/events_compacted.parquet"
     table(s, d, "events").repartition(64).write.mode("overwrite").parquet(frag)

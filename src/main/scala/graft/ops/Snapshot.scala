@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.Numeric.dround
+import graft.io.Artifacts
 import graft.io.Sources.table
 
 /** Manifest-versioned table snapshots — the Iceberg/Delta time-travel
@@ -36,9 +37,8 @@ object Snapshot {
   private def isDelta = pmod(col("event_id"), lit(10L)) === 0L
 
   private[graft] def snapRoot(d: String): String = {
-    val root = sys.env.getOrElse("SPARK_GRAFT_SNAP_DIR", "/tmp/graft_snap")
-    s"$root/pid_${ProcessHandle.current().pid()}/" +
-      s"${new java.io.File(d).getName}-${math.abs(d.hashCode.toLong)}"
+    val base = sys.env.getOrElse("SPARK_GRAFT_SNAP_DIR", "/tmp/graft_snap")
+    s"${Artifacts.scratch(base)}/${Artifacts.key(d)}"
   }
 
   private def manifestPath(root: String, v: Int) = s"$root/manifest/v$v.json"

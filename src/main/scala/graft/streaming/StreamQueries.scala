@@ -35,23 +35,18 @@ object StreamQueries {
   // -------------------------------------------------------------------
 
   /** All streaming scratch (state-store checkpoints + the parquet sink
-    * roots) lives on tmpfs: every micro-batch commits offset log +
-    * per-partition state snapshots as FILES, and on the virtual disk
-    * that per-batch fsync traffic — not the operators — dominated the
-    * gates (the spark.local.dir lesson applied to streaming state).
-    * pid-scoped so concurrent graft processes never race (ADVICE r6),
-    * with a sweep that reclaims roots left by DEAD pids — tmpfs is RAM,
-    * so unlike the /tmp era the leak would be memory. */
-  private val shmRoot = "/dev/shm/graft_stream"
-  private lazy val pidRoot: String = {
-    val self = ProcessHandle.current().pid()
-    Option(new java.io.File(shmRoot).listFiles()).foreach(_.foreach { f =>
-      val pid = f.getName.stripPrefix("pid_").takeWhile(_.isDigit)
-      val stale = pid.nonEmpty && pid.toLong != self &&
-        !ProcessHandle.of(pid.toLong).map[Boolean](_.isAlive).orElse(false)
-      if (stale) org.apache.commons.io.FileUtils.deleteQuietly(f)
-    })
-    s"$shmRoot/pid_$self"
+    * roots): every micro-batch commits offset log + per-partition state
+    * snapshots as FILES, and on the virtual disk that per-batch fsync
+    * traffic — not the operators — dominated the gates. So it lives
+    * under the first directory of the session's `spark.local.dir`
+    * (tmpfs unless `SPARK_LOCAL_DIRS` says otherwise, see
+    * [[graft.GraftSession]]), in this process's scratch root: two
+    * graft processes never race, and roots left by dead processes are
+    * reclaimed ([[graft.io.Artifacts.scratch]]). */
+  private[graft] def pidRoot: String = {
+    val local = SparkSession.active.sparkContext.getConf
+      .get("spark.local.dir", System.getProperty("java.io.tmpdir"))
+    graft.io.Artifacts.scratch(local.split(",").head.trim)
   }
 
   /** Per-invocation checkpoint dir for a memory-sink gate; caller

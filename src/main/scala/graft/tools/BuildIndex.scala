@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 import graft.GraftSession
+import graft.io.Artifacts
 import graft.llm.{Dedup, Similarity}
 
 /** Explicit out-of-band build of one persisted index over `<sfDir>`.
@@ -9,8 +10,9 @@ import graft.llm.{Dedup, Similarity}
   * because at 100 TB an index build (a full-corpus scan, a sampled
   * k-means fit or a per-shard graph build, run once per corpus
   * version) and the per-query probe have completely different resource
-  * shapes — and so that an operator can force-rebuild a stale index for
-  * a changed corpus directory.
+  * shapes — and so that an operator can force-rebuild an index. The
+  * rebuild is sealed like a first-touch build ([[graft.io.Artifacts]]),
+  * so the next query trusts it.
   *
   *   ivf   — IVF coarse quantizer + assignments over embeddings.parquet
   *           (probed by `ann_ivf` and its family)
@@ -23,21 +25,21 @@ import graft.llm.{Dedup, Similarity}
   * Usage: runMain graft.tools.BuildIndex <ivf|pq|nsw|dedup> <sfDir>
   */
 object BuildIndex {
-  private val builders: Map[String, (SparkSession, String) => String] = Map(
-    "ivf" -> Similarity.ivfBuild,
-    "pq" -> Similarity.pqBuild,
-    "nsw" -> Similarity.nswBuild,
-    "dedup" -> Dedup.dedupIndexBuild)
+  private val builders: Map[String, (Artifacts.Store, (SparkSession, String, String) => Unit)] = Map(
+    "ivf" -> (Artifacts.Ivf, Similarity.ivfBuild),
+    "pq" -> (Artifacts.Pq, Similarity.pqBuild),
+    "nsw" -> (Artifacts.Nsw, Similarity.nswBuild),
+    "dedup" -> (Artifacts.DedupIndex, Dedup.dedupIndexBuild))
 
   def main(args: Array[String]): Unit = {
     val kinds = builders.keys.toSeq.sorted.mkString("|")
     require(args.length == 2, s"usage: BuildIndex <$kinds> <sfDir>")
     val Array(kind, sfDir) = args
-    val build = builders.getOrElse(kind, throw new IllegalArgumentException(
+    val (artifact, build) = builders.getOrElse(kind, throw new IllegalArgumentException(
       s"unknown index kind '$kind'; accepted: ${kinds.replace("|", ", ")}"))
     val spark = GraftSession()
     val t0 = System.nanoTime()
-    val path = build(spark, sfDir)
+    val path = Artifacts.build(spark, artifact, sfDir)(build(spark, sfDir, _))
     println(f"[build-index] $kind $path built in ${(System.nanoTime() - t0) / 1e9}%.2f s")
     spark.stop()
   }

@@ -36,8 +36,7 @@ class IncrementalDedupSpec extends AnyFunSuite {
     // the dedup layers must PROBE the persisted index, not recompute
     // corpus hashes/signatures from text (VERDICT r6 §3): the build
     // artifacts exist on disk and the executed plan scans them
-    val key = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    val idx = s"/tmp/graft_dedup_index/v2_$key" // v2: long-keyed winnow relation
+    val idx = graft.io.Artifacts.path(graft.io.Artifacts.DedupIndex, dir)
     for (p <- Seq("hashes", "signatures", "winnow"))
       assert(java.nio.file.Files.exists(
         java.nio.file.Paths.get(s"$idx/$p/_SUCCESS")), s"missing $idx/$p")

@@ -3,6 +3,7 @@ package graft.llm
 import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
+import graft.io.Artifacts
 
 /** Artifact-trust gate for [[VocabStore]] (ADVICE r10, medium): a
   * fresh-JVM encode must only consume an artifact whose sidecar
@@ -85,9 +86,11 @@ class VocabStoreSpec extends AnyFunSuite {
   test("distinct corpora never fingerprint alike (path + manifest in the hash)") {
     val d1 = freshCorpus("c1")
     val d2 = freshCorpus("c2")
-    assert(VocabStore.fingerprint(d1, "bpe") != VocabStore.fingerprint(d2, "bpe"),
+    assert(Artifacts.fingerprint(d1, Artifacts.vocab("bpe").kind) !=
+      Artifacts.fingerprint(d2, Artifacts.vocab("bpe").kind),
       "fingerprints must incorporate the full canonical path + manifest")
-    assert(VocabStore.fingerprint(d1, "bpe") != VocabStore.fingerprint(d1, "unigram"),
+    assert(Artifacts.fingerprint(d1, Artifacts.vocab("bpe").kind) !=
+      Artifacts.fingerprint(d1, Artifacts.vocab("unigram").kind),
       "fingerprints must incorporate the trainer family")
   }
 

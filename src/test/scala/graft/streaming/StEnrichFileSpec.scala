@@ -19,7 +19,7 @@ class StEnrichFileSpec extends AnyFunSuite {
     val rows = out.count()
     assert(rows > 0)
     val sink = new java.io.File(
-      s"/dev/shm/graft_stream/pid_${ProcessHandle.current().pid()}/stenrichfile/out")
+      s"${StreamQueries.pidRoot}/stenrichfile/out")
     assert(sink.isDirectory, s"sink dir missing: $sink")
     val batches = Option(sink.listFiles()).getOrElse(Array.empty)
       .filter(f => f.isDirectory && f.getName.startsWith("batch_id="))

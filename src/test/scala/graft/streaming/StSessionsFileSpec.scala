@@ -19,7 +19,7 @@ class StSessionsFileSpec extends AnyFunSuite {
     val rows = out.collect()
     assert(rows.nonEmpty)
     val sink = new java.io.File(
-      s"/dev/shm/graft_stream/pid_${ProcessHandle.current().pid()}/stsessionsfile/out")
+      s"${StreamQueries.pidRoot}/stsessionsfile/out")
     assert(sink.isDirectory, s"sink dir missing: $sink")
     val batches = Option(sink.listFiles()).getOrElse(Array.empty)
       .filter(f => f.isDirectory && f.getName.startsWith("batch_id="))
@@ -51,15 +51,14 @@ class StSessionsFileSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val s = spark
     StreamQueries.queries("st_sessions_file")(s, "/root/testdata/sf0.001").collect()
-    val pid = ProcessHandle.current().pid()
-    val stage = new java.io.File(s"/dev/shm/graft_stream/pid_$pid")
+    val stage = new java.io.File(StreamQueries.pidRoot)
       .listFiles().filter(_.getName.startsWith("stsessionsfile_src_"))
       .filterNot(_.getName.contains("sentinel")).head
     val parts = stage.listFiles().filter(_.getName.endsWith(".parquet"))
       .sortBy(_.getName).take(2).map(_.getAbsolutePath)
     val boundaryUs = s.read.parquet(parts: _*)
       .agg(max(unix_timestamp(col("ts")))).head.getLong(0) * 1000000L
-    val carried = s.read.parquet(s"/dev/shm/graft_stream/pid_$pid/stsessionsfile/out")
+    val carried = s.read.parquet(s"${StreamQueries.pidRoot}/stsessionsfile/out")
       .filter(col("user_id") >= 0L && col("end_us") <= boundaryUs &&
         col("batch_id").cast("long") >= 1L)
       .count()

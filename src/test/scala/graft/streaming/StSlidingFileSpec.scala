@@ -18,7 +18,7 @@ class StSlidingFileSpec extends AnyFunSuite {
     val rows = out.collect()
     assert(rows.nonEmpty)
     val sink = new java.io.File(
-      s"/dev/shm/graft_stream/pid_${ProcessHandle.current().pid()}/stslidingfile/out")
+      s"${StreamQueries.pidRoot}/stslidingfile/out")
     assert(sink.isDirectory, s"sink dir missing: $sink")
     val batches = Option(sink.listFiles()).getOrElse(Array.empty)
       .filter(f => f.isDirectory && f.getName.startsWith("batch_id="))
@@ -48,8 +48,7 @@ class StSlidingFileSpec extends AnyFunSuite {
     val out = StreamQueries.queries("st_sliding_file")(s, "/root/testdata/sf0.001")
       .groupBy("win_start").agg(sum("n").as("n")).collect()
       .map(r => (r.getTimestamp(0), r.getLong(1))).toMap
-    val pid = ProcessHandle.current().pid()
-    val stage = new java.io.File(s"/dev/shm/graft_stream/pid_$pid")
+    val stage = new java.io.File(StreamQueries.pidRoot)
       .listFiles().filter(_.getName.startsWith("stslidingfile_src_"))
       .filterNot(_.getName.contains("sentinel")).head
     val parts = stage.listFiles().filter(_.getName.endsWith(".parquet"))
