@@ -142,7 +142,9 @@ object Artifacts {
   /** This process's scratch directory under `base`, `base/pid_<pid>`.
     * Per-process, so two JVMs never read each other's half-written
     * files. The first call per base deletes the roots that dead
-    * processes left there (on tmpfs a leaked root is leaked memory). */
+    * processes left there (on tmpfs a leaked root is leaked memory)
+    * and registers this process's root for deletion at JVM exit; the
+    * sweep still catches the roots of processes that were killed. */
   def scratch(base: String): String = scratchRoots.computeIfAbsent(base, _ => {
     val self = ProcessHandle.current().pid()
     Option(new java.io.File(base).listFiles()).foreach(_.foreach { f =>
@@ -152,6 +154,8 @@ object Artifacts {
         !ProcessHandle.of(pid.toLong).map[Boolean](_.isAlive).orElse(false)
       if (dead) org.apache.commons.io.FileUtils.deleteQuietly(f)
     })
-    s"$base/pid_$self"
+    val root = s"$base/pid_$self"
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root)))
+    root
   })
 }

@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanBridge
 import graft.io.Sources.table
 
 /** Distributed BPE tokenizer training + encoding — the tokenizer-prep
@@ -176,10 +177,13 @@ object Bpe {
       val msetRow = mergesNext.agg(array_join(
         sort_array(collect_list(concat(col("lsym"), lit(" "), col("rsym")))),
         "\n").as("mset"))
-      ((seqs.crossJoin(broadcast(msetRow))
+      val seqsNext = seqs.crossJoin(broadcast(msetRow))
         .select(col("word"), col("n"),
           graft.functions.ArrayFns.bpeRewrite(col("seq"), col("mset")).as("seq"))
-        .localCheckpoint(), mergesNext), false)
+        .localCheckpoint()
+      // the rewritten sequences are materialized: the round's input is dead
+      PlanBridge.releaseCheckpoint(seqs)
+      ((seqsNext, mergesNext), false)
     }.state
     (merges, seqs)
   }
@@ -251,21 +255,31 @@ object Bpe {
       })
       .getOrElse { retrain; trainedVocab.get(vocabKey(s, d, family)) }
 
-  private def trainDocs(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    val r = train(wordCounts(table(s, d, "documents").select("text")), docRounds, docK)
-    cacheVocab(s, d, "bpe", r._2)
-    r
+  /** Trains, caches the vocabulary of the final sequences and releases
+    * them; returns the merges. */
+  private def trainDocs(s: SparkSession, d: String): DataFrame =
+    trainCached(s, d, "bpe", train(wordCounts(table(s, d, "documents").select("text")),
+      docRounds, docK))
+
+  private def trainCached(s: SparkSession, d: String, family: String,
+      trained: (DataFrame, DataFrame)): DataFrame = {
+    try cacheVocab(s, d, family, trained._2)
+    finally PlanBridge.releaseCheckpoint(trained._2)
+    trained._1
   }
 
   /** bpe_train: the learned merge table over the documents corpus —
     * run to pair exhaustion (the tail rounds select nothing). */
-  private val bpeTrain: Q = (s, d) => trainOut(trainDocs(s, d)._1)
+  private val bpeTrain: Q = (s, d) => trainOut(trainDocs(s, d))
 
   /** bpe_train_rich: the ≥1000-merge regime — 6 rounds × 192 merges
     * over the md5-derived corpus, per-round cost still vocab-resident. */
-  private val bpeTrainRich: Q = (s, d) =>
-    trainOut(train(richWords(table(s, d, "events")), richRounds, richK,
-      label = "bpe_train_rich")._1)
+  private val bpeTrainRich: Q = (s, d) => {
+    val (merges, seqs) = train(richWords(table(s, d, "events")), richRounds, richK,
+      label = "bpe_train_rich")
+    PlanBridge.releaseCheckpoint(seqs)
+    trainOut(merges)
+  }
 
   /** bpe_encode: tokenize the corpus with the trained merges. Word
     * instances join the encoded VOCAB (broadcast — vocabulary-sized),
@@ -302,14 +316,11 @@ object Bpe {
         col("merge_round"), col("lsym"), col("rsym"), col("cnt"), col("score_q"))
       .orderBy("step")
 
-  private def trainWpDocs(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    val r = train(wordCounts(table(s, d, "documents").select("text")),
-      docRounds, docK, likelihood = true, label = "wp_train")
-    cacheVocab(s, d, "wp", r._2)
-    r
-  }
+  private def trainWpDocs(s: SparkSession, d: String): DataFrame =
+    trainCached(s, d, "wp", train(wordCounts(table(s, d, "documents").select("text")),
+      docRounds, docK, likelihood = true, label = "wp_train"))
 
-  private val wpTrain: Q = (s, d) => wpTrainOut(trainWpDocs(s, d)._1)
+  private val wpTrain: Q = (s, d) => wpTrainOut(trainWpDocs(s, d))
 
   private val wpEncode: Q = (s, d) => {
     import s.implicits._

@@ -673,9 +673,11 @@ object Dedup {
     // a reliable `checkpoint` to survive executor loss mid-loop.)
     // LAZY checkpoints (r18 opt round): the checksum action both
     // materializes the round's edges and returns the convergence
-    // scalars, so each round is ONE job instead of two — on the
-    // near-dup pair sets the edge relation is tiny and the round cost
-    // is job latency, not bytes.
+    // scalars, so each round is ONE query execution instead of two (a
+    // few jobs under AQE, one per stage) — on the near-dup pair sets
+    // the edge relation is tiny and the round cost is job latency, not
+    // bytes. The round's input edges are released once its output is
+    // materialized.
     val edges0 = canon(pairs).localCheckpoint(false)
     val sig0 = checksum(edges0)
     // an empty pair set is already a fixed point: it runs no round
@@ -684,6 +686,7 @@ object Dedup {
           case (_, (e, sig)) =>
         val next = smallStar(largeStar(e)).localCheckpoint(false)
         val nextSig = checksum(next)
+        org.apache.spark.sql.graft.PlanBridge.releaseCheckpoint(e)
         ((next, nextSig), nextSig == sig)
       }._1
     // converged edges form stars (member, root): label every endpoint by

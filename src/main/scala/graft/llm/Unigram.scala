@@ -1,10 +1,9 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.PlanBridge
-import graft.functions.Numeric.dround
+import org.apache.spark.unsafe.types.UTF8String
 import graft.io.Sources.table
 
 /** Unigram-LM tokenizer training (SentencePiece-style) beside BPE
@@ -17,29 +16,34 @@ import graft.io.Sources.table
   * corpus is scanned once into (word, n); candidate generation, both
   * EM rounds, and encoding operate on that vocabulary-sized table.
   *
-  * E-step — exact Viterbi segmentation per word, SCAN-LOCAL: the piece
-  * cost table rides as a broadcast map column (the ds_dsir LUT shape)
-  * and the DP runs inside one `aggregate` higher-order function per
-  * word — dp[p] = min over piece lengths j ≤ 4 of dp[p−j] +
-  * cost(word[p−j+1..p]), ties to the smallest j — followed by a second
-  * fold that walks the stored best-length backpointers to emit the
-  * winning pieces. No shuffle, no driver loop, no UDF: the lambda is
-  * Catalyst-compiled expression code.
+  * The vocabulary lives on the DRIVER between rounds: it is bounded
+  * by M multi-char candidates plus the corpus's characters, and the
+  * E-step needs it there anyway.
   *
-  * M-step — one piece-count aggregate over the segmentations (weighted
-  * by word count), then the prune: multi-char pieces that went unused
-  * drop, the bottom quarter of the survivors (count asc, piece asc —
-  * a total order) drops, single-char pieces persist with add-one
-  * smoothing so every word stays segmentable. Costs re-derive as
-  * round(ln(total/cnt)·1e4) — integer 1e-4 nats, the ts_perplexity
-  * quantization, so every dp value and every comparison in the whole
-  * derivation is exact integer arithmetic and the gate hashes.
+  * E-step — exact Viterbi segmentation per word, SCAN-LOCAL: the piece
+  * cost table rides into the native [[graft.functions.ViterbiSegment]]
+  * expression — dp[p] = min over piece lengths j ≤ 4 of dp[p−j] +
+  * cost(word[p−j+1..p]), ties to the smallest j — which then walks the
+  * stored best-length backpointers to emit the winning pieces. No
+  * shuffle, no UDF.
+  *
+  * M-step — the piece counts over the segmentations (weighted by word
+  * count) are one aggregate in the SAME Spark action as the E-step,
+  * collected; the prune then runs in plain Scala: multi-char pieces
+  * that went unused drop, the bottom quarter of the survivors (count
+  * asc, piece asc — a total order) drops, single-char pieces persist
+  * with add-one smoothing so every word stays segmentable. Costs
+  * re-derive as round(ln(total/cnt)·1e4) — integer 1e-4 nats, the
+  * ts_perplexity quantization, computed with Spark's own arithmetic —
+  * so every dp value and every comparison in the whole derivation is
+  * exact integer arithmetic and the gate hashes. Each EM round is
+  * therefore one Spark action.
   *
   * Scale shape (100 TB): the corpus-wide cost is ONE word-count
   * shuffle (map-side combined); each EM round is a scan-local E-step
-  * over the vocab table plus a piece-keyed count aggregate bounded by
-  * vocab × piece-length — corpus bytes never move after the first
-  * scan. Encoding joins word instances against the trained per-word
+  * over the word-count table plus a piece-keyed count aggregate
+  * bounded by the vocabulary — corpus bytes never move after the
+  * first scan. Encoding joins word instances against the trained per-word
   * stats (broadcast, vocabulary-sized) — the bpe_encode shape.
   *
   * The DuckDB oracle replays EVERYTHING from scratch: candidate
@@ -63,18 +67,32 @@ object Unigram {
       .filter(length(col("word")) > 0)
       .groupBy("word").agg(count(lit(1)).as("n"))
 
-  /** Attach integer 1e-4-nat costs: cost_q = round(ln(tot/cnt)·1e4). */
-  private def withCosts(v: DataFrame): DataFrame = {
-    val tot = v.agg(sum(col("cnt")).as("tot"))
-    v.crossJoin(broadcast(tot)).select(col("piece"), col("len"), col("cnt"),
-      dround(log(col("tot").cast("double") / col("cnt").cast("double")) * 10000, 0)
-        .cast("long").as("cost_q"))
+  /** A vocabulary entry: (piece, len, cnt, cost_q). */
+  private type Entry = (String, Long, Long, Long)
+
+  /** Spark's string order (UTF-8 bytes), which `String.compareTo`
+    * (UTF-16 units) differs from above the BMP. */
+  private val pieceOrder: Ordering[String] =
+    (a, b) => UTF8String.fromString(a).binaryCompare(UTF8String.fromString(b))
+  private val byCntDesc: Ordering[Entry] =
+    Ordering.by[Entry, Long](-_._3).orElse(Ordering.by[Entry, String](_._1)(pieceOrder))
+
+  /** Attach integer 1e-4-nat costs: cost_q = round(ln(tot/cnt)·1e4),
+    * with the arithmetic the Spark expression ran — `StrictMath.log`
+    * and the half-up `floor(x + 0.5)` of [[graft.functions.Numeric.dround]]
+    * (x ≥ 0: every cnt is a positive part of tot) — so the costs are
+    * bit-identical to the oracle's. */
+  private def recost(v: Seq[(String, Long, Long)]): Array[Entry] = {
+    val tot = v.map(_._3).sum.toDouble
+    v.map { case (p, l, c) =>
+      (p, l, c, math.floor(StrictMath.log(tot / c.toDouble) * 10000 + 0.5).toLong)
+    }.toArray
   }
 
   /** v0: every substring of length ≤ P, frequency-weighted by word
     * count; all single chars kept (segmentability floor), multi-char
     * candidates capped at the top M by (cnt desc, piece asc). */
-  private def initVocab(words: DataFrame): DataFrame = {
+  private def initVocab(words: DataFrame): Array[Entry] = {
     val sub = words
       .select(col("word"), col("n"), explode(sequence(lit(1), lit(P))).as("j"))
       .filter(length(col("word")) >= col("j"))
@@ -89,24 +107,23 @@ object Unigram {
     // so (cnt desc, piece asc) is a total order and the kept set exact
     val multi = freq.filter(col("len") > 1)
       .orderBy(desc("cnt"), asc("piece")).limit(M.toInt)
-    withCosts(chars.unionByName(multi))
+    recost(chars.unionByName(multi).collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq)
   }
 
-  /** Exact Viterbi over each (word, n) row: the cost table collects to
-    * the driver (vocabulary-bounded — the Bpe.trainedVocab rule) and
-    * the DP runs as the native [[graft.functions.ViterbiSegment]]
-    * kernel, one codegen'd imperative pass per word. A first cut
-    * expressed the DP as an `aggregate` HOF over a broadcast map
-    * column — semantically identical, but HOF lambdas evaluate
-    * INTERPRETED per element (~1 ms per DP cell measured on the rich
-    * corpus: 12+ min for one E-step vs sub-second native) — the
-    * CharEntropy lesson again: sequential kernels belong in the native
-    * expression tier. Returns (word, n, cost, ps, n_pieces); ps order
-    * is backtrace (end→start) — the M-step only needs multiplicity. */
-  private[llm] def viterbi(words: DataFrame, vocab: DataFrame): DataFrame = {
-    val vmap = vocab.select("piece", "cost_q").collect()
-      .map(r => (r.getString(0), r.getLong(1))).toSeq
-    val seg = graft.functions.SegmentFns.viterbiSeg(col("word"), vmap, P, INF)
+  /** Exact Viterbi over each (word, n) row against (piece, cost_q)
+    * driver rows (vocabulary-bounded — the Bpe.trainedVocab rule): the
+    * DP runs as the native [[graft.functions.ViterbiSegment]] kernel,
+    * one codegen'd imperative pass per word. A first cut expressed the
+    * DP as an `aggregate` HOF over a broadcast map column —
+    * semantically identical, but HOF lambdas evaluate INTERPRETED per
+    * element (~1 ms per DP cell measured on the rich corpus: 12+ min
+    * for one E-step vs sub-second native) — the CharEntropy lesson
+    * again: sequential kernels belong in the native expression tier.
+    * Returns (word, n, cost, ps, n_pieces); ps order is backtrace
+    * (end→start) — the M-step only needs multiplicity. */
+  private[llm] def viterbi(words: DataFrame, costs: Seq[(String, Long)]): DataFrame = {
+    val seg = graft.functions.SegmentFns.viterbiSeg(col("word"), costs, P, INF)
     words.select(col("word"), col("n"), seg.as("seg"))
       .select(col("word"), col("n"),
         col("seg").getField("cost").as("cost"),
@@ -114,40 +131,37 @@ object Unigram {
       .withColumn("n_pieces", size(col("ps")).cast("long"))
   }
 
-  /** One EM round: segment, count, prune (unused + bottom quarter of
-    * multi-char by count asc / piece asc), smooth chars +1, re-cost. */
-  private def emRound(words: DataFrame, vocab: DataFrame): DataFrame = {
-    val cnts = viterbi(words, vocab)
+  private def costs(v: Array[Entry]): Seq[(String, Long)] = v.map(e => (e._1, e._4)).toSeq
+
+  /** One EM round. The E-step and the piece counts are ONE Spark
+    * aggregate, collected (at most |vocab| rows); the M-step runs on
+    * the driver: unused multi-char pieces drop, then the bottom
+    * quarter of the rest by (count asc, piece asc), single chars get
+    * +1 smoothing, and every piece is re-costed. */
+  private def emRound(words: DataFrame, v: Array[Entry]): Array[Entry] = {
+    val cnt = viterbi(words, costs(v))
       .select(col("n"), explode(col("ps")).as("piece"))
       .groupBy("piece").agg(sum(col("n")).as("cnt"))
-    val joined = vocab.select("piece", "len").join(cnts, Seq("piece"), "left")
-    val chars = joined.filter(col("len") === 1)
-      .select(col("piece"), col("len"), (coalesce(col("cnt"), lit(0L)) + 1L).as("cnt"))
-    // one partition, bounded by construction: at most M multi-char pieces
-    val multi = joined.filter(col("len") > 1 && col("cnt").isNotNull && col("cnt") > 0)
-      .withColumn("rk", row_number().over(Window.orderBy(asc("cnt"), asc("piece"))))
-      .withColumn("nm", count(lit(1)).over(Window.partitionBy()))
-      .filter(col("rk") > expr("nm div 4"))
-      .select("piece", "len", "cnt")
-    withCosts(chars.unionByName(multi)).localCheckpoint()
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val chars = v.collect { case (p, 1L, _, _) => (p, 1L, cnt.getOrElse(p, 0L) + 1) }
+    val used = v.collect { case (p, l, _, _) if l > 1 && cnt.getOrElse(p, 0L) > 0 => (p, l, cnt(p)) }
+      .sorted(Ordering.by[(String, Long, Long), Long](_._3)
+        .orElse(Ordering.by[(String, Long, Long), String](_._1)(pieceOrder)))
+    recost((chars ++ used.drop(used.length / 4)).toSeq)
   }
 
-  /** The full init + EM loop over an explicit (word, n) relation. Each
-    * round's vocabulary is released once the next one is checkpointed. */
-  private def trainOn(words: DataFrame): DataFrame =
-    graft.Fixpoint.run("tok_unigram_train", initVocab(words).localCheckpoint(), R) {
-      (_, v) =>
-        val next = emRound(words, v)
-        PlanBridge.releaseCheckpoint(v)
-        (next, false)
+  /** The full init + EM loop over an explicit (word, n) relation; the
+    * vocabulary stays on the driver between rounds. */
+  private def trainOn(words: DataFrame): Array[Entry] =
+    graft.Fixpoint.run("tok_unigram_train", initVocab(words), R) {
+      (_, v) => (emRound(words, v), false)
     }.state
 
   /** Trained-vocab cache per corpus dir (the Bpe.trainedVocab rule:
     * plain rows, vocabulary-bounded, survive checkpoint hygiene),
     * backed by a [[VocabStore]] parquet artifact (VERDICT r9 next §2)
     * so a fresh JVM encodes without re-running EM. */
-  private val trained =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[(String, Long, Long, Long)]]()
+  private val trained = new java.util.concurrent.ConcurrentHashMap[String, Array[Entry]]()
 
   private def vocabMeta(s: SparkSession): String = s"topV=${Bpe.vocabTopV(s)}"
   private def vocabKey(s: SparkSession, d: String): String =
@@ -155,62 +169,51 @@ object Unigram {
 
   /** Driver-vocab hard bound (VERDICT r14 next §5, the Bpe.vocabOf
     * rule): the EM vocab is piece-bounded but a heavy-tailed corpus
-    * grows it without limit, so the collect caps at top-V. Unlike the
-    * word-map, Viterbi REQUIRES every single character or a word
-    * becomes unsegmentable (INF cost), so the cap preserves ALL len=1
-    * pieces unconditionally and truncates only multi-char pieces —
-    * (cnt desc, piece asc), deterministic. */
-  private def collectVocab(v: DataFrame): Array[(String, Long, Long, Long)] = {
-    val topV = Bpe.vocabTopV(v.sparkSession)
-    val chars = v.filter(col("len") === 1)
-    val multi = v.filter(col("len") > 1)
-      .orderBy(desc("cnt"), asc("piece"))
-      .limit(math.max(0, topV - chars.count().toInt))
-    chars.unionByName(multi)
-      .select("piece", "len", "cnt", "cost_q").collect()
-      .map(x => (x.getString(0), x.getLong(1), x.getLong(2), x.getLong(3)))
+    * grows it without limit, so the kept vocabulary caps at top-V.
+    * Unlike the word-map, Viterbi REQUIRES every single character or a
+    * word becomes unsegmentable (INF cost), so the cap preserves ALL
+    * len=1 pieces unconditionally and truncates only multi-char pieces
+    * — (cnt desc, piece asc), deterministic. */
+  private def capped(v: Array[Entry], topV: Int): Array[Entry] = {
+    val chars = v.filter(_._2 == 1L)
+    chars ++ v.filter(_._2 > 1L).sorted(byCntDesc).take(math.max(0, topV - chars.length))
   }
 
-  /** Train, refresh both cache tiers, return the vocab relation. */
-  private def retrain(s: SparkSession, d: String): DataFrame = {
+  /** Train, refresh both cache tiers, return the vocabulary. */
+  private def retrain(s: SparkSession, d: String): Array[Entry] = {
     import s.implicits._
     val words = wordCounts(table(s, d, "documents").select("text")).localCheckpoint()
-    val v = trainOn(words)
-    val r = try collectVocab(v) finally {
-      PlanBridge.releaseCheckpoint(words)
-      PlanBridge.releaseCheckpoint(v)
-    }
-    trained.put(vocabKey(s, d), r)
-    val df = r.toSeq.toDF("piece", "len", "cnt", "cost_q")
-    VocabStore.write(d, "unigram", df, vocabMeta(s))
-    df
+    val v = try capped(trainOn(words), Bpe.vocabTopV(s))
+      finally PlanBridge.releaseCheckpoint(words)
+    trained.put(vocabKey(s, d), v)
+    VocabStore.write(d, "unigram", v.toSeq.toDF("piece", "len", "cnt", "cost_q"), vocabMeta(s))
+    v
   }
 
-  private def ensureTrained(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
+  private def ensureTrained(s: SparkSession, d: String): Array[Entry] =
     Option(trained.get(vocabKey(s, d)))
-      .map(_.toSeq.toDF("piece", "len", "cnt", "cost_q"))
       .orElse(VocabStore.read(s, d, "unigram", vocabMeta(s)).map { df =>
-        trained.put(vocabKey(s, d), collectVocab(df))
-        df
+        val v = df.select("piece", "len", "cnt", "cost_q").collect()
+          .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+        trained.put(vocabKey(s, d), v)
+        v
       })
       .getOrElse(retrain(s, d))
-  }
 
+  /** The trained vocabulary ranked by (cnt desc, piece asc) on the
+    * driver, which already holds it; the rows are in rank order. */
   private val tokUnigramTrain: Q = (s, d) => {
+    import s.implicits._
     // train IS the benchmark; always retrain and refresh both tiers
-    retrain(s, d)
-      .select(
-        row_number().over(Window.orderBy(desc("cnt"), asc("piece")))
-          .cast("long").as("rank"),
-        col("piece"), col("len").as("piece_len"), col("cnt"), col("cost_q"))
-      .orderBy("rank")
+    retrain(s, d).sorted(byCntDesc).toSeq.zipWithIndex
+      .map { case ((p, l, c, q), i) => (i + 1L, p, l, c, q) }
+      .toDF("rank", "piece", "piece_len", "cnt", "cost_q")
   }
 
   private val tokUnigramEncode: Q = (s, d) => {
     val v = ensureTrained(s, d)
     val docs = table(s, d, "documents")
-    val enc = viterbi(wordCounts(docs.select("text")), v)
+    val enc = viterbi(wordCounts(docs.select("text")), costs(v))
       .select(col("word"), col("n_pieces"), col("cost"))
     docs.select(col("doc_id"), explode(split(col("text"), " ")).as("word"))
       .filter(length(col("word")) > 0)
@@ -237,7 +240,7 @@ object Unigram {
   private val tokFertility: Q = (s, d) => {
     val v = ensureTrained(s, d)
     val docs = table(s, d, "documents")
-    val enc = viterbi(wordCounts(docs.select("text")), v)
+    val enc = viterbi(wordCounts(docs.select("text")), costs(v))
       .select(col("word"), col("n_pieces"))
     docs.select(col("lang"), explode(split(col("text"), " ")).as("word"))
       .filter(length(col("word")) > 0)

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.io.Artifacts
@@ -175,12 +175,12 @@ object Graph {
   // — a fixed round count is hash-gateable but answers degrade on
   // deeper graphs; production PageRank iterates to a tolerance). The
   // loop runs until max|Δr| < ε (ε = 1000 nano-units = 1e-6 rank mass)
-  // or the 40-round cap, localCheckpointing each round (the BPE lineage
+  // or the 40-round cap, checkpointing each round (the BPE lineage
   // discipline), and emits the stop round as a `rounds` column so the
   // stopping rule itself is under the hash gate. The per-round Δmax
-  // readback is the convergence PREDICATE — a constant-width scalar,
-  // the sanctioned driver-side decision (the dd_spans regime-probe
-  // precedent), never data movement.
+  // readback is the convergence PREDICATE — a constant-width scalar
+  // observed by the checkpoint's own action, the sanctioned driver-side
+  // decision (the dd_spans regime-probe precedent), never data movement.
   //
   // The planted graph differs from pr_pagerank's: that one composes
   // three PERMUTATIONS (31u + c_j mod N), so every in-degree is exactly
@@ -199,47 +199,55 @@ object Graph {
   private val convMaxRounds = 40
 
   private val prPagerankConv: Q = (s, d) => {
-    val nodes = nodeCensus(table(s, d, "documents").select(col("doc_id")))
-    val edges = nodes
+    val parts = s.sessionState.conf.numShufflePartitions
+    def byKey(df: DataFrame, key: String,
+        observe: Option[(Observation, Seq[Column])] = None): DataFrame =
+      org.apache.spark.sql.graft.PlanBridge.partitionedCheckpoint(s, df, key, parts, observe)
+    // Every relation the loop reads is a partitionedCheckpoint keyed by
+    // the column the round joins it on — ranks by doc_id, edges by src —
+    // so the round's only exchange is the contribs aggregate by doc_id.
+    // ranks carries n_nodes (for tele) and, after each round, the
+    // previous rank as pr.
+    val ranks0 = byKey(nodeCensus(table(s, d, "documents").select(col("doc_id")))
+      .select(col("doc_id"), col("n_nodes"), expr(s"$rankUnit div n_nodes").as("r")), "doc_id")
+    // src is doc_id renamed: the edges inherit ranks0's layout, and
+    // their checkpoint runs without a shuffle
+    val edges = byKey(ranks0
       .select(col("doc_id").as("src"),
         explode(array(lit(1L), lit(2L), lit(3L))).as("j"), col("n_nodes"))
       .select(col("src"),
-        pmod(col("src") * col("src") + col("j") * 17 + 7, col("n_nodes")).as("dst"))
-      .persist()
+        pmod(col("src") * col("src") + col("j") * 17 + 7, col("n_nodes")).as("dst")), "src")
     val tele = expr(s"(15 * ($rankUnit div n_nodes)) div 100")
-    // ranks carries n_nodes (for tele) AND, after each round, the
-    // previous rank — so the Δmax convergence scalar reads the
-    // checkpointed frame directly instead of re-joining next⋈ranks.
-    // The checkpoint is LAZY: the Δmax action both materializes it and
-    // returns the convergence scalar, so each round is ONE job — the
-    // r17 shape paid two (eager checkpoint, then a join + count).
-    // Measured and kept: batching convBatch rounds into one lazy plan
-    // was 2× WORSE — each round's frame feeds two consumers and Spark
-    // duplicates the unmaterialized subtree per use (~2^B work), see
-    // OPTIMIZATION_r18.md "what didn't work".
-    val ranks0 = nodes
-      .select(col("doc_id"), col("n_nodes"), expr(s"$rankUnit div n_nodes").as("r"))
-      .localCheckpoint()
+    // One Spark action per round: the checkpoint of the next ranks,
+    // whose execution also fills max|Δr| as an observed metric. Under
+    // AQE that action is two jobs (the contribs shuffle-map stage and
+    // the checkpoint) in one query execution. The shuffle_hash hint
+    // keeps AQE from turning the ranks⋈contribs join into a broadcast,
+    // which would add a job; the joined rows keep ranks' layout, so the
+    // checkpoint's repartition is dropped. Measured and kept: batching
+    // convBatch rounds into one lazy plan was 2× WORSE — each round's
+    // frame feeds two consumers and Spark duplicates the unmaterialized
+    // subtree per use (~2^B work), see OPTIMIZATION_r18.md "what didn't
+    // work".
     val conv = graft.Fixpoint.run("pr_pagerank_conv", ranks0, convMaxRounds) { (_, ranks) =>
       val contribs = ranks
         .join(edges, ranks("doc_id") === edges("src"))
         .select(col("dst").as("doc_id"), expr("r div 3").as("c"))
         .groupBy("doc_id").agg(sum(col("c")).as("contrib"))
-      val next = ranks
-        .join(contribs, Seq("doc_id"), "left")
+      val dmax = Observation("pr_dmax")
+      val next = byKey(ranks
+        .join(contribs.hint("shuffle_hash"), Seq("doc_id"), "left")
         .select(col("doc_id"), col("n_nodes"),
           (tele + expr("(85 * coalesce(contrib, 0)) div 100")).as("r"),
-          col("r").as("pr"))
-        .localCheckpoint(false)
-      val dmax = next
-        .agg(max(abs(col("r") - col("pr"))).as("dmax"))
-        .head.getLong(0)
+          col("r").as("pr")), "doc_id",
+        Some(dmax -> Seq(max(abs(col("r") - col("pr"))).as("dmax"))))
       // next is materialized: the round's input is dead
       org.apache.spark.sql.graft.PlanBridge.releaseCheckpoint(ranks)
-      (next.select(col("doc_id"), col("n_nodes"), col("r")), dmax < convEps)
+      (next.select(col("doc_id"), col("n_nodes"), col("r")),
+        dmax.get("dmax").asInstanceOf[Long] < convEps)
     }
     // the final state is a checkpoint that no longer reads the edges
-    edges.unpersist(blocking = false)
+    org.apache.spark.sql.graft.PlanBridge.releaseCheckpoint(edges)
     conv.state.select(col("doc_id"), col("r").as("rank_q"),
         lit(conv.rounds.toLong).as("rounds"))
       .orderBy("doc_id")
@@ -382,15 +390,20 @@ object Graph {
       val best = lpaRoundBest(adj, labels, bcast)
       // the new label AND the changed flag ride ONE lazily-checkpointed
       // frame: the convergence count materializes the checkpoint and
-      // returns the scalar in a single job — the r17 shape paid an
-      // eager checkpoint job plus a join + count job every round
+      // returns the scalar in one query execution (several jobs under
+      // AQE, one per stage) — the r17 shape paid an eager checkpoint
+      // plus a separate join + count every round
       val next = labels.join(best, Seq("doc_id"), "left")
         .select(col("doc_id"), coalesce(col("nl"), col("doc_id")).as("lbl"),
           (coalesce(col("nl"), col("doc_id")) =!= col("lbl")).as("changed"))
         .localCheckpoint(false)
       val changes = next.filter(col("changed")).count()
+      // next is materialized: the round's input is dead
+      org.apache.spark.sql.graft.PlanBridge.releaseCheckpoint(labels)
       (next.select(col("doc_id"), col("lbl")), changes == 0L)
     }
+    // the final labels no longer read the adjacency
+    org.apache.spark.sql.graft.PlanBridge.releaseCheckpoint(adj)
     conv.state.select(col("doc_id"), col("lbl"), lit(conv.rounds.toLong).as("rounds"))
       .orderBy("doc_id")
   }
@@ -505,8 +518,9 @@ object Graph {
     // LAZY checkpoints throughout (r18 opt round): every checkpointed
     // relation below is materialized by the scalar action that
     // immediately follows it (count / sum fixpoint probes), so each
-    // fixpoint round costs ONE job instead of two — the round cost on
-    // these label relations is job latency, not bytes. `parts` stays
+    // fixpoint round costs ONE query execution instead of two (a few
+    // jobs under AQE, one per stage) — the round cost on these label
+    // relations is job latency, not bytes. `parts` stays
     // EAGER: its consumers run only at the end, and lazy parts would
     // stack un-truncated lineage into the final union's planning.
     val active0 = nodesIn.select(col("doc_id")).localCheckpoint(false)
@@ -701,6 +715,10 @@ object Graph {
   private def bfsLevels(docs: DataFrame, seeds: DataFrame,
       edges: DataFrame): DataFrame = {
     val levels0 = seeds.select(col("doc_id"), lit(0L).as("lvl")).localCheckpoint()
+    // the un-checkpointed union the current levels were checkpointed
+    // from: its checkpoints (the older levels and the last frontier)
+    // die once a round's count has materialized the levels
+    var feeds: DataFrame = null
     val (levels, _) = graft.Fixpoint.converge("gr_bfs", (levels0, levels0), bfsCap) {
         case (i, (levels, frontier)) =>
       val nxt = frontier
@@ -709,9 +727,18 @@ object Graph {
         .join(levels, Seq("doc_id"), "left_anti")
         .select(col("doc_id"), lit(i.toLong).as("lvl"))
         .localCheckpoint(false)
-      if (nxt.count() == 0L) ((levels, frontier), true)
-      // lazy: materialized by the next round's anti-join/count (r18)
-      else ((levels.unionByName(nxt).localCheckpoint(false), nxt), false)
+      // one query execution per round (several jobs under AQE): the
+      // count materializes nxt and the lazily checkpointed levels
+      val found = nxt.count()
+      if (feeds != null) org.apache.spark.sql.graft.PlanBridge.releaseCheckpoint(feeds)
+      if (found == 0L) {
+        org.apache.spark.sql.graft.PlanBridge.releaseCheckpoint(nxt)
+        ((levels, frontier), true)
+      } else {
+        feeds = levels.unionByName(nxt)
+        // lazy: materialized by the next round's anti-join/count (r18)
+        ((feeds.localCheckpoint(false), nxt), false)
+      }
     }
     docs.join(levels, Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("lvl"), lit(-1L)).as("lvl"),
@@ -724,7 +751,9 @@ object Graph {
       .filter(pmod(col("dst"), lit(13L)) =!= 5L)
       .persist()
     val seeds = docs.filter(pmod(col("doc_id"), lit(101L)) === 0L)
-    bfsLevels(docs, seeds, edges).orderBy("doc_id")
+    val levels = bfsLevels(docs, seeds, edges)
+    edges.unpersist(blocking = false)
+    levels.orderBy("doc_id")
   }
 
   // -------------------------------------------------------------------
@@ -846,7 +875,7 @@ object Graph {
     // only a's init participates (the twin defines only a0): each round
     // derives h from the previous a before anything reads h
     val (a, h) = graft.Fixpoint.run("gr_hits", (a0, null: DataFrame), hitsRounds) {
-        case (_, (a, _)) =>
+        case (_, (a, hPrev)) =>
       val hraw = edges.join(a.select(col("doc_id").as("dst"), col("a")), Seq("dst"))
         .groupBy("src").agg(sum(col("a")).as("raw"))
       val h = docs.join(hraw.select(col("src").as("doc_id"), col("raw")), Seq("doc_id"), "left")
@@ -855,11 +884,16 @@ object Graph {
         .localCheckpoint() // constant-size plan per round, the pr loop rule
       val araw = edges.join(h.select(col("doc_id").as("src"), col("h")), Seq("src"))
         .groupBy("dst").agg(sum(col("h")).as("raw"))
-      ((docs.join(araw.select(col("dst").as("doc_id"), col("raw")), Seq("doc_id"), "left")
+      val aNext = docs.join(araw.select(col("dst").as("doc_id"), col("raw")), Seq("doc_id"), "left")
         .crossJoin(broadcast(araw.agg(sum(col("raw")).as("sa"))))
         .select(col("doc_id"), expr(s"coalesce(raw, 0L) * $hitsUnit DIV sa").as("a"))
-        .localCheckpoint(), h), false)
+        .localCheckpoint()
+      // both scores of the round are materialized: the last round's are dead
+      org.apache.spark.sql.graft.PlanBridge.releaseCheckpoint(a)
+      if (hPrev != null) org.apache.spark.sql.graft.PlanBridge.releaseCheckpoint(hPrev)
+      ((aNext, h), false)
     }.state
+    edges.unpersist(blocking = false)
     h.join(a, Seq("doc_id"))
       .select(col("doc_id"), col("h").as("hub"), col("a").as("auth"))
       .orderBy("doc_id")

@@ -35,16 +35,30 @@ object PlanBridge {
     * `UnknownPartitioning` (the adaptive plan's partitioning does not
     * survive `LogicalRDD.fromDataset`'s rewrite) — so every consumer
     * re-exchanged rows that were already exactly where they belong.
-    * The declared partitioning is correct BY CONSTRUCTION:
-    * `repartition(numParts, col)` is a REPARTITION_BY_NUM shuffle,
-    * which AQE never coalesces, so the physical layout is precisely
-    * `HashPartitioning(key, numParts)` over the same attribute the
-    * declaration references. Rows are copied out of the unsafe-row
-    * reuse buffer and persisted eagerly (the localCheckpoint
-    * discipline); [[releaseCheckpoint]] frees them. */
+    *
+    * The rows are `df.repartition(numParts, key).localCheckpoint()`:
+    * ONE eager action (a shuffle-map job and the checkpoint job in one
+    * query execution). `repartition(n, col)` is a REPARTITION_BY_NUM
+    * shuffle, which AQE never coalesces; when `df` already has the
+    * layout — a round that reads an earlier checkpoint of this kind
+    * and keeps its key — `EnsureRequirements` drops the shuffle and
+    * the checkpoint runs exchange-free. Either way the layout is
+    * declared only after the executed plan's output partitioning is
+    * checked to BE `HashPartitioning(key, numParts)` over the same
+    * attribute; anything else throws, so a declared layout can never
+    * make a consumer skip an exchange it needs.
+    *
+    * `observe`, when given, attaches observed metrics (aggregate
+    * columns over `df`'s rows) to that same action: the `Observation`
+    * is filled by the checkpoint's own execution, so a loop reads its
+    * convergence scalar without a second query. The checkpoint is
+    * freed by [[releaseCheckpoint]]. */
   def partitionedCheckpoint(spark: org.apache.spark.sql.SparkSession,
-      df: org.apache.spark.sql.DataFrame, key: String,
-      numParts: Int): org.apache.spark.sql.DataFrame = {
+      df: org.apache.spark.sql.DataFrame, key: String, numParts: Int,
+      observe: Option[(org.apache.spark.sql.Observation, Seq[Column])] = None)
+      : org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, Partitioning,
+      PartitioningCollection}
     val cls = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     // The declared layout must name the very attribute the rows were
     // hashed by: with two output columns matching `key`, a by-name pick
@@ -57,16 +71,31 @@ object PlanBridge {
       s"partitionedCheckpoint: key column '$key' matches ${matches.size} output " +
         "attributes; it must match exactly one")
     val keyAttr = matches.head
-    val rep = df.repartition(numParts, ColumnBridge.column(keyAttr))
-    val qe = rep.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].queryExecution
-    val rdd = qe.toRdd.map(_.copy())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    rdd.count() // eager materialization; also truncates lineage reuse
-    val part = org.apache.spark.sql.catalyst.plans.physical.HashPartitioning(
-      Seq(keyAttr), numParts)
+    val observed = observe.fold(df) { case (obs, m) => df.observe(obs, m.head, m.tail: _*) }
+    val rep = observed.repartition(numParts, ColumnBridge.column(keyAttr))
+      .asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
+    val rdd = rep.localCheckpoint().queryExecution.logical.collectFirst {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
+    }.get
+    val part = HashPartitioning(Seq(keyAttr), numParts)
+    def laidOut(p: Partitioning): Boolean = p match {
+      case h: HashPartitioning => h.semanticEquals(part)
+      case c: PartitioningCollection => c.partitionings.exists(laidOut)
+      case _ => false
+    }
+    val ran = rep.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    if (!laidOut(ran.outputPartitioning) || rdd.getNumPartitions != numParts) {
+      release(rdd)
+      throw new IllegalStateException(
+        s"partitionedCheckpoint: the executed plan is laid out as ${ran.outputPartitioning} " +
+          s"over ${rdd.getNumPartitions} partitions, not $part")
+    }
     org.apache.spark.sql.classic.Dataset.ofRows(cls,
       org.apache.spark.sql.execution.LogicalRDD(
-        qe.analyzed.output, rdd, part, Nil, false, None)(cls, None, None))
+        rep.queryExecution.analyzed.output, rdd, part, Nil, false, None)(cls, None, None))
   }
 
   /** Frees the rows a checkpointed frame stores (`localCheckpoint`,

@@ -1,23 +1,51 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import graft.functions.SegmentKernels
 import org.apache.spark.unsafe.types.UTF8String
 
-/** The two benchmarked loops release their superseded round state:
-  * once a query's result is collected, `pr_pagerank_conv` leaves at
-  * most its final rank checkpoint persisted and `tok_unigram_train`
-  * nothing, and both results still equal plain-Scala twins of their
-  * algorithms. */
+/** The iterative queries release their superseded round state: once a
+  * query's result is collected, `pr_pagerank_conv` leaves at most its
+  * final rank checkpoint persisted and `tok_unigram_train` nothing, and
+  * both results still equal plain-Scala twins of their algorithms; the
+  * other `Fixpoint` loops leave persisted only the RDDs their result
+  * plan reads. */
 class LoopReleaseSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val sf = "/root/testdata/sf0.001"
 
-  /** The query's collected rows and the RDDs it left persisted. */
-  private def run(q: String): (Seq[org.apache.spark.sql.Row], Set[Int]) = {
+  /** The query's result, its collected rows and the RDDs it left persisted. */
+  private def runDf(q: String): (DataFrame, Seq[Row], Set[Int]) = {
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    val rows = SparkEntry.queries(q)(spark, sf).collect().toSeq
-    (rows, (spark.sparkContext.getPersistentRDDs.keySet -- before).toSet)
+    val df = SparkEntry.queries(q)(spark, sf)
+    val rows = df.collect().toSeq
+    (df, rows, (spark.sparkContext.getPersistentRDDs.keySet -- before).toSet)
+  }
+
+  private def run(q: String): (Seq[Row], Set[Int]) = {
+    val (_, rows, left) = runDf(q)
+    (rows, left)
+  }
+
+  /** The RDDs `df`'s plan reads: checkpoints and cached relations. */
+  private def reads(df: DataFrame): Set[Int] =
+    df.queryExecution.withCachedData.collectWithSubqueries {
+      case r: LogicalRDD => r.rdd.id
+      case m: InMemoryRelation => m.cacheBuilder.cachedColumnBuffers.id
+    }.toSet
+
+  for (q <- Seq("gr_bfs", "gr_kcore", "gr_lpa_conv", "gr_hits", "gr_wcc", "bpe_train",
+      "wp_train")) {
+    test(s"$q leaves persisted only what its result reads") {
+      val (df, rows, left) = runDf(q)
+      assert(rows.nonEmpty)
+      val stray = left -- reads(df)
+      assert(stray.isEmpty, s"$q left ${stray.size} of ${left.size} persisted RDDs " +
+        "its result does not read")
+    }
   }
 
   private def docTexts: Seq[(Long, String)] =

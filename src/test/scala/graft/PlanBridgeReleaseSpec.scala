@@ -1,14 +1,10 @@
 package graft
 
-import scala.jdk.CollectionConverters._
-import org.apache.logging.log4j.{Level, LogManager}
-import org.apache.logging.log4j.core.{LogEvent, Logger}
-import org.apache.logging.log4j.core.appender.AbstractAppender
-import org.apache.logging.log4j.core.config.Property
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.graft.PlanBridge
 import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
+import graft.TestSpark.warnsDuring
 
 /** Releasing a local checkpoint frees its blocks without Spark's
   * "was locally checkpointed, its lineage has been truncated" WARN,
@@ -18,21 +14,6 @@ import org.scalatest.funsuite.AnyFunSuite
 class PlanBridgeReleaseSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val truncatedWarn = "was locally checkpointed"
-
-  /** WARN messages logged on any logger while `body` runs. */
-  private def warnsDuring(body: => Unit): Seq[String] = {
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val app = new AbstractAppender("release-spec", null, null, true, Property.EMPTY_ARRAY) {
-      override def append(e: LogEvent): Unit =
-        if (e.getLevel == Level.WARN) seen.add(e.getMessage.getFormattedMessage)
-    }
-    app.start()
-    val root = LogManager.getRootLogger.asInstanceOf[Logger]
-    root.addAppender(app)
-    try body
-    finally { root.removeAppender(app); app.stop() }
-    seen.asScala.toSeq
-  }
 
   /** An eager local checkpoint and the persisted RDD ids it added. */
   private def checkpointed(): (DataFrame, Set[Int]) = {

@@ -17,7 +17,7 @@ class ArtifactsSpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val spark = TestSpark.spark
   private val src = new File("/root/testdata/sf0.001")
   private lazy val corpus: String = {
-    val d = java.nio.file.Files.createTempDirectory("artifacts_corpus").toFile
+    val d = TestSpark.tempDir("artifacts_corpus").toFile
     src.listFiles().foreach(f => FileUtils.copyFile(f, new File(d, f.getName), false))
     d.getPath
   }

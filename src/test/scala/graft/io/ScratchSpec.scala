@@ -18,8 +18,20 @@ class ScratchSpec extends AnyFunSuite {
     assert(root.endsWith(s"/pid_${ProcessHandle.current().pid()}"))
   }
 
+  test("a process's own root is deleted when its JVM exits") {
+    val base = TestSpark.tempDir("scratch_exit").toFile
+    val java = s"${System.getProperty("java.home")}/bin/java"
+    val child = new ProcessBuilder(java, "-Xmx64m", "-cp", System.getProperty("java.class.path"),
+      "graft.io.ScratchChild", base.getPath).redirectErrorStream(true).start()
+    val out = scala.io.Source.fromInputStream(child.getInputStream).mkString.trim
+    assert(child.waitFor() == 0, out)
+    val root = new File(out.linesIterator.toSeq.last)
+    assert(root.getParentFile == base, s"$root is not under $base")
+    assert(!root.exists, s"the exited process's root $root survived")
+  }
+
   test("a dead process's root under a base is swept; other entries stay") {
-    val base = java.nio.file.Files.createTempDirectory("scratch_base").toFile
+    val base = TestSpark.tempDir("scratch_base").toFile
     try {
       // pids never exceed 2^22 on Linux, so this one is never alive
       val dead = new File(base, "pid_999999999")
@@ -31,5 +43,16 @@ class ScratchSpec extends AnyFunSuite {
       assert(!dead.exists, "the dead process's root survived the sweep")
       assert(other.exists, "an entry that is no process root was swept")
     } finally FileUtils.deleteQuietly(base)
+  }
+}
+
+/** Makes its scratch root under `args(0)`, writes a file there, prints
+  * the root and exits. */
+object ScratchChild {
+  def main(args: Array[String]): Unit = {
+    val root = Artifacts.scratch(args(0))
+    assert(new File(root, "state").mkdirs())
+    java.nio.file.Files.writeString(new File(root, "state/part").toPath, "x")
+    println(root)
   }
 }

@@ -1,6 +1,5 @@
 package graft.io
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
@@ -12,7 +11,7 @@ class SourcesSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   test("csv reader binds by header name even when file column order differs") {
-    val dir = Files.createTempDirectory("graft_csv").toFile
+    val dir = TestSpark.tempDir("graft_csv").toFile
     val f = new java.io.File(dir, "players.csv")
     // real-Kaggle-style layout: extra columns, different order than our schema
     val w = new java.io.PrintWriter(f)
@@ -28,7 +27,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("csv reader fails loudly when a schema column is missing from the header") {
-    val dir = Files.createTempDirectory("graft_csv2").toFile
+    val dir = TestSpark.tempDir("graft_csv2").toFile
     val f = new java.io.File(dir, "bad.csv")
     val w = new java.io.PrintWriter(f)
     w.println("foo,bar")
@@ -41,7 +40,7 @@ class SourcesSpec extends AnyFunSuite {
 
   test("week-partitioned tracking scan prunes partitions, not rows") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_trk").toFile.getAbsolutePath
+    val dir = TestSpark.tempDir("graft_trk").toFile.getAbsolutePath
     graft.pipelines.DemoPlays.tracking(spark)
       .withColumn("week", (col("playId") % 2 + 1).cast("int"))
       .write.partitionBy("week").mode("overwrite").parquet(dir)
@@ -59,7 +58,7 @@ class SourcesSpec extends AnyFunSuite {
       graft.pipelines.DemoPlays.players(spark), graft.pipelines.DemoPlays.tackles(spark))
     val (yap, _, _, errs) = graft.pipelines.Yap.sinks(
       graft.pipelines.Yap.run(spark, tr, pl, py, tk))
-    val out = Files.createTempDirectory("graft_sink").toFile.getAbsolutePath
+    val out = TestSpark.tempDir("graft_sink").toFile.getAbsolutePath
     Sinks.writeCsv(yap, s"$out/yap")
     Sinks.writeDeadLetters(errs, s"$out/errors")
     // rerun — the reference's append mode would double the rows here

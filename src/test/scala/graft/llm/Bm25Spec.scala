@@ -13,7 +13,7 @@ class Bm25Spec extends AnyFunSuite {
 
   test("ranking: full match > partial > single term; ties break by doc_id; non-matches absent") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("bm25corpus").toString
+    val dir = TestSpark.tempDir("bm25corpus").toString
     // qid 100 (100 % 100 == 0): query = its 3 lexicographically
     // smallest distinct tokens = apple, banana, cherry
     Seq(

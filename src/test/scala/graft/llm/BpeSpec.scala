@@ -55,7 +55,7 @@ class BpeSpec extends AnyFunSuite {
     // so round 2's top pair must be (ab, ab), and after "abab" collapses
     // to one symbol every later round finds no pair — the merge table
     // must stop growing, not corrupt the vocab.
-    val dir = java.nio.file.Files.createTempDirectory("bpe_tiny").toString
+    val dir = TestSpark.tempDir("bpe_tiny").toString
     import spark.implicits._
     Seq((1L, "abab abab abab", "en", "t", 14L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")

@@ -12,7 +12,7 @@ class FimSpec extends AnyFunSuite {
 
   private def runOn(texts: Seq[(Long, String)]) = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("fim").toString
+    val dir = TestSpark.tempDir("fim").toString
     texts.toDF("doc_id", "text")
       .selectExpr("doc_id", "text", "'en' AS lang", "'t' AS source",
         "CAST(length(text) AS BIGINT) AS n_chars")

@@ -25,7 +25,7 @@ class IncrementalDedupSpec extends AnyFunSuite {
         else toks(id).mkString(" ")
       (id, text, "en", 250L)
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft_incr").toString
+    val dir = TestSpark.tempDir("graft_incr").toString
     rows.toDF("doc_id", "text", "lang", "n_chars").write.mode("overwrite")
       .parquet(s"$dir/documents.parquet")
 

@@ -21,7 +21,7 @@ class LineDedupSpec extends AnyFunSuite {
     val docs = (0L until 120L).map { id =>
       (id, (1 to 25).map(i => s"d${id}_w$i").mkString(" "))
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft_lines").toString
+    val dir = TestSpark.tempDir("graft_lines").toString
     docs.toDF("doc_id", "text").write.mode("overwrite")
       .parquet(s"$dir/documents.parquet")
     val out = Dedup.queries("dd_lines")(spark, dir).collect()

@@ -74,7 +74,7 @@ class LlmOpsSpec extends AnyFunSuite {
     val rows = Seq(
       (1L, vec(100, 0f)), (2L, vec(100, 0.05f))) ++
       (3L to 60L).map(k => (k, vec(k.toInt, 0f)))
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf").toString
+    val dir = TestSpark.tempDir("graft_ivf").toString
     rows.toDF("vec_id", "embedding").write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     val out = Similarity.queries("ann_ivf")(spark, dir).collect()
     assert(out.exists(r => r.getLong(0) == 1L && r.getLong(2) == 2L && r.getDouble(3) > 0.9),
@@ -100,7 +100,7 @@ class LlmOpsSpec extends AnyFunSuite {
       (1L, vec(100, 0f), 0), (2L, vec(100, 0.05f), 0)) ++
       (3L to 30L).map(k => (k, vec(k.toInt, 0f), 1))
     val df = rows.toDF("vec_id", "embedding", "label")
-    val dir = java.nio.file.Files.createTempDirectory("graft_emb").toString
+    val dir = TestSpark.tempDir("graft_emb").toString
     df.write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     val pairs = Similarity.queries("dd_embcos")(spark, dir).collect()
     assert(pairs.exists(r => r.getLong(0) == 1L && r.getLong(1) == 2L),
@@ -124,7 +124,7 @@ class LlmOpsSpec extends AnyFunSuite {
     val rows = Seq(
       (1L, vec(100, 0f)), (2L, vec(100, 0.05f))) ++
       (3L to 60L).map(k => (k, vec(k.toInt, 0f)))
-    val dir = java.nio.file.Files.createTempDirectory("graft_pq").toString
+    val dir = TestSpark.tempDir("graft_pq").toString
     rows.toDF("vec_id", "embedding").write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     val out = Similarity.queries("ann_pq")(spark, dir).collect()
     assert(out.exists(r => r.getLong(0) == 1L && r.getLong(2) == 2L && r.getDouble(3) > 0.9),
@@ -155,7 +155,7 @@ class LlmOpsSpec extends AnyFunSuite {
     val rows = Seq(
       (1L, vec(100, 0f)), (2L, vec(100, 0.05f))) ++
       (3L to 60L).map(k => (k, vec(k.toInt, 0f)))
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq").toString
+    val dir = TestSpark.tempDir("graft_ivfpq").toString
     rows.toDF("vec_id", "embedding").write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     val out = Similarity.queries("ann_ivf_pq")(spark, dir).collect()
     assert(out.exists(r => r.getLong(0) == 1L && r.getLong(2) == 2L && r.getDouble(3) > 0.9),

@@ -62,7 +62,7 @@ class RtbfSpec extends AnyFunSuite {
     import spark.implicits._
     val ids = Dedup.incrCorpus(spark, sf).filter(col("doc_id") % 20 === 5)
       .select("doc_id").as[Long].collect().sorted
-    val root = java.nio.file.Files.createTempDirectory("rtbf-chain").toString
+    val root = TestSpark.tempDir("rtbf-chain").toString
     def nodes(df: org.apache.spark.sql.DataFrame) =
       df.queryExecution.analyzed.collect { case n => n }.size
     var pairs: Option[org.apache.spark.sql.DataFrame] = None

@@ -68,7 +68,7 @@ class SpanDedupSpec extends AnyFunSuite {
     import spark.implicits._
     val ids = 0L until 30L
     val docs = ids.map(id => id -> tokensOf(id)).toMap
-    val dir = java.nio.file.Files.createTempDirectory("graft_spans").toString
+    val dir = TestSpark.tempDir("graft_spans").toString
     ids.map(id => (id, docs(id).mkString(" "))).toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
 
@@ -94,7 +94,7 @@ class SpanDedupSpec extends AnyFunSuite {
     import spark.implicits._
     val ids = 0L until 30L
     val docs = ids.map(id => id -> tokensOf(id)).toMap
-    val dir = java.nio.file.Files.createTempDirectory("graft_scrub").toString
+    val dir = TestSpark.tempDir("graft_scrub").toString
     ids.map(id => (id, docs(id).mkString(" "))).toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
 

@@ -138,7 +138,7 @@ class SubstrDedupSpec extends AnyFunSuite {
 
   test("dd_substr_cov: covered chars exact, twin intervals merge to one island, zero rows kept") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("substr_cov").toString
+    val dir = TestSpark.tempDir("substr_cov").toString
     val texts = Seq(
       1L -> (noise("aa", 40) + shared + noise("zz", 30)),
       2L -> (noise("bb", 25) + shared + noise("yy", 55)),

@@ -14,7 +14,7 @@ class UnigramSpec extends AnyFunSuite {
   private def segment(word: String, vocab: Seq[(String, Long)]): (Long, Seq[String]) = {
     import spark.implicits._
     val df = Seq((word, 1L)).toDF("word", "n")
-    val row = Unigram.viterbi(df, vocab.toDF("piece", "cost_q")).head()
+    val row = Unigram.viterbi(df, vocab).head()
     (row.getAs[Long]("cost"), row.getAs[scala.collection.Seq[String]]("ps").toSeq)
   }
 
@@ -45,6 +45,12 @@ class UnigramSpec extends AnyFunSuite {
     Unigram.queries("tok_unigram_train")(spark, sf)
     val rs = graft.RoundClock.drain().map(r => (r.family, r.round))
     assert(rs == Seq(("tok_unigram_train", 1), ("tok_unigram_train", 2)))
+  }
+
+  test("training ranks on the driver: no unpartitioned-window WARN") {
+    val warns = TestSpark.warnsDuring(
+      Unigram.queries("tok_unigram_train")(spark, sf).collect())
+    assert(!warns.exists(_.contains("No Partition Defined")), warns)
   }
 
   test("trained vocab is structurally sound") {

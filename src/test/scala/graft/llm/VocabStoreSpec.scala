@@ -17,7 +17,7 @@ class VocabStoreSpec extends AnyFunSuite {
   /** Fresh fake corpus dir (one parquet-table-shaped subdir) + fresh
     * artifact root, so suites never share state. */
   private def freshCorpus(tag: String): String = {
-    val d = Files.createTempDirectory(s"vocab_corpus_$tag")
+    val d = TestSpark.tempDir(s"vocab_corpus_$tag")
     val sub = d.resolve("documents.parquet")
     Files.createDirectory(sub)
     Files.writeString(sub.resolve("part-00000.parquet"), s"payload-$tag")

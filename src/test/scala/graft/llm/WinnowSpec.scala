@@ -33,7 +33,7 @@ class WinnowSpec extends AnyFunSuite {
 
   private def runOn(texts: Seq[(Long, String)]) = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("winnow").toString
+    val dir = TestSpark.tempDir("winnow").toString
     texts.toDF("doc_id", "text")
       .selectExpr("doc_id", "text", "'en' AS lang", "'t' AS source",
         "CAST(length(text) AS BIGINT) AS n_chars")
@@ -72,7 +72,7 @@ class WinnowSpec extends AnyFunSuite {
 
   test("dd_winnow: near-copies pair, disjoint docs don't, boilerplate cap bites") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("ddwinnow").toString
+    val dir = TestSpark.tempDir("ddwinnow").toString
     // 0/1: near-copies (shared body, different prefix); 2: disjoint;
     // 100..139: forty docs sharing one verbatim sentence -> its
     // fingerprints have df 40 > 32 and may create no pairs

@@ -59,7 +59,7 @@ class LayoutSpec extends AnyFunSuite {
 
   test("z-ordered copy is a permutation of the source, localized in BOTH dims") {
     val src = graft.io.Sources.table(spark, "/root/testdata/sf0.01", "events")
-    val out = java.nio.file.Files.createTempDirectory("graft_zo").toString +
+    val out = TestSpark.tempDir("graft_zo").toString +
       "/events.parquet"
     Layout.zorderWrite(src, Seq("user_id", "ts"), out, 8)
     val copy = spark.read.parquet(out)
@@ -95,7 +95,7 @@ class LayoutSpec extends AnyFunSuite {
 
   test("3-dim budgeted layout localizes every clustered dimension at once") {
     val src = graft.io.Sources.table(spark, "/root/testdata/sf0.01", "events")
-    val out = java.nio.file.Files.createTempDirectory("graft_zo3").toString +
+    val out = TestSpark.tempDir("graft_zo3").toString +
       "/events.parquet"
     Layout.zorderWriteBudgeted(src,
       Seq("user_id" -> 16, "ts" -> 24, "event_id" -> 16), out, 8)

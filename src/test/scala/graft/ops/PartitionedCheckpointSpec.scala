@@ -41,4 +41,38 @@ class PartitionedCheckpointSpec extends AnyFunSuite {
     val plan = agg.queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), s"declared layout was not trusted:\n$plan")
   }
+
+  /** (row's partition, the partition `HashPartitioning(k, n)` puts it in). */
+  private def placement(df: org.apache.spark.sql.DataFrame, n: Int): Seq[(Int, Int)] =
+    df.select(spark_partition_id(), pmod(hash(col("k")), lit(n))).collect()
+      .map(r => (r.getInt(0), r.getInt(1))).toSeq
+
+  test("a frame not laid out by the key is repartitioned so every row sits where the layout says") {
+    // range rows are laid out by id, not by k
+    val df = spark.range(0, 500, 1, 3).select((col("id") % 37).as("k"), col("id").as("v"))
+    val cp = PlanBridge.partitionedCheckpoint(spark, df, "k", 5)
+    assert(cp.rdd.getNumPartitions == 5)
+    val at = placement(cp, 5)
+    assert(at.size == 500 && at.forall { case (p, h) => p == h }, at.filter(x => x._1 != x._2))
+    assert(cp.select(sum("v")).head.getLong(0) == (0 until 500).sum)
+    // a frame that already has the layout keeps it (the repartition is
+    // dropped, not the rows)
+    val again = PlanBridge.partitionedCheckpoint(spark,
+      cp.select(col("k"), (col("v") * 2).as("v")), "k", 5)
+    val at2 = placement(again, 5)
+    assert(at2.size == 500 && at2.forall { case (p, h) => p == h })
+    assert(again.select(sum("v")).head.getLong(0) == 2L * (0 until 500).sum)
+  }
+
+  test("observed metrics are filled by the checkpoint's own action and equal a separate aggregate") {
+    val df = spark.range(0, 300, 1, 3)
+      .select((col("id") % 11).as("k"), (col("id") * 7 % 101).as("v"))
+    val obs = org.apache.spark.sql.Observation("spec_obs")
+    val cp = PlanBridge.partitionedCheckpoint(spark, df, "k", 4,
+      Some(obs -> Seq(max(col("v")).as("mx"), sum(col("v")).as("sm"))))
+    val m = obs.get
+    val want = df.agg(max(col("v")), sum(col("v"))).head
+    assert(m("mx") == want.getLong(0) && m("sm") == want.getLong(1), m)
+    assert(cp.count() == 300)
+  }
 }

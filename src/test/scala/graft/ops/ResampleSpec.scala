@@ -28,7 +28,7 @@ class ResampleSpec extends AnyFunSuite {
     // user 1: 3-hour span (well in cap). user 2: two events ~2 years
     // apart — without the guard its grid alone would be ~17.5k rows;
     // with it the user routes to the dead-letter relation.
-    val dir = java.nio.file.Files.createTempDirectory("w14_guard").toString
+    val dir = TestSpark.tempDir("w14_guard").toString
     import spark.implicits._
     val h = 3600L * 1000000L
     def ts(us: Long) = new java.sql.Timestamp(us / 1000L)

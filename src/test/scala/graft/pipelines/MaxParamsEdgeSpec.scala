@@ -69,7 +69,7 @@ class MaxParamsEdgeSpec extends AnyFunSuite {
   /** Writes the fixture as parquet and returns its directory. */
   private def write(): Path = {
     import spark.implicits._
-    val d = Files.createTempDirectory("maxparams_edge")
+    val d = TestSpark.tempDir("maxparams_edge")
     val nulled = col("playId") === 2 && col("nflId") === 203 && col("frameId") === 27
     Seq("x", "s", "a").foldLeft(fixture.toDF())((df, c) =>
       df.withColumn(c, when(nulled, lit(null)).otherwise(col(c))))

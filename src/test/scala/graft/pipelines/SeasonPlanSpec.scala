@@ -24,7 +24,7 @@ class SeasonPlanSpec extends AnyFunSuite {
   private val n = 30
 
   private lazy val dir = {
-    val d = java.nio.file.Files.createTempDirectory("season_plan").toString
+    val d = TestSpark.tempDir("season_plan").toString
     SyntheticSeason.tracking(spark, n).write.parquet(s"$d/tracking")
     SyntheticSeason.plays(spark, n).write.parquet(s"$d/plays")
     SyntheticSeason.players(spark).write.parquet(s"$d/players")

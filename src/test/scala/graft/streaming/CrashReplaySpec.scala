@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -28,7 +27,7 @@ class CrashReplaySpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   private def freshRoot(tag: String): String =
-    Files.createTempDirectory(s"crash_replay_$tag").toString
+    TestSpark.tempDir(s"crash_replay_$tag").toString
 
   // deterministic doc batches: "aa" dups within batch 0; "bb" spans the
   // batches (seen-index dup); "zz" is a corpus dup; "cc"/"dd" unique

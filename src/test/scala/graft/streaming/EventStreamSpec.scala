@@ -284,7 +284,7 @@ class EventStreamSpec extends AnyFunSuite {
   test("idempotent sink: replaying a batch id overwrites, never duplicates") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("idemsink").toString
+    val root = TestSpark.tempDir("idemsink").toString
     val out = s"$root/out"
     val source = MemoryStream[EventStream.Ev]
     val q = EventStream.idempotentParquetSink(source.toDF(), out, s"$root/ckpt")

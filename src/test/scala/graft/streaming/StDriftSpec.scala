@@ -51,7 +51,7 @@ class StDriftSpec extends AnyFunSuite {
     def run(kill: Boolean): Seq[(Long, Long, Long, Long, Long)] = {
       val monitor = new StreamQueries.DriftMonitor(nRef, 10)
       val source = MemoryStream[StreamQueries.DriftRow]
-      val ckpt = java.nio.file.Files.createTempDirectory("drift_restart").toString
+      val ckpt = TestSpark.tempDir("drift_restart").toString
       def start() = source.toDS().writeStream
         .foreachBatch((ds: org.apache.spark.sql.Dataset[StreamQueries.DriftRow],
             id: Long) => monitor.process(ds.toDF(), id))

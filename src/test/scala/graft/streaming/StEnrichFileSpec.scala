@@ -39,7 +39,7 @@ class StEnrichFileSpec extends AnyFunSuite {
     // duplicating committed batches
     import org.apache.spark.sql.functions._
     val s = spark
-    val root = java.nio.file.Files.createTempDirectory("fs_restart").toString
+    val root = TestSpark.tempDir("fs_restart").toString
     val src = s"$root/landing"; val out = s"$root/out"; val ck = s"$root/ckpt"
     val ev = graft.io.Sources.table(s, "/root/testdata/sf0.001", "events")
       .select(col("user_id"), col("ts"), col("event_type"), col("value"))

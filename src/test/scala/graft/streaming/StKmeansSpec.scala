@@ -108,7 +108,7 @@ class StKmeansSpec extends AnyFunSuite {
     def run(kill: Boolean): Seq[(Long, Long, Long, Long, Long)] = {
       val model = new StreamQueries.MiniBatchKmeans
       val source = MemoryStream[(Long, Seq[Long])]
-      val ckpt = java.nio.file.Files.createTempDirectory("km_restart").toString
+      val ckpt = TestSpark.tempDir("km_restart").toString
       def start() = source.toDS().toDF("vec_id", "eq").writeStream
         .foreachBatch((df: org.apache.spark.sql.DataFrame, id: Long) =>
           model.process(df, id))

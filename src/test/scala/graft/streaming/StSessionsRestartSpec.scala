@@ -17,7 +17,7 @@ class StSessionsRestartSpec extends AnyFunSuite {
   test("kill with open sessions + backlog while down + restart = batch sessions") {
     val s = spark
     import s.implicits._
-    val root = java.nio.file.Files.createTempDirectory("sess_restart").toString
+    val root = TestSpark.tempDir("sess_restart").toString
     val stage = s"$root/stage"; val src = s"$root/landing"
     val out = s"$root/out"; val ck = s"$root/ckpt"
     val ev = graft.io.Sources.table(s, sf, "events")

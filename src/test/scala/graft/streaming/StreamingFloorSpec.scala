@@ -30,7 +30,7 @@ class StreamingFloorSpec extends AnyFunSuite {
     // tmpfs checkpoint — the gates' own config (the per-batch offset-log
     // and state-snapshot fsyncs on the virtual disk are host noise, not
     // the machinery under budget)
-    val ckpt = java.nio.file.Files.createTempDirectory(
+    val ckpt = TestSpark.tempDir(
       java.nio.file.Paths.get("/dev/shm"), "floor_ckpt").toString
     val source = MemoryStream[EventStream.Ev]
     val q = EventStream.sessionize(s,

@@ -10,7 +10,7 @@ class RunCurateSpec extends AnyFunSuite {
 
   test("RunCurate writes the full artifact set from one invocation") {
     val sf = "/root/testdata/sf0.001"
-    val out = java.nio.file.Files.createTempDirectory("runcurate").toString
+    val out = TestSpark.tempDir("runcurate").toString
     val counts = RunCurate.run(spark, sf, out)
     assert(counts.keySet == Set("curated", "splits", "quality", "langid",
       "stats", "dedup_exact", "neardup_pairs", "boilerplate", "dup_spans",
@@ -31,7 +31,7 @@ class RunCurateSpec extends AnyFunSuite {
   test("RunCurate works on a corpus-only directory (documented layout)") {
     // the documented input is just documents/embeddings — dq_checks
     // (which reads the star schema) must be skipped, not crash the run
-    val root = java.nio.file.Files.createTempDirectory("runcurate2").toString
+    val root = TestSpark.tempDir("runcurate2").toString
     val in = s"$root/in"; val out = s"$root/out"
     spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .write.parquet(s"$in/documents.parquet")

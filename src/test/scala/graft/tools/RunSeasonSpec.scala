@@ -13,7 +13,7 @@ class RunSeasonSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   private lazy val root =
-    java.nio.file.Files.createTempDirectory("runseason").toFile.getAbsolutePath
+    TestSpark.tempDir("runseason").toFile.getAbsolutePath
 
   /** Writes the Kaggle-layout input CSVs once and returns their directory. */
   private lazy val in: String = {
