@@ -35,6 +35,26 @@ object IoQueries {
   private val s1Csv = s"$fx/s1_plays.csv"
   private val s2Dir = s"$fx/s2_tracking"
 
+  /** The round-trip queries' converted copies of a corpus, one per
+    * corpus at `<fx>/<kind>/<key>`, trusted by the [[Artifacts]] rule. */
+  private[io] val S6Jsonl = Artifacts.Kind("s6_jsonl", 1, Seq(""))
+  private[io] val S7Orc = Artifacts.Kind("s7_orc", 1, Seq(""))
+  private[io] val S8Evolve = Artifacts.Kind("s8_evolve", 1, Seq("gen1", "gen2"))
+
+  private[io] def fixtureDir(kind: Artifacts.Kind, d: String): String =
+    s"$fx/${kind.name}/${Artifacts.key(d)}"
+
+  /** `kind`'s copy of corpus `d`, written first by `write` (given the
+    * directory) unless the one there is trusted; returns its directory. */
+  private def converted(s: SparkSession, kind: Artifacts.Kind, d: String)(
+      write: String => Unit): String = {
+    val dir = fixtureDir(kind, d)
+    val fp = Artifacts.fingerprint(d, kind)
+    if (Artifacts.sealedNote(s, dir, kind.parts, fp).isEmpty)
+      Artifacts.rebuild(s, dir, fp) { write(dir); "" }
+    dir
+  }
+
   /** Kaggle plays.csv layout (public dataset column order): our schema's
     * 11 columns are scattered through it, out of order, with unrelated
     * columns interposed. 24 deterministic rows; "NA" nulls in both a
@@ -114,18 +134,17 @@ object IoQueries {
 
   /** S6 — JSONL round trip: newline-delimited JSON is the LLM-corpus
     * interchange format, so the engine must both export and re-ingest
-    * it losslessly. The table is written as JSONL (per-dataset dir,
-    * path-hash keyed — the fs_compact collision rule) and read back
+    * it losslessly. The table is written as JSONL (once per corpus,
+    * [[S6Jsonl]]) and read back
     * under the EXPLICIT engine schema (no inference; schema drift must
     * fail loudly, the S1 discipline). The oracle reads the ORIGINAL
     * parquet — the gate is round-trip identity, which tests the JSON
     * writer and reader together value-for-value. */
   private val s6Jsonl: Q = (s, d) => {
     import org.apache.spark.sql.types._
-    val dir = s"$fx/s6_jsonl/${new java.io.File(d).getName}-${math.abs(d.hashCode.toLong)}"
-    if (!Files.exists(Paths.get(s"$dir/_SUCCESS")))
-      graft.io.Sources.table(s, d, "documents")
-        .write.mode("overwrite").json(dir)
+    val dir = converted(s, S6Jsonl, d) { dir =>
+      graft.io.Sources.table(s, d, "documents").write.json(dir)
+    }
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType),
       StructField("lang", StringType), StructField("source", StringType),
@@ -137,17 +156,17 @@ object IoQueries {
 
   /** S7 — ORC round trip: the OTHER columnar warehouse format Spark
     * ships natively (Hive-lineage clusters still hand ORC over).
-    * Same shape as S6: write once (path-hash keyed), read back under
+    * Same shape as S6: write once per corpus ([[S7Orc]]), read back under
     * the explicit engine schema, gate = round-trip identity vs the
     * original parquet — writer and reader tested together
     * value-for-value, including timestamp fidelity (events carries
     * sub-second timestamps, the type ORC historically mangled). */
   private val s7Orc: Q = (s, d) => {
-    val dir = s"$fx/s7_orc/${new java.io.File(d).getName}-${math.abs(d.hashCode.toLong)}"
-    if (!Files.exists(Paths.get(s"$dir/_SUCCESS")))
+    val dir = converted(s, S7Orc, d) { dir =>
       graft.io.Sources.table(s, d, "events")
         .select("event_id", "user_id", "ts", "event_type", "value")
-        .write.mode("overwrite").orc(dir)
+        .write.orc(dir)
+    }
     s.read.orc(dir)
       .select("event_id", "user_id", "ts", "event_type", "value")
       .orderBy("event_id")
@@ -164,16 +183,15 @@ object IoQueries {
     * it never reads the fixture dirs, so the parquet round trip itself
     * is inside the gate too. */
   private val s8Evolve: Q = (s, d) => {
-    val dir = s"$fx/s8_evolve/${new java.io.File(d).getName}-${math.abs(d.hashCode.toLong)}"
     val docs = graft.io.Sources.table(s, d, "documents")
-    if (!Files.exists(Paths.get(s"$dir/gen2/_SUCCESS"))) {
+    val dir = converted(s, S8Evolve, d) { dir =>
       docs.filter(col("doc_id") % 2 === 0)
         .select(col("doc_id"), col("lang"), col("n_chars"))
-        .write.mode("overwrite").parquet(s"$dir/gen1")
+        .write.parquet(s"$dir/gen1")
       docs.filter(col("doc_id") % 2 === 1)
         .select(col("doc_id"), col("lang"), col("n_chars"),
           expr("CAST(floor(n_chars / 100) AS BIGINT)").as("len_band"))
-        .write.mode("overwrite").parquet(s"$dir/gen2")
+        .write.parquet(s"$dir/gen2")
     }
     s.read.option("mergeSchema", "true").parquet(s"$dir/gen1", s"$dir/gen2")
       .groupBy("lang")

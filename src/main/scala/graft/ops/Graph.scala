@@ -522,13 +522,15 @@ object Graph {
     // jobs under AQE, one per stage) — the round cost on these label
     // relations is job latency, not bytes. `parts` stays
     // EAGER: its consumers run only at the end, and lazy parts would
-    // stack un-truncated lineage into the final union's planning.
+    // stack un-truncated lineage into the final union's planning. Each
+    // round releases the state its scalar action has superseded.
+    import org.apache.spark.sql.graft.PlanBridge.releaseCheckpoint
     val active0 = nodesIn.select(col("doc_id")).localCheckpoint(false)
     val edges = edgesIn.select(col("src"), col("dst")).persist()
     val parts = scala.collection.mutable.ListBuffer.empty[DataFrame]
     // outer rounds peel the SCCs found in the still-unassigned subgraph
     // until none is left
-    graft.Fixpoint.converge("gr_scc", active0, sccOuterCap) { (_, active) =>
+    val emptied = graft.Fixpoint.converge("gr_scc", active0, sccOuterCap) { (_, active) =>
       val edgesA = edges
         .join(active.select(col("doc_id").as("src")), Seq("src"), "left_semi")
         .join(active.select(col("doc_id").as("dst")), Seq("dst"), "left_semi")
@@ -547,6 +549,7 @@ object Graph {
             greatest(col("color"), coalesce(col("mc"), col("color"))).as("color"))
           .localCheckpoint(false)
         val nextSum = next.agg(sum(col("color"))).head.getLong(0)
+        releaseCheckpoint(colors)
         ((next, nextSum), nextSum == curSum)
       }
       // backward pass within color classes: same-color edges only
@@ -564,6 +567,7 @@ object Graph {
           .select(col("src").as("doc_id"))
         val next = reached.unionByName(newFrom).distinct().localCheckpoint(false)
         val nextN = next.count()
+        releaseCheckpoint(reached)
         ((next, nextN), nextN == curN)
       }
       // extraction: fwd ∩ bwd per pivot; scc_id = min member id
@@ -572,8 +576,12 @@ object Graph {
       parts += members.join(ids, Seq("color"))
         .select(col("doc_id"), col("scc_id")).localCheckpoint()
       val next = active.join(reached, Seq("doc_id"), "left_anti").localCheckpoint(false)
-      (next, next.count() == 0L)
+      val done = next.count() == 0L
+      // parts and next are materialized: the round's other state is dead
+      Seq(edgesA, edgesC, colors, reached, active).foreach(releaseCheckpoint)
+      (next, done)
     }
+    releaseCheckpoint(emptied)
     edges.unpersist()
     parts.reduce(_ unionByName _)
   }
@@ -591,6 +599,8 @@ object Graph {
     val edges = ring.unionByName(bridge)
       .join(docs.select(col("doc_id").as("dst")), Seq("dst"), "left_semi")
     val scc = colorScc(docs, edges)
+    // scc's parts are eager checkpoints: nothing left reads docs
+    docs.unpersist()
     val sizes = scc.groupBy("scc_id").agg(count(lit(1)).as("scc_size"))
     scc.join(sizes, "scc_id")
       .select(col("doc_id"), col("scc_id"), col("scc_size"))

@@ -10,14 +10,14 @@ import org.apache.spark.sql.functions._
   *
   * The same shape as EP1 over ONE scan of tracking: the role-tagged
   * carrier + tackler frames ([[Yap.roleFrames]]), plus one frameless row
-  * per listed tackle, go through one exchange on (gameId, playId) and a
-  * partition-local sort, and a per-play Scala pass ([[ofPlay]], run by
-  * [[Yap.playRuns]]) computes the start boundary (W1), the first
-  * crossing (W3) and the range max (A7) from one play's rows. The
-  * frameless rows make the pass's output exactly one row per listed
-  * tackle, so nothing joins back to tackles; only the broadcast players
-  * dim is joined after it. The DuckDB twin (`k5_max_params`) is the
-  * authority on the semantics.
+  * per listed tackle, are grouped on (gameId, playId) by Spark's grouped
+  * operator (one exchange and sort on the play columns), and a per-play
+  * Scala pass ([[ofPlay]]) computes the start boundary (W1), the first
+  * crossing (W3) and the range max (A7) from one play's rows. Null play
+  * keys form one group, as SQL's GROUP BY does. The frameless rows make
+  * the pass's output exactly one row per listed tackle, so nothing joins
+  * back to tackles; only the broadcast players dim is joined after it.
+  * The DuckDB twin (`k5_max_params`) is the authority on the semantics.
   */
 object MaxParams {
 
@@ -44,8 +44,8 @@ object MaxParams {
       .unionByName(tackles.select("gameId", "playId", "nflId"), allowMissingColumns = true)
       .select("gameId", "playId", "nflId", "frameId", "isCarrier", "x", "y", "s", "a", "event")
       .as[Frame]
-      .repartition(col("gameId"), col("playId"))
-    Yap.playRuns(frames)((p, q) => p.gameId == q.gameId && p.playId == q.playId)(ofPlay(_, rT))
+    frames.groupBy("gameId", "playId").as[(Option[Long], Option[Long]), Frame]
+      .flatMapGroups((_, it) => ofPlay(it.toSeq, rT))
       .join(broadcast(players.select(col("nflId").as("NFL_ID"), col("displayName").as("name"),
         col("position"))), Seq("NFL_ID"), "left")
       .select("game_ID", "play_ID", "NFL_ID", "name", "position", "max_vel", "max_accel")

@@ -1,7 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.{col, concat_ws, lit}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{col, concat_ws, count, lit}
 import graft.io.{Sinks, Sources}
 import graft.pipelines.{MaxParams, Yap}
 
@@ -27,26 +27,31 @@ import graft.pipelines.{MaxParams, Yap}
   */
 object RunSeason {
 
-  /** Session-agnostic body — the smoke test drives this directly. */
+  /** Session-agnostic body — the smoke test drives this directly.
+    * Returns each output's row count, observed by its own write. */
   def run(spark: SparkSession, in: String, out: String, rT: Double): Map[String, Long] = {
     val tracking = Sources.csv(spark, s"$in/tracking_week_*.csv", Sources.trackingSchema)
     val plays = Sources.csv(spark, s"$in/plays.csv", Sources.playsSchema)
     val players = Sources.csv(spark, s"$in/players.csv", Sources.playersSchema)
     val tackles = Sources.csv(spark, s"$in/tackles.csv", Sources.tacklesSchema)
 
+    def write(name: String, df: DataFrame,
+        sink: (DataFrame, String) => Unit = Sinks.writeCsv): (String, Long) = {
+      val rows = Observation()
+      sink(df.observe(rows, count(lit(1)).as("rows")), s"$out/$name")
+      name -> rows.get("rows").asInstanceOf[Long]
+    }
+
     // the kernel runs once: its emits are cached by the first write and
     // feed the other three, and are released before this returns
     val emits = Yap.run(spark, tracking, plays, players, tackles, rT).persist()
-    try {
+    val kernelCounts = try {
       val (yap, mpOpt, paths, errs) = Yap.sinks(emits)
-      Sinks.writeCsv(yap, s"$out/tackler_YAP")
-      Sinks.writeCsv(mpOpt, s"$out/max_params_opt")
-      Sinks.writeCsv(paths, s"$out/optimal_paths")
-      Sinks.writeDeadLetters(errs, s"$out/run_errors")
+      Seq(write("tackler_YAP", yap), write("max_params_opt", mpOpt),
+        write("optimal_paths", paths), write("run_errors", errs, Sinks.writeDeadLetters))
     } finally emits.unpersist()
 
     val mp = MaxParams.run(spark, tracking, plays, players, tackles, rT)
-    Sinks.writeCsv(mp, s"$out/max_params")
 
     // Parse-reject sweep (ADVICE r4): rows whose raw CSV tokens the
     // typed cast silently nulled, written next to the kernel
@@ -63,15 +68,8 @@ object RunSeason {
         .select(lit(p.split('/').last).as("source"),
           concat_ws(",", col("_bad_fields")).as("bad_fields"))
     }.reduce(_ unionByName _)
-    Sinks.writeCsv(rejects, s"$out/parse_rejects")
 
-    Map(
-      "tackler_YAP" -> spark.read.option("header", "true").csv(s"$out/tackler_YAP").count(),
-      "max_params_opt" -> spark.read.option("header", "true").csv(s"$out/max_params_opt").count(),
-      "max_params" -> spark.read.option("header", "true").csv(s"$out/max_params").count(),
-      "optimal_paths" -> spark.read.option("header", "true").csv(s"$out/optimal_paths").count(),
-      "run_errors" -> spark.read.option("header", "true").csv(s"$out/run_errors").count(),
-      "parse_rejects" -> spark.read.option("header", "true").csv(s"$out/parse_rejects").count())
+    (kernelCounts ++ Seq(write("max_params", mp), write("parse_rejects", rejects))).toMap
   }
 
   def main(args: Array[String]): Unit = {

@@ -11,7 +11,7 @@ import graft.pipelines.Yap
   * converging, positions drawn across the bounds ladder. Writes it as
   * parquet (so the pipelines pay real scan cost), then times
   * `MaxParams.run` and `Yap.run` (the LQR kernel); both are one exchange
-  * on the play key and a per-play `mapPartitions` pass.
+  * on the play key and a per-play grouped pass.
   *
   * The reference processes the same workload one play at a time,
   * re-reading all five CSVs per play (optimal_pursuit.py:132-149 inside

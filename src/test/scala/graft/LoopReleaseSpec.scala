@@ -37,8 +37,8 @@ class LoopReleaseSpec extends AnyFunSuite {
       case m: InMemoryRelation => m.cacheBuilder.cachedColumnBuffers.id
     }.toSet
 
-  for (q <- Seq("gr_bfs", "gr_kcore", "gr_lpa_conv", "gr_hits", "gr_wcc", "bpe_train",
-      "wp_train")) {
+  for (q <- Seq("gr_bfs", "gr_kcore", "gr_lpa_conv", "gr_hits", "gr_wcc", "gr_scc",
+      "bpe_train", "wp_train")) {
     test(s"$q leaves persisted only what its result reads") {
       val (df, rows, left) = runDf(q)
       assert(rows.nonEmpty)

@@ -9,10 +9,11 @@ import graft.TestSpark
 import graft.llm.{Dedup, Similarity, VocabStore}
 import graft.ops.Materialized
 
-/** Every build-once artifact kind is served while its corpus is
-  * untouched and rebuilt when the corpus at the same path is
-  * regenerated or the seal is missing, over a private copy of sf0.001
-  * (deleted afterwards, with the artifacts built for it). */
+/** Every build-once artifact kind, and every converted copy the
+  * round-trip queries (`s6_jsonl`, `s7_orc`, `s8_evolve`) read, is
+  * served while its corpus is untouched and rebuilt when the corpus at
+  * the same path is regenerated or the seal is missing, over a private
+  * copy of sf0.001 (deleted afterwards, with the artifacts built for it). */
 class ArtifactsSpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val spark = TestSpark.spark
   private val src = new File("/root/testdata/sf0.001")
@@ -31,20 +32,34 @@ class ArtifactsSpec extends AnyFunSuite with BeforeAndAfterAll {
     VocabStore.path(d, "unigram")
   }
 
-  private case class Case(store: Artifacts.Store, table: String,
-      ensure: (SparkSession, String) => String)
+  /** One kind under test: `ensure` returns its artifact's path for a
+    * corpus, building it first unless trusted; `path` names it unbuilt. */
+  private case class Case(kind: Artifacts.Kind, table: String,
+      ensure: (SparkSession, String) => String, path: String => String)
+  private def stored(store: Artifacts.Store, table: String,
+      ensure: (SparkSession, String) => String) =
+    Case(store.kind, table, ensure, Artifacts.path(store, _))
+  /** A round-trip query's copy, converted when the query is built. */
+  private def converted(kind: Artifacts.Kind, table: String) =
+    Case(kind, table, (s, d) => {
+      IoQueries.queries(kind.name)(s, d)
+      IoQueries.fixtureDir(kind, d)
+    }, IoQueries.fixtureDir(kind, _))
   private val cases = Seq(
-    Case(Artifacts.Ivf, "embeddings", Similarity.ensureIvfIndexFor),
-    Case(Artifacts.Pq, "embeddings", Similarity.ensurePqIndexFor),
-    Case(Artifacts.IvfPq, "embeddings", Similarity.ensureIvfPqIndexFor),
-    Case(Artifacts.Nsw, "embeddings", Similarity.ensureNswIndexFor),
-    Case(Artifacts.DedupIndex, "documents", Dedup.ensureDedupIndexFor),
-    Case(Artifacts.Mv, "events", Materialized.ensureMvFor),
-    Case(Artifacts.vocab("unigram"), "documents", ensureVocab))
+    stored(Artifacts.Ivf, "embeddings", Similarity.ensureIvfIndexFor),
+    stored(Artifacts.Pq, "embeddings", Similarity.ensurePqIndexFor),
+    stored(Artifacts.IvfPq, "embeddings", Similarity.ensureIvfPqIndexFor),
+    stored(Artifacts.Nsw, "embeddings", Similarity.ensureNswIndexFor),
+    stored(Artifacts.DedupIndex, "documents", Dedup.ensureDedupIndexFor),
+    stored(Artifacts.Mv, "events", Materialized.ensureMvFor),
+    stored(Artifacts.vocab("unigram"), "documents", ensureVocab),
+    converted(IoQueries.S6Jsonl, "documents"),
+    converted(IoQueries.S7Orc, "events"),
+    converted(IoQueries.S8Evolve, "documents"))
 
   private val old = 1000000000000L // 2001-09-09, before any build here
   private def marker(c: Case, p: String) =
-    new File(new File(p, c.store.kind.parts.head), "_SUCCESS")
+    new File(new File(p, c.kind.parts.head), "_SUCCESS")
   private def sidecar(p: String) = new File(p, "_GRAFT_FINGERPRINT")
   /** Back-dates the seal and the first part's marker; a rebuild
     * rewrites both, so a stamp that survives an ensure proves reuse. */
@@ -58,7 +73,7 @@ class ArtifactsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   cases.foreach { c =>
-    val name = c.store.kind.name
+    val name = c.kind.name
     test(s"$name: an untouched corpus is served, not rebuilt") {
       val p = c.ensure(spark, corpus)
       stamp(c, p)
@@ -100,7 +115,7 @@ class ArtifactsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   override def afterAll(): Unit = {
-    cases.foreach(c => FileUtils.deleteQuietly(new File(Artifacts.path(c.store, corpus))))
+    cases.foreach(c => FileUtils.deleteQuietly(new File(c.path(corpus))))
     FileUtils.deleteQuietly(new File(corpus))
     super.afterAll()
   }

@@ -14,11 +14,12 @@ import graft.TestSpark
 /** The season ops read tracking ONCE: carrier and tackler frames come
   * from one role-tagged join, not from one tracking subtree per role or
   * per self-join. Both ops then exchange those frames once, on the play
-  * key, with no lambda-keyed grouping, and run one per-play pass behind
-  * one partition-local sort (`Yap.playRuns`): `MaxParams.run` has no
-  * window. Asserted on the executed (AQE-final) plan over parquet
-  * inputs, so every read of tracking is a file scan that can be
-  * counted. */
+  * key, and run one per-play pass in Spark's grouped operator keyed on
+  * the play columns: one `MapGroupsExec` grouping on its child's
+  * `gameId`/`playId`, behind one sort, with no lambda-keyed grouping
+  * (`AppendColumnsExec`); `MaxParams.run` has no window. Asserted on the
+  * executed (AQE-final) plan over parquet inputs, so every read of
+  * tracking is a file scan that can be counted. */
 class SeasonPlanSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val n = 30
@@ -55,13 +56,31 @@ class SeasonPlanSpec extends AnyFunSuite {
     case _ => false
   }
 
+  /** No lambda-keyed grouping, and exactly one grouped pass: keyed on
+    * the `gameId`/`playId` of its child's output, above the play-keyed
+    * exchange. */
+  private def assertOnePlayGroup(all: Seq[SparkPlan], plan: SparkPlan): Unit = {
+    assert(!all.exists(_.isInstanceOf[AppendColumnsExec]),
+      s"lambda-keyed grouping (AppendColumns) is back in the plan:\n$plan")
+    val groups = all.collect { case m: MapGroupsExec => m }
+    assert(groups.size == 1, s"expected exactly one MapGroups, got ${groups.size}:\n$plan")
+    val g = groups.head
+    val playCols = Seq("gameId", "playId").map(n => g.child.output.find(_.name == n))
+    assert(playCols.forall(_.isDefined) &&
+      g.groupingAttributes.map(_.exprId) == playCols.flatten.map(_.exprId),
+      s"MapGroups groups on ${g.groupingAttributes}, not its child's (gameId, playId):\n$plan")
+    assert(nodes(g).exists {
+      case e: ShuffleExchangeLike => playKeyed(e)
+      case _ => false
+    }, s"the MapGroups is not above the (gameId, playId) exchange:\n$plan")
+  }
+
   test("Yap.run scans tracking once and exchanges it once, on (gameId, playId)") {
     val ds = Yap.run(spark, read("tracking"), read("plays"), read("players"), read("tackles"))
     val (all, scans, shuffles) = shape(ds.toDF())
     val plan = ds.queryExecution.executedPlan
     assert(scans == 1, s"expected one tracking scan, got $scans:\n$plan")
-    assert(!all.exists(p => p.isInstanceOf[AppendColumnsExec] || p.isInstanceOf[MapGroupsExec]),
-      s"lambda-keyed grouping (AppendColumns/MapGroups) is back in the plan:\n$plan")
+    assertOnePlayGroup(all, plan)
     assert(shuffles.size == 1 && playKeyed(shuffles.head),
       s"expected exactly one Exchange on (gameId, playId) above the tracking scan, " +
         s"got ${shuffles.map(_.outputPartitioning)}:\n$plan")
@@ -75,6 +94,7 @@ class SeasonPlanSpec extends AnyFunSuite {
     assert(shuffles.size == 1 && playKeyed(shuffles.head),
       s"expected exactly one Exchange on (gameId, playId) above the tracking scan, " +
         s"got ${shuffles.map(_.outputPartitioning)}:\n$plan")
+    assertOnePlayGroup(all, plan)
     assert(!all.exists(_.isInstanceOf[WindowExec]), s"a Window is back in the plan:\n$plan")
     val sorts = all.collect { case s: SortExec => s }
     assert(sorts.size == 1 && nodes(sorts.head).exists(_.isInstanceOf[ShuffleExchangeLike]),
