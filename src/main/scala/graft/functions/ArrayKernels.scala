@@ -179,8 +179,8 @@ object ArrayKernels {
   }
 
   /** Per-thread memo of the parsed BPE merge set, keyed by CONTENT
-    * equality of the newline-joined merge string (the same broadcast
-    * value rides every row of a round's rewrite, but the per-row
+    * equality of the newline-joined merge string (the same literal
+    * rides every row of a round's rewrite, but the per-row
     * UTF8String is a fresh view over the shared bytes, so identity
     * would miss; a ~10 KB memcmp per row is cheap and exact). */
   private val bpeSetCache =

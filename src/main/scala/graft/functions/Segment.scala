@@ -147,7 +147,7 @@ case class NormalizeText(child: Expression) extends UnaryExpression {
 }
 
 /** `viterbi_segment(word)` against a driver-held piece→cost table
-  * (vocabulary-bounded by construction — the Bpe.trainedVocab rule).
+  * (vocabulary-bounded by construction — the [[graft.llm.VocabStore]] rule).
   * Emits struct(cost BIGINT, ps array<string>). Codegen'd via a
   * reference object, the TokensInSetCount pattern. */
 case class ViterbiSegment(child: Expression, pieces: Seq[(String, Long)],

@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.PlanBridge
@@ -45,13 +45,16 @@ import graft.io.Sources.table
   * Scale shape: the ONLY corpus-wide operation is the initial word
   * count (one shuffle on word, map-side combined). Each round's pair
   * count and ranking shuffle keys bounded by the VOCABULARY
-  * (words × word length), never corpus bytes; the rewrite is map-only;
-  * the merge table rides as a broadcast (a BPE vocab is bounded by
-  * construction). Encoding joins corpus word instances against the
-  * trained vocab — broadcast — and aggregates one integer per doc.
-  * localCheckpoint per round (the dd_cluster CC-loop idiom) truncates
-  * the otherwise round-nested lineage; without it plan stringification
-  * alone dominates (measured in the round-6 string-replace version).
+  * (words × word length), never corpus bytes; the rewrite is map-only.
+  * The merge table lives on the DRIVER: it is bounded by K × rounds,
+  * each round's top K arrive by one collect anyway, and the table
+  * reaches Spark only as a local relation (the freshness anti-join) and
+  * a literal (the rewrite) — so a round is two executions, the ranking
+  * collect and the sequences' localCheckpoint (the dd_cluster CC-loop
+  * idiom, which truncates the otherwise round-nested lineage). The
+  * output's `step` is numbered on the driver too. Encoding joins corpus
+  * word instances against the trained vocab — broadcast — and
+  * aggregates one integer per doc.
   *
   * Two corpora are trained: `bpe_train`/`bpe_encode` run the documents
   * table to pair exhaustion (31-word synthetic vocab saturates at
@@ -71,6 +74,13 @@ object Bpe {
   private val docK = 16
   private val richRounds = 6
   private val richK = 192
+
+  /** One learned merge: the batch `round` that selected it, the pair,
+    * its weighted count at selection time and its WordPiece score (0
+    * under the count rule). Within a round, merges keep their rank
+    * order. */
+  private final case class Merge(round: Int, lsym: String, rsym: String,
+      cnt: Long, scoreQ: Long)
 
   /** " a b c " — leading sentinel space + one space after every
     * char, so every symbol is space-delimited on both ends. */
@@ -94,9 +104,8 @@ object Bpe {
       .groupBy("word").agg(count(lit(1)).as("n"))
 
   /** Run the batched merge loop; returns (merges, finalVocab) where
-    * merges is (merge_round, rank, lsym, rsym, cnt, score_q) — cnt is
-    * the pair's weighted count at selection time — and finalVocab is
-    * (word, n, seq) after all rounds.
+    * merges are in (round, rank) order and finalVocab is (word, n, seq)
+    * after all rounds.
     *
     * `likelihood = false` ranks by raw pair count (canonical BPE);
     * `likelihood = true` is the WordPiece selection rule: maximize the
@@ -107,12 +116,14 @@ object Bpe {
     * rewrite scan, the cumulative merge table, and the freshness
     * anti-join are byte-identical across both modes. */
   private def train(words: DataFrame, rounds: Int, k: Int,
-      likelihood: Boolean = false, label: String = "bpe_train"): (DataFrame, DataFrame) = {
+      likelihood: Boolean, label: String): (Vector[Merge], DataFrame) = {
+    val s = words.sparkSession
+    import s.implicits._
     val seqs0 = words
       .select(col("word"), col("n"), charify(col("word")).as("seq"))
       .localCheckpoint()
-    val (seqs, merges) = graft.Fixpoint.run(label, (seqs0, null: DataFrame), rounds) {
-        case (i, (seqs, merges)) =>
+    val (merges, seqs) = graft.Fixpoint.run(label, (Vector.empty[Merge], seqs0), rounds) {
+        case (i, (merges, seqs)) =>
       // Adjacent pairs: posexplode every symbol of the word's sequence
       // and pair it with the next one by a lead() window over the word,
       // which costs a word-keyed exchange + sort per round on top of the
@@ -128,8 +139,8 @@ object Bpe {
       // fresh candidates only: a pair already in the merge table keeps
       // merging via the cumulative rewrite but is never re-selected
       val cand =
-        if (merges == null) pairs
-        else pairs.join(broadcast(merges.select("lsym", "rsym")),
+        if (merges.isEmpty) pairs
+        else pairs.join(broadcast(merges.map(m => (m.lsym, m.rsym)).toDF("lsym", "rsym")),
           Seq("lsym", "rsym"), "left_anti")
       val scored =
         if (!likelihood) cand.withColumn("score_q", lit(0L))
@@ -144,23 +155,13 @@ object Bpe {
       val ordCols =
         if (likelihood) Seq(desc("score_q"), asc("lsym"), asc("rsym"))
         else Seq(desc("cnt"), asc("lsym"), asc("rsym"))
-      // top-k FIRST via orderBy+limit (TakeOrderedAndProject: parallel
-      // per-partition top-k, no single-partition sort of the whole
-      // candidate relation — r19, guide §2.4/§5), THEN rank the k
-      // survivors with the same total order (ties are impossible under
-      // a total order, so the rank is exactly the old global
-      // row_number's). The r18 shape exchanged every candidate pair to
-      // one partition and sorted it per round.
-      val batch = scored
-        .orderBy(ordCols: _*)
-        .limit(k)
-        // one partition, bounded by construction: at most k survivors
-        .withColumn("rank", row_number().over(Window.orderBy(ordCols: _*)))
-        .select(lit(i).cast("long").as("merge_round"),
-          col("rank").cast("long").as("rank"), col("lsym"), col("rsym"),
-          col("cnt"), col("score_q"))
-        .localCheckpoint()
-      val mergesNext = if (merges == null) batch else merges.unionByName(batch)
+      // the round's top k by a parallel per-partition top-k
+      // (TakeOrderedAndProject), collected in order: (lsym, rsym) is the
+      // group key, so the order is total and a row's rank is its position
+      val batch = scored.orderBy(ordCols: _*).limit(k)
+        .select("lsym", "rsym", "cnt", "score_q").collect().toVector
+        .map(r => Merge(i, r.getString(0), r.getString(1), r.getLong(2), r.getLong(3)))
+      val mergesNext = merges ++ batch
       // One left-to-right scan applying the ACCUMULATED merge table —
       // as a MAP-ONLY codegen'd kernel per word (r19; guide §2.4). The
       // r8→r18 relational form (broadcast match join + a 4-window
@@ -171,130 +172,91 @@ object Bpe {
       // projection (identical selection: within a run of consecutive
       // matched positions, merges land at even offsets from the run
       // start — the islands-parity CTEs the oracle still replays). The
-      // merge table rides as ONE newline-joined broadcast string
-      // (vocab-bounded by construction), parsed once per task via a
-      // content-keyed memo.
-      val msetRow = mergesNext.agg(array_join(
-        sort_array(collect_list(concat(col("lsym"), lit(" "), col("rsym")))),
-        "\n").as("mset"))
-      val seqsNext = seqs.crossJoin(broadcast(msetRow))
+      // merge table rides as ONE newline-joined literal, parsed once per
+      // task via a content-keyed memo.
+      val mset = mergesNext.map(m => s"${m.lsym} ${m.rsym}").mkString("\n")
+      val seqsNext = seqs
         .select(col("word"), col("n"),
-          graft.functions.ArrayFns.bpeRewrite(col("seq"), col("mset")).as("seq"))
+          graft.functions.ArrayFns.bpeRewrite(col("seq"), lit(mset)).as("seq"))
         .localCheckpoint()
       // the rewritten sequences are materialized: the round's input is dead
       PlanBridge.releaseCheckpoint(seqs)
-      ((seqsNext, mergesNext), false)
+      ((mergesNext, seqsNext), false)
     }.state
     (merges, seqs)
   }
 
-  private def trainOut(merges: DataFrame): DataFrame =
-    merges.select(
-        row_number().over(Window.orderBy("merge_round", "rank")).cast("long").as("step"),
-        col("merge_round"), col("lsym"), col("rsym"), col("cnt"))
-      .orderBy("step")
+  /** The learned merge table, `step` numbered on the driver in
+    * (round, rank) order; `withScore` keeps WordPiece's score_q. */
+  private def trainOut(s: SparkSession, merges: Vector[Merge], withScore: Boolean): DataFrame = {
+    import s.implicits._
+    val out = merges.zipWithIndex
+      .map { case (m, j) => (j + 1L, m.round.toLong, m.lsym, m.rsym, m.cnt, m.scoreQ) }
+      .toDF("step", "merge_round", "lsym", "rsym", "cnt", "score_q")
+    if (withScore) out else out.drop("score_q")
+  }
 
-  /** Trained-artifact cache (the ann_ivf persisted-index pattern): a
-    * tokenizer is trained once and the vocab REUSED by every encode —
-    * no production system retrains to tokenize. bpe_train always
-    * trains (it IS the training benchmark) and refreshes the cache;
-    * bpe_encode consumes the cached vocab when one exists. The cache
-    * holds the COLLECTED (word, n_syms) rows — vocabulary-bounded by
-    * construction — not DataFrames: checkpointed frames die under the
-    * harness's per-query unpersist hygiene, plain rows don't. The
-    * in-process map is backed by a [[VocabStore]] parquet artifact
-    * (VERDICT r9 next §2) so a FRESH JVM encodes without retraining —
-    * training writes it, [[encVocab]] falls back to it. */
-  private val trainedVocab =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[(String, Long)]]()
-
-  /** Driver-vocab hard bound (VERDICT r14 next §5): the collected
-    * (word, n_syms) table is corpus-vocabulary-sized — flat under
-    * replication (measured, wp_train probe), but a real heavy-tailed
-    * 100 TB corpus has an UNBOUNDED word vocabulary, so the collect
-    * gets an explicit top-V-by-count cap the driver cannot outgrow.
-    * Truncation semantics are deterministic ((count desc, word asc) —
-    * a total TakeOrdered, never a full sort) and DECLARED: encode
-    * inner-joins word instances against the vocab, so an out-of-vocab
-    * word contributes nothing to the token counts — the same rule an
-    * untrained word already followed. The cap rides in the VocabStore
-    * sidecar meta, so an artifact truncated under one cap never serves
-    * a session running another (it reads as absent → retrain). */
-  private[llm] def vocabTopV(s: SparkSession): Int =
-    s.conf.getOption("graft.tokenizer.topV").map(_.toInt).getOrElse(65536)
-  private def vocabMeta(s: SparkSession): String = s"topV=${vocabTopV(s)}"
-  private def vocabKey(s: SparkSession, d: String, family: String): String =
-    s"$d#$family#${vocabMeta(s)}"
-
-  private def vocabOf(seqs: DataFrame): Array[(String, Long)] =
+  /** The encode vocabulary of the final sequences: (word, n_syms) for
+    * the top-V words by (count desc, word asc) — a total TakeOrdered,
+    * capped at [[VocabStore.topV]]. Encode inner-joins word instances
+    * against it, so an out-of-vocab word contributes nothing to the
+    * token counts — the same rule an untrained word already follows. */
+  private def vocabOf(seqs: DataFrame): DataFrame =
     seqs.select(col("word"),
         size(split(trim(col("seq")), " ")).cast("long").as("n_syms"), col("n"))
-      .orderBy(desc("n"), asc("word")).limit(vocabTopV(seqs.sparkSession))
+      .orderBy(desc("n"), asc("word")).limit(VocabStore.topV(seqs.sparkSession))
       .select("word", "n_syms")
-      .collect().map(r => (r.getString(0), r.getLong(1)))
 
-  private def cacheVocab(s: SparkSession, d: String, family: String,
-      seqs: DataFrame): Unit = {
-    import s.implicits._
-    val rows = vocabOf(seqs)
-    trainedVocab.put(vocabKey(s, d, family), rows)
-    VocabStore.write(d, family, rows.toSeq.toDF("word", "n_syms"), vocabMeta(s))
+  /** The documents corpus's trainer family: "bpe" (count rule) or "wp"
+    * (WordPiece likelihood rule) — its [[VocabStore]] family, and its
+    * query names' prefix. */
+  private def family(likelihood: Boolean): String = if (likelihood) "wp" else "bpe"
+
+  /** Trains on the documents corpus, stores the vocabulary of the final
+    * sequences in [[VocabStore]] and releases them; returns the merges
+    * and the stored vocabulary rows. */
+  private def trainDocs(s: SparkSession, d: String,
+      likelihood: Boolean): (Vector[Merge], Array[Row]) = {
+    val (merges, seqs) = train(wordCounts(table(s, d, "documents").select("text")),
+      docRounds, docK, likelihood, s"${family(likelihood)}_train")
+    val vocab = try VocabStore.put(d, family(likelihood), vocabOf(seqs))
+      finally PlanBridge.releaseCheckpoint(seqs)
+    (merges, vocab)
   }
 
-  /** Encode-side vocab lookup: in-process cache → on-disk artifact →
-    * retrain (the last resort a fresh JVM no longer hits when a prior
-    * training job ran). Both tiers key on the active top-V cap. */
-  private[llm] def encVocab(s: SparkSession, d: String, family: String)(
-      retrain: => Unit): Array[(String, Long)] =
-    Option(trainedVocab.get(vocabKey(s, d, family)))
-      .orElse(VocabStore.read(s, d, family, vocabMeta(s)).map { df =>
-        val rows = df.collect().map(r =>
-          (r.getAs[String]("word"), r.getAs[Long]("n_syms")))
-        trainedVocab.put(vocabKey(s, d, family), rows)
-        rows
-      })
-      .getOrElse { retrain; trainedVocab.get(vocabKey(s, d, family)) }
-
-  /** Trains, caches the vocabulary of the final sequences and releases
-    * them; returns the merges. */
-  private def trainDocs(s: SparkSession, d: String): DataFrame =
-    trainCached(s, d, "bpe", train(wordCounts(table(s, d, "documents").select("text")),
-      docRounds, docK))
-
-  private def trainCached(s: SparkSession, d: String, family: String,
-      trained: (DataFrame, DataFrame)): DataFrame = {
-    try cacheVocab(s, d, family, trained._2)
-    finally PlanBridge.releaseCheckpoint(trained._2)
-    trained._1
-  }
-
-  /** bpe_train: the learned merge table over the documents corpus —
-    * run to pair exhaustion (the tail rounds select nothing). */
-  private val bpeTrain: Q = (s, d) => trainOut(trainDocs(s, d))
+  /** bpe_train / wp_train: the learned merge table over the documents
+    * corpus, run to pair exhaustion (the tail rounds select nothing).
+    * Training IS the benchmark, so it always trains and refreshes the
+    * stored vocabulary. */
+  private def trainQuery(likelihood: Boolean): Q = (s, d) =>
+    trainOut(s, trainDocs(s, d, likelihood)._1, withScore = likelihood)
 
   /** bpe_train_rich: the ≥1000-merge regime — 6 rounds × 192 merges
     * over the md5-derived corpus, per-round cost still vocab-resident. */
   private val bpeTrainRich: Q = (s, d) => {
     val (merges, seqs) = train(richWords(table(s, d, "events")), richRounds, richK,
-      label = "bpe_train_rich")
+      likelihood = false, "bpe_train_rich")
     PlanBridge.releaseCheckpoint(seqs)
-    trainOut(merges)
+    trainOut(s, merges, withScore = false)
   }
 
-  /** bpe_encode: tokenize the corpus with the trained merges. Word
-    * instances join the encoded VOCAB (broadcast — vocabulary-sized),
-    * so no per-instance string work happens: per-doc BPE token counts
-    * are one integer aggregation. */
-  private val bpeEncode: Q = (s, d) => {
+  /** bpe_encode / wp_encode: tokenize the corpus with the trained
+    * vocabulary — the stored one when [[VocabStore]] holds it, no
+    * production system retrains to tokenize. Word instances join the
+    * encoded VOCAB (broadcast — vocabulary-sized), so no per-instance
+    * string work happens: per-doc token counts are one integer
+    * aggregation. */
+  private def encodeQuery(likelihood: Boolean): Q = (s, d) => {
     import s.implicits._
-    val docs = table(s, d, "documents")
-    val rows = encVocab(s, d, "bpe")(trainDocs(s, d))
-    val enc = rows.toSeq.toDF("word", "n_syms")
-    docs.select(col("doc_id"), explode(split(col("text"), " ")).as("word"))
+    val f = family(likelihood)
+    val enc = VocabStore.get(s, d, f)(trainDocs(s, d, likelihood)._2)
+      .map(r => (r.getString(0), r.getLong(1))).toSeq.toDF("word", "n_syms")
+    table(s, d, "documents")
+      .select(col("doc_id"), explode(split(col("text"), " ")).as("word"))
       .filter(length(col("word")) > 0)
       .join(broadcast(enc), Seq("word"))
       .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_words"), sum(col("n_syms")).as("n_tokens_bpe"))
+      .agg(count(lit(1)).as("n_words"), sum(col("n_syms")).as(s"n_tokens_$f"))
       .orderBy("doc_id")
   }
 
@@ -307,40 +269,15 @@ object Bpe {
   // which prefers pairs that are surprising given their parts (the
   // score WordPiece maximizes). On this corpus the two vocabularies
   // genuinely diverge from round 1 (different first merges), so the
-  // gate falsifies rule mix-ups. Encode reuses the bpe_encode
-  // broadcast-vocab shape under a separate cache key.
+  // gate falsifies rule mix-ups. Encode is the bpe_encode query under
+  // its own VocabStore family.
   // ---------------------------------------------------------------
-  private def wpTrainOut(merges: DataFrame): DataFrame =
-    merges.select(
-        row_number().over(Window.orderBy("merge_round", "rank")).cast("long").as("step"),
-        col("merge_round"), col("lsym"), col("rsym"), col("cnt"), col("score_q"))
-      .orderBy("step")
-
-  private def trainWpDocs(s: SparkSession, d: String): DataFrame =
-    trainCached(s, d, "wp", train(wordCounts(table(s, d, "documents").select("text")),
-      docRounds, docK, likelihood = true, label = "wp_train"))
-
-  private val wpTrain: Q = (s, d) => wpTrainOut(trainWpDocs(s, d))
-
-  private val wpEncode: Q = (s, d) => {
-    import s.implicits._
-    val docs = table(s, d, "documents")
-    val rows = encVocab(s, d, "wp")(trainWpDocs(s, d))
-    val enc = rows.toSeq.toDF("word", "n_syms")
-    docs.select(col("doc_id"), explode(split(col("text"), " ")).as("word"))
-      .filter(length(col("word")) > 0)
-      .join(broadcast(enc), Seq("word"))
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_words"), sum(col("n_syms")).as("n_tokens_wp"))
-      .orderBy("doc_id")
-  }
-
   val queries: Map[String, Q] = Map(
-    "bpe_train" -> bpeTrain,
+    "bpe_train" -> trainQuery(likelihood = false),
     "bpe_train_rich" -> bpeTrainRich,
-    "bpe_encode" -> bpeEncode,
-    "wp_train" -> wpTrain,
-    "wp_encode" -> wpEncode)
+    "bpe_encode" -> encodeQuery(likelihood = false),
+    "wp_train" -> trainQuery(likelihood = true),
+    "wp_encode" -> encodeQuery(likelihood = true))
 
   // ---------------------------------------------------------------
   // Oracle: every round re-derived from scratch in chained CTEs —

@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.PlanBridge
 import org.apache.spark.unsafe.types.UTF8String
@@ -112,7 +112,7 @@ object Unigram {
   }
 
   /** Exact Viterbi over each (word, n) row against (piece, cost_q)
-    * driver rows (vocabulary-bounded — the Bpe.trainedVocab rule): the
+    * driver rows (vocabulary-bounded — the [[VocabStore]] rule): the
     * DP runs as the native [[graft.functions.ViterbiSegment]] kernel,
     * one codegen'd imperative pass per word. A first cut expressed the
     * DP as an `aggregate` HOF over a broadcast map column —
@@ -157,61 +157,46 @@ object Unigram {
       (_, v) => (emRound(words, v), false)
     }.state
 
-  /** Trained-vocab cache per corpus dir (the Bpe.trainedVocab rule:
-    * plain rows, vocabulary-bounded, survive checkpoint hygiene),
-    * backed by a [[VocabStore]] parquet artifact (VERDICT r9 next §2)
-    * so a fresh JVM encodes without re-running EM. */
-  private val trained = new java.util.concurrent.ConcurrentHashMap[String, Array[Entry]]()
-
-  private def vocabMeta(s: SparkSession): String = s"topV=${Bpe.vocabTopV(s)}"
-  private def vocabKey(s: SparkSession, d: String): String =
-    s"$d#${vocabMeta(s)}"
-
-  /** Driver-vocab hard bound (VERDICT r14 next §5, the Bpe.vocabOf
-    * rule): the EM vocab is piece-bounded but a heavy-tailed corpus
-    * grows it without limit, so the kept vocabulary caps at top-V.
-    * Unlike the word-map, Viterbi REQUIRES every single character or a
-    * word becomes unsegmentable (INF cost), so the cap preserves ALL
-    * len=1 pieces unconditionally and truncates only multi-char pieces
-    * — (cnt desc, piece asc), deterministic. */
+  /** Driver-vocab hard bound (VERDICT r14 next §5, [[VocabStore.topV]]):
+    * the EM vocab is piece-bounded but a heavy-tailed corpus grows it
+    * without limit, so the kept vocabulary caps at top-V. Unlike BPE's
+    * word vocabulary, Viterbi REQUIRES every single character or a word
+    * becomes unsegmentable (INF cost), so the cap preserves ALL len=1
+    * pieces unconditionally and truncates only multi-char pieces —
+    * (cnt desc, piece asc), deterministic. */
   private def capped(v: Array[Entry], topV: Int): Array[Entry] = {
     val chars = v.filter(_._2 == 1L)
     chars ++ v.filter(_._2 > 1L).sorted(byCntDesc).take(math.max(0, topV - chars.length))
   }
 
-  /** Train, refresh both cache tiers, return the vocabulary. */
-  private def retrain(s: SparkSession, d: String): Array[Entry] = {
+  /** Train, store in [[VocabStore]], return the stored rows. */
+  private def train(s: SparkSession, d: String): Array[Row] = {
     import s.implicits._
     val words = wordCounts(table(s, d, "documents").select("text")).localCheckpoint()
-    val v = try capped(trainOn(words), Bpe.vocabTopV(s))
+    val v = try capped(trainOn(words), VocabStore.topV(s))
       finally PlanBridge.releaseCheckpoint(words)
-    trained.put(vocabKey(s, d), v)
-    VocabStore.write(d, "unigram", v.toSeq.toDF("piece", "len", "cnt", "cost_q"), vocabMeta(s))
-    v
+    VocabStore.put(d, "unigram", v.toSeq.toDF("piece", "len", "cnt", "cost_q"))
   }
 
-  private def ensureTrained(s: SparkSession, d: String): Array[Entry] =
-    Option(trained.get(vocabKey(s, d)))
-      .orElse(VocabStore.read(s, d, "unigram", vocabMeta(s)).map { df =>
-        val v = df.select("piece", "len", "cnt", "cost_q").collect()
-          .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-        trained.put(vocabKey(s, d), v)
-        v
-      })
-      .getOrElse(retrain(s, d))
+  private def entries(rows: Array[Row]): Array[Entry] =
+    rows.map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+
+  /** The stored vocabulary, trained first when [[VocabStore]] has none. */
+  private def stored(s: SparkSession, d: String): Array[Entry] =
+    entries(VocabStore.get(s, d, "unigram")(train(s, d)))
 
   /** The trained vocabulary ranked by (cnt desc, piece asc) on the
     * driver, which already holds it; the rows are in rank order. */
   private val tokUnigramTrain: Q = (s, d) => {
     import s.implicits._
-    // train IS the benchmark; always retrain and refresh both tiers
-    retrain(s, d).sorted(byCntDesc).toSeq.zipWithIndex
+    // train IS the benchmark; always retrain and refresh the store
+    entries(train(s, d)).sorted(byCntDesc).toSeq.zipWithIndex
       .map { case ((p, l, c, q), i) => (i + 1L, p, l, c, q) }
       .toDF("rank", "piece", "piece_len", "cnt", "cost_q")
   }
 
   private val tokUnigramEncode: Q = (s, d) => {
-    val v = ensureTrained(s, d)
+    val v = stored(s, d)
     val docs = table(s, d, "documents")
     val enc = viterbi(wordCounts(docs.select("text")), costs(v))
       .select(col("word"), col("n_pieces"), col("cost"))
@@ -238,7 +223,7 @@ object Unigram {
   // side is vocabulary-bounded and broadcast — no corpus-sized shuffle.
   // -------------------------------------------------------------------
   private val tokFertility: Q = (s, d) => {
-    val v = ensureTrained(s, d)
+    val v = stored(s, d)
     val docs = table(s, d, "documents")
     val enc = viterbi(wordCounts(docs.select("text")), costs(v))
       .select(col("word"), col("n_pieces"))

@@ -21,8 +21,6 @@ import org.apache.spark.sql.functions._
   */
 object MaxParams {
 
-  private val startSet = Set("handoff", "pass_outcome_caught", "run", "snap_direct")
-
   /** The columns the pass reads of one role-tagged frame; `isCarrier` is
     * empty on a listed tackle's frameless row. Every field is an Option,
     * ids included: a CSV token `Sources.csv`'s `try_cast` nulled stays
@@ -61,7 +59,7 @@ object MaxParams {
     def firstCarrierFrame(at: String => Boolean) =
       carrier.filter(_.event.exists(at)).flatMap(_.frameId).minOption
     // W1: start boundary, with the ball_snap fallback
-    val start = firstCarrierFrame(startSet).orElse(firstCarrierFrame(_ == "ball_snap"))
+    val start = firstCarrierFrame(Yap.startEvents).orElse(firstCarrierFrame(_ == "ball_snap"))
     // every carrier position at each frame: a duplicated carrier frame
     // keeps all its rows, as the twin's frame-aligned join does
     val carrierAt: Map[Int, Seq[(Double, Double)]] =

@@ -3,12 +3,14 @@ package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The two benchmarked loops run one Spark action per round: every
-  * round of `pr_pagerank_conv` is one query execution of at most two
-  * jobs (the contribs shuffle-map stage and the checkpoint), and every
-  * EM round of `tok_unigram_train` at most two jobs (the piece-count
-  * shuffle-map stage and its collect). Jobs are attributed to rounds by
-  * the [[Fixpoint.RoundProperty]] local property they carry. */
+/** The loops' round shapes: every round of `pr_pagerank_conv` is one
+  * query execution of at most two jobs (the contribs shuffle-map stage
+  * and the checkpoint), every EM round of `tok_unigram_train` at most
+  * two jobs (the piece-count shuffle-map stage and its collect), and
+  * every round of `bpe_train` and `wp_train` two query executions (the
+  * top-k collect and the sequences' checkpoint), whose jobs are the
+  * shuffle-map stages AQE runs one job each. Jobs are attributed to
+  * rounds by the [[Fixpoint.RoundProperty]] local property they carry. */
 class LoopJobsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val sf = "/root/testdata/sf0.001"
@@ -53,6 +55,25 @@ class LoopJobsSpec extends AnyFunSuite {
       assert(ex.distinct.size == 1 && ex.head != "none", s"round $r ran executions $ex")
       assert(ex.size <= 2, s"round $r ran ${ex.size} jobs")
     }
+  }
+
+  /** Every round of `query` (the documents corpus runs all 10)
+    * is two query executions of at most `maxJobs` jobs. */
+  private def mergeRounds(query: String, maxJobs: Int): Unit = {
+    val (_, jobs) = roundJobs(query)(SparkEntry.queries(query)(spark, sf).collect())
+    assert(jobs.keySet == (1 to 10).toSet, jobs)
+    jobs.foreach { case (r, ex) =>
+      assert(ex.distinct.size == 2 && !ex.contains("none"), s"round $r ran executions $ex")
+      assert(ex.size <= maxJobs, s"round $r ran ${ex.size} jobs")
+    }
+  }
+
+  test("bpe_train: each round is 2 query executions of at most 5 jobs") {
+    mergeRounds("bpe_train", 5)
+  }
+
+  test("wp_train: each round is 2 query executions of at most 7 jobs") {
+    mergeRounds("wp_train", 7)
   }
 
   test("tok_unigram_train: each EM round runs at most 2 jobs") {

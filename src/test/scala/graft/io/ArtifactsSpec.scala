@@ -23,8 +23,8 @@ class ArtifactsSpec extends AnyFunSuite with BeforeAndAfterAll {
     d.getPath
   }
 
-  /** The vocabulary's caller-side fallback (Unigram.ensureTrained's
-    * shape): read the artifact, write a fresh one when it is absent. */
+  /** The vocabulary's fallback (VocabStore.get's disk tier): read the
+    * artifact, write a fresh one when it is absent. */
   private def ensureVocab(s: SparkSession, d: String): String = {
     import s.implicits._
     if (VocabStore.read(s, d, "unigram").isEmpty)

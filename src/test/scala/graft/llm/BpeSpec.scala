@@ -74,6 +74,13 @@ class BpeSpec extends AnyFunSuite {
     assert(enc.head.getAs[Long]("n_tokens_bpe") == 3L) // one symbol per word
   }
 
+  test("training ranks and numbers on the driver: no unpartitioned-window WARN") {
+    val warns = TestSpark.warnsDuring(
+      Seq("bpe_train", "bpe_train_rich", "wp_train")
+        .foreach(q => Bpe.queries(q)(spark, sf).collect()))
+    assert(!warns.exists(_.contains("No Partition Defined")), warns)
+  }
+
   test("the learned merges are identical under a different partition count") {
     def key(r: org.apache.spark.sql.Row) =
       (r.getAs[Long]("step"), r.getAs[Long]("merge_round"), r.getAs[String]("lsym"),

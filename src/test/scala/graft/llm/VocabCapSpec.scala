@@ -29,23 +29,21 @@ class VocabCapSpec extends AnyFunSuite {
     assert(counts.size > v, s"corpus vocab ${counts.size} must exceed the planted cap $v")
     spark.conf.set("graft.tokenizer.topV", v.toString)
     try {
-      val rows = Bpe.encVocab(spark, sf, "bpe") {
-        Bpe.queries("bpe_train")(spark, sf).write.format("noop").mode("overwrite").save()
-      }
+      Bpe.queries("bpe_train")(spark, sf).write.format("noop").mode("overwrite").save()
+      val rows = VocabStore.get(spark, sf, "bpe")(fail("bpe_train stored no vocabulary"))
       assert(rows.length == v, s"capped vocab has ${rows.length} rows, want $v")
       val expect = counts.toSeq.sortBy { case (w, n) => (-n, w) }.take(v).map(_._1).toSet
-      assert(rows.map(_._1).toSet == expect,
+      assert(rows.map(_.getString(0)).toSet == expect,
         "truncation did not keep the top-V words by (count desc, word asc)")
     } finally spark.conf.unset("graft.tokenizer.topV")
   }
 
   test("default cap leaves the SF vocab untouched (vocab < V)") {
     val counts = wordCounts
-    assert(counts.size < Bpe.vocabTopV(spark))
-    val rows = Bpe.encVocab(spark, sf, "bpe") {
-      Bpe.queries("bpe_train")(spark, sf).write.format("noop").mode("overwrite").save()
-    }
-    assert(rows.map(_._1).toSet == counts.keySet,
+    assert(counts.size < VocabStore.topV(spark))
+    Bpe.queries("bpe_train")(spark, sf).write.format("noop").mode("overwrite").save()
+    val rows = VocabStore.get(spark, sf, "bpe")(fail("bpe_train stored no vocabulary"))
+    assert(rows.map(_.getString(0)).toSet == counts.keySet,
       "default-cap vocab must be the full corpus vocabulary at this SF")
   }
 
@@ -75,7 +73,7 @@ class VocabCapSpec extends AnyFunSuite {
     } finally spark.conf.unset("graft.tokenizer.topV")
     // the on-disk artifact now carries topV=8 meta; a default-cap read
     // must reject it (None -> the caller would retrain)
-    assert(VocabStore.read(spark, sf, "bpe", s"topV=${Bpe.vocabTopV(spark)}").isEmpty,
+    assert(VocabStore.read(spark, sf, "bpe", s"topV=${VocabStore.topV(spark)}").isEmpty,
       "cap-mismatched artifact was trusted")
     assert(VocabStore.read(spark, sf, "bpe", "topV=8").nonEmpty,
       "matching-cap artifact should read back")

@@ -99,10 +99,10 @@ class VocabStoreSpec extends AnyFunSuite {
     VocabStore.write(d, "bpe", vocabDf)
     val sc = Paths.get(s"${VocabStore.path(d, "bpe")}/_GRAFT_FINGERPRINT")
     Files.writeString(sc, "ffffffff" * 4 + "|2")
-    // encVocab: in-process cache (empty — unique dir) → artifact
+    // VocabStore.get: in-process memo (empty — unique dir) → artifact
     // (distrusted) → retrain. The sentinel proves the branch taken.
     val e = intercept[RuntimeException] {
-      Bpe.encVocab(spark, d, "bpe") { throw new RuntimeException("retrained") }
+      VocabStore.get(spark, d, "bpe") { throw new RuntimeException("retrained") }
     }
     assert(e.getMessage === "retrained",
       "poisoned artifact must route the encode to retraining")
